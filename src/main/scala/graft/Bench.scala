@@ -120,8 +120,9 @@ object Bench {
     // in run positions 1-49 (one contiguous early time window; late keys
     // were clean). With passes separated by the full suite length
     // (~1-2 min), a stall shorter than a pass can cover each key at most
-    // once and the min recovers the true cost. Timed action, key set,
-    // rep count and the JSON contract are unchanged.
+    // once and the min recovers the true cost. Timed action, key set
+    // and rep count are unchanged; the JSON line and the full profile
+    // only gained io_util* fields — an additive change.
     val keySeq = selected.toSeq
     val acc = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
       keySeq.map { case (k, _) => k -> Vector.empty[Double] }: _*)

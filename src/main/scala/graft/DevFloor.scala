@@ -46,15 +46,16 @@ object DevFloor {
       Tables(spark, dir, "orders").groupBy("o_orderkey")
         .agg(count(lit(1))).count()
     }
-    // A/B: graft extra optimizer rules off
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Nil
+    // A/B: graft optimizer rules off (Spark's excludedRules switch)
+    val excluded = "spark.sql.optimizer.excludedRules"
+    val graftRules = plans.GraftExtensions.rules.map(_.ruleName)
+    spark.conf.set(excluded, graftRules.mkString(","))
     time("norules_local_count") { one.count() }
     time("norules_parquet_agg") {
       Tables(spark, dir, "orders").groupBy("o_orderstatus")
         .agg(count(lit(1))).count()
     }
-    spark.experimental.extraOptimizations = saved
+    spark.conf.unset(excluded)
     // A/B: AQE off (diagnostic only — not a shippable global config)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     time("noaqe_local_count") { one.count() }
@@ -78,16 +79,15 @@ object DevFloor {
       spark.read.schema(sch).parquet(s"$dir/orders.parquet")
         .groupBy("o_orderstatus").agg(count(lit(1))).count()
     }
-    // per-rule attribution of the extra-optimizations cost
-    val all = spark.experimental.extraOptimizations
-    for (r <- all) {
-      spark.experimental.extraOptimizations = all.filterNot(_ eq r)
-      time(s"minus_${r.ruleName.split("\\.").last}") {
+    // per-rule attribution of the graft rules' cost
+    for (r <- graftRules) {
+      spark.conf.set(excluded, r)
+      time(s"minus_${r.split("\\.").last}") {
         Tables(spark, dir, "orders").groupBy("o_orderstatus")
           .agg(count(lit(1))).count()
       }
     }
-    spark.experimental.extraOptimizations = all
+    spark.conf.unset(excluded)
     time("all_rules_again") {
       Tables(spark, dir, "orders").groupBy("o_orderstatus")
         .agg(count(lit(1))).count()

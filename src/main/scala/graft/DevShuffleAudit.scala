@@ -33,8 +33,8 @@ object DevShuffleAudit {
     val dir = args.head
     val keys = args.tail.toSeq
     val spark = Sessions.localFor("32", dir, "ERROR")
-    // same A-B hook as DevTime: drop named optimizer rules for a control run
-    Sessions.applyRuleOff(spark)
+    // same conf / rule-off A-B hook as DevTime (SPARK_GRAFT_CONF)
+    Sessions.applyEnvConf(spark)
     val write = new AtomicLong(0L)
     val read = new AtomicLong(0L)
     val records = new AtomicLong(0L)

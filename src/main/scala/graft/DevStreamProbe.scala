@@ -14,9 +14,7 @@ object DevStreamProbe {
     val dir = args.head
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.localFor(cpus, dir, "ERROR")
-    for (kvs <- sys.env.get("SPARK_GRAFT_CONF"); kv <- kvs.split(",");
-         Array(k, v) = kv.split("=", 2))
-      spark.conf.set(k, v)
+    Sessions.applyEnvConf(spark)
     val tmpIn = graft.Staging.memoDir("graft_stream_mb", dir) { tmp =>
       Tables(spark, dir, "events").repartition(4)
         .write.mode("overwrite").parquet(tmp)

@@ -8,20 +8,17 @@ package graft
   *
   * Usage: runMain graft.DevTime <dir> <key> [key...]
   *
-  * SPARK_GRAFT_RULE_OFF=Name[,Name...] removes the named rules from
-  * `experimental.extraOptimizations` before timing — the rule-on /
-  * rule-off A-B loop for optimizer-rule evidence runs.
+  * SPARK_GRAFT_CONF="k=v[,k=v...]" sets runtime confs before timing
+  * (a token without `=` fails). The rule-off control run of a rule
+  * A/B excludes one graft rule per run:
+  * `SPARK_GRAFT_CONF=spark.sql.optimizer.excludedRules=graft.plans.RewriteCohortScalar`.
   */
 object DevTime {
   def main(args: Array[String]): Unit = {
     val dir = args.head
     val keys = args.tail.toSeq
     val spark = Sessions.localFor("32", dir, "ERROR")
-    Sessions.applyRuleOff(spark)
-    // generic runtime-conf A/B hook: SPARK_GRAFT_CONF="k=v[,k=v...]"
-    for (kvs <- sys.env.get("SPARK_GRAFT_CONF"); kv <- kvs.split(",");
-         Array(k, v) = kv.split("=", 2))
-      spark.conf.set(k, v)
+    Sessions.applyEnvConf(spark)
     for (k <- keys) {
       val fn = SparkEntry.queries(k)
       val times = (1 to 2).map { _ =>

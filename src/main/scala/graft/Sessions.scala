@@ -8,6 +8,10 @@ import org.apache.spark.sql.SparkSession
   * missing the UTC pin that the events TIMESTAMP_NTZ cast needs — a
   * class of bug this object removes).
   *
+  * Every session is built with [[plans.GraftExtensions]], the same
+  * functions, optimizer rules and strategy a cluster user enables with
+  * `spark.sql.extensions`; `newSession()` children inherit them.
+  *
   * Confs carried by every session:
   *  - `session.timeZone=UTC`: the events reader casts NTZ→Timestamp
   *    (session-tz-sensitive) and all date arithmetic must match the
@@ -27,6 +31,7 @@ object Sessions {
 
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
+      .withExtensions(new plans.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -50,14 +55,10 @@ object Sessions {
       // jobs with many distinct plans want the same.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
 
-  /** Build + log level + graft optimizer rules installed ONCE at
-    * construction, so no query key mutates the shared session mid-run
-    * and every key is validated under the same planner config.
-    */
+  /** [[builder]] + log level. */
   def local(cpus: String, logLevel: String = "WARN"): SparkSession = {
     val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel(logLevel)
-    install(s)
     s
   }
 
@@ -94,45 +95,29 @@ object Sessions {
     else b
   }
 
-  /** The dev probes' shared A-B hook: SPARK_GRAFT_RULE_OFF=Name[,Name]
-    * drops the named rules from `experimental.extraOptimizations` for a
-    * control run (substring match on ruleName). One definition so the
-    * matching semantics cannot drift between probes. */
-  def applyRuleOff(spark: org.apache.spark.sql.SparkSession): Unit =
-    for (names <- sys.env.get("SPARK_GRAFT_RULE_OFF")) {
-      val off = names.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      val ex = spark.experimental
-      ex.extraOptimizations = ex.extraOptimizations
-        .filterNot(r => off.exists(r.ruleName.contains))
-      println(s"RULE_OFF $off -> ${ex.extraOptimizations.map(_.ruleName)}")
-    }
-
   def localFor(cpus: String, sfDir: String,
       logLevel: String = "WARN"): SparkSession = {
     val s = builderFor(cpus, sfDir).getOrCreate()
     s.sparkContext.setLogLevel(logLevel)
-    install(s)
     s
   }
 
-  /** Install the graft extraOptimizations + strategies (idempotent).
-    * These must ride `experimental.extraOptimizations` (the
-    * "User Provided Optimizers" batch at the END of the optimizer):
-    * `injectOptimizerRule`'s slot runs inside the operator-optimization
-    * batch, BEFORE RewritePredicateSubquery has turned EXISTS/NOT EXISTS
-    * into the LeftSemi/LeftAnti joins that [[plans.RewriteExistsOther]]
-    * matches.
-    */
-  def install(spark: SparkSession): Unit = {
-    plans.TopK.installRewrite(spark)
-    plans.RewriteExistsOther.install(spark)
-    plans.MaterializedViews.install(spark)
-    plans.RewriteCohortScalar.install(spark)
-    // SQL UPDATE / MERGE INTO on gvt tables: DataSourceV2Strategy only
-    // refuses these at PHYSICAL planning, so this optimizer-slot
-    // rewrite lowers them onto the Gvt API first (r12)
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.exists(_ eq sources.RewriteGvtDml))
-      ex.extraOptimizations = ex.extraOptimizations :+ sources.RewriteGvtDml
-  }
+  /** `k=v[,k=v...]` pairs of a runtime-conf override string, such as
+    * the dev probes' `SPARK_GRAFT_CONF`; a token without `=` throws
+    * instead of being skipped. */
+  def parseConf(kvs: String): Seq[(String, String)] =
+    kvs.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => (k, v)
+        case _ => throw new IllegalArgumentException(
+          s"bad SPARK_GRAFT_CONF token '$kv': expected key=value")
+      }
+    }
+
+  /** Set each pair of `SPARK_GRAFT_CONF` on `spark` — the dev probes'
+    * conf and rule A/B hook, e.g.
+    * `spark.sql.optimizer.excludedRules=graft.plans.RewriteCohortScalar`. */
+  def applyEnvConf(spark: SparkSession): Unit =
+    for (kvs <- sys.env.get("SPARK_GRAFT_CONF"); (k, v) <- parseConf(kvs))
+      spark.conf.set(k, v)
 }

@@ -45,20 +45,34 @@ object Tables {
     * double-digit share of the whole bench. The memo is keyed by path,
     * not session: a footer schema is a pure function of the file (all
     * graft sessions set the same nanosAsLong flag inference depends
-    * on). Each call still builds a FRESH relation with fresh attribute
-    * ids — only the StructType is reused — so plan shapes, self-join
-    * resolution and results are byte-identical (Round17OptSpec).
+    * on). Each entry carries a local stat of the path — file count,
+    * total bytes, max mtime, no footer read — and a path rewritten in
+    * the same JVM no longer matches it and is inferred again. Each call
+    * still builds a FRESH relation with fresh attribute ids — only the
+    * StructType is reused — so plan shapes, self-join resolution and
+    * results are byte-identical (Round17OptSpec).
     */
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    String, ((Int, Long, Long), org.apache.spark.sql.types.StructType)]()
+
+  /** (files, total bytes, max mtime) of a local file or directory tree. */
+  private def stat(path: String): (Int, Long, Long) = {
+    def files(f: java.io.File): Iterator[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).iterator.flatten.flatMap(files)
+      else Iterator(f).filter(_.isFile)
+    files(new java.io.File(path)).foldLeft((0, 0L, 0L)) {
+      case ((n, b, t), f) => (n + 1, b + f.length, t max f.lastModified)
+    }
+  }
 
   private def readParquet(spark: SparkSession, path: String): DataFrame = {
-    val cached = schemaMemo.get(path)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaMemo.put(path, df.schema)
-      df
+    val now = stat(path)
+    schemaMemo.get(path) match {
+      case (`now`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemaMemo.put(path, (now, df.schema))
+        df
     }
   }
 

@@ -15,7 +15,6 @@ object Verify {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Sessions.install(spark)
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (the driver never sets this): run just the
     // named keys for a fast local oracle loop on new operators.

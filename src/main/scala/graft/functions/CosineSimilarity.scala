@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -17,8 +16,8 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   * formulation (same values, same accumulation order), asserted by
   * CosineExprSpec.
   *
-  * Registered as SQL function `cosine_sim` via the session
-  * FunctionRegistry, so both Column-API and SQL callers reach it.
+  * Injected as SQL function `cosine_sim` by [[graft.plans.GraftExtensions]],
+  * so both Column-API (`expr`) and SQL callers reach it.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -96,30 +95,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  /** Register `cosine_sim(a, b)` in the session's function registry.
-    * Idempotent per session: `createOrReplaceTempFunction` logs a
-    * "replaced a previously registered function" WARN on every
-    * re-registration, and per-key callers were burying the bench
-    * artifact's JSON line under hundreds of them (r11 verdict note). */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "cosine_sim",
-      exprs => CosineSimilarity(exprs(0), exprs(1)))
-}
-
-/** One guard for every graft temp-function registration: register only
-  * if the name is not already bound in THIS session's registry (a new
-  * session — cross-JVM smoke, test isolation — re-registers cleanly). */
-private[functions] object Registration {
-  def once(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-  }
 }
 
 /** Single-pass `cosine_sim(v, v)`: the optimizer target for the

@@ -79,7 +79,6 @@ object Extensions {
     * 32/16 windows so the two keys don't merely alias each other.
     */
   def udtfSlidingWindows(spark: SparkSession, dir: String): DataFrame = {
-    SlidingWindows.register(spark)
     Tables(spark, dir, "documents")
       .withColumn("w", split(col("text"), " "))
       .select(col("doc_id"), expr("sliding_windows(w, 32, 16)"))

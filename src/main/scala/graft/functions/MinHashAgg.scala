@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
@@ -85,11 +84,4 @@ case class MinHashAgg(child: Expression,
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0))
   override def prettyName: String = "minhash_agg"
-}
-
-object MinHashAgg {
-  /** Register `minhash_agg(sh)` on the session (idempotent — see
-    * [[Registration.once]]). */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "minhash_agg", exprs => MinHashAgg(exprs(0)))
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
@@ -72,12 +71,4 @@ case class SlidingWindows(arr: Expression, winSize: Expression,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(arr = newChildren(0), winSize = newChildren(1), step = newChildren(2))
-}
-
-object SlidingWindows {
-  /** Register `sliding_windows(arr, size, step)` on the session
-    * (idempotent — see [[Registration.once]]). */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "sliding_windows",
-      exprs => SlidingWindows(exprs(0), exprs(1), exprs(2)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -115,13 +114,4 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object SortedIntersectCount {
-  /** Register `sorted_intersect_count(a, b)` as a session SQL function
-    * (callers then reach it via `expr(...)`, the cosine_sim pattern;
-    * idempotent — see [[Registration.once]]). */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)))
 }

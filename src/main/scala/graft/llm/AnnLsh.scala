@@ -54,7 +54,6 @@ object AnnLsh {
     val candidates = bk.join(broadcast(probeBucket),
         col("bucket") === col("probe_bucket"))
       .select("vec_id")
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val probe = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("probe"))

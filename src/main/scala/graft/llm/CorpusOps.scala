@@ -79,7 +79,6 @@ object CorpusOps {
     */
   private[llm] def assignToCentroids(e: DataFrame,
       cent: DataFrame): DataFrame = {
-    graft.functions.CosineSimilarity.register(e.sparkSession)
     val wAssign = Window.partitionBy("vec_id")
       .orderBy(col("csim").desc, col("cid"))
     e.crossJoin(broadcast(cent))
@@ -97,7 +96,6 @@ object CorpusOps {
     * step is a deterministic argmax over rounded cosines.
     */
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val cent = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
@@ -181,7 +179,6 @@ object CorpusOps {
       .groupBy("vec_id").agg(round(sum("ips"), 4).as("sim_pq"))
       .orderBy(col("sim_pq").desc, col("vec_id"))
       .limit(50)
-    graft.functions.CosineSimilarity.register(spark)
     val raw = Tables(spark, dir, "embeddings")
     val probe = raw.filter(col("vec_id") === 0)
       .select(col("embedding").as("pvec"))
@@ -245,7 +242,6 @@ object CorpusOps {
     * form — ONE pipeline definition, so the two keys cannot drift). */
   private def ivfPqRetrieve(spark: SparkSession, raw: DataFrame,
       cent: DataFrame): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val assigned = assignToCentroids(raw, cent).select("vec_id", "cid")
     val qv = raw.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -352,7 +348,6 @@ object CorpusOps {
     */
   private[graft] def knnCandidates(
       spark: SparkSession, dir: String, nCent: Int): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val cent = e.filter(col("vec_id") < nCent)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
@@ -371,7 +366,6 @@ object CorpusOps {
     */
   private[graft] def scaledKnnCandidates(
       spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val kf = e.agg(
       greatest(lit(10L), (count(lit(1)) / lit(600)).cast("long")).as("ncent"))

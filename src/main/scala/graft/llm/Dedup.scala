@@ -268,7 +268,6 @@ object Dedup {
     */
   private[llm] def verifyJaccard(cand: DataFrame, sets: DataFrame,
       tau: Double): DataFrame = {
-    graft.functions.SortedIntersectCount.register(cand.sparkSession)
     // sort ONCE per document (doc-count-sized, map-side); every
     // candidate pair then verifies with the codegen'd two-pointer
     // kernel — no per-pair hash set, no materialized intersection
@@ -368,7 +367,6 @@ object Dedup {
     * array columns are unsortable there (r3 gate crash on this key).
     */
   def minhashAggQuery(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.MinHashAgg.register(spark)
     // width before the explode, same as minhashSignatures: a compressed
     // corpus under the scan-split floor is ONE partition and would
     // serialize the explode + partial aggregate into a single task

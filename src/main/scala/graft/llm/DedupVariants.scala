@@ -374,7 +374,6 @@ object DedupVariants {
     * returned. Blocked self-join + left_anti — no global pairwise pass.
     */
   def embedDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val a = e.select(col("label"), col("vec_id").as("id_a"),
       col("embedding").as("emb_a"))
@@ -402,7 +401,6 @@ object DedupVariants {
     * cross-engine.
     */
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val cent = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))

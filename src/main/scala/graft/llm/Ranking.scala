@@ -123,7 +123,6 @@ object Ranking {
     * grid-snapped integer means per (cell, dim).
     */
   def kmeansStep(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val cent = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))

@@ -31,7 +31,6 @@ object Similarity {
 
   /** Top-10 nearest neighbours of the vec_id=0 probe by cosine. */
   def simCosine(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val probe = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("probe"))
@@ -47,7 +46,6 @@ object Similarity {
     * cosine_sim expression.
     */
   def simPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val a = e.select(col("label"), col("vec_id").as("id_a"),
       col("embedding").as("emb_a"))

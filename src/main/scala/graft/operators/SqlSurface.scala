@@ -187,7 +187,6 @@ object SqlSurface {
     */
   def recursiveCte(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val a = e.select(col("label"), col("vec_id").as("id_a"),
       col("embedding").as("emb_a"))

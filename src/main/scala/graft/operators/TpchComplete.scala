@@ -33,11 +33,6 @@ object TpchComplete {
 
   private def q(spark: SparkSession, dir: String, tables: Seq[String],
                 sql: String): DataFrame = {
-    // idempotent, same rule set graft.Sessions installs at construction —
-    // here too so a standalone user of these queries gets the scale-safe
-    // q21 plan (RewriteExistsOther collapses the EXISTS/NOT EXISTS pair
-    // into one aggregation; plan shape asserted in TpchCompleteSpec)
-    graft.plans.RewriteExistsOther.install(spark)
     tables.foreach(SqlSurface.view(spark, dir, _))
     spark.sql(sql)
   }

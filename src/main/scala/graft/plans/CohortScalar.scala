@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, Expression, ScalarSubquery}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan}
@@ -111,14 +110,5 @@ object RewriteCohortScalar extends Rule[LogicalPlan] {
         Aggregate(Nil, Seq(Alias(swapped, al.name)(al.exprId)), agg))
         .asInstanceOf[ScalarSubquery])
     case _ => None
-  }
-
-  /** Ride `experimental.extraOptimizations` with the other graft rules
-    * (idempotent) — the shape exists only after subquery decorrelation
-    * and filter pushdown have settled. */
-  def install(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.contains(this))
-      ex.extraOptimizations = ex.extraOptimizations :+ this
   }
 }

@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Coalesce, CreateNamedStruct, EqualTo, Expression, GetStructField, GreaterThan, GreaterThanOrEqual, Greatest, If, IsNotNull, IsNull, Least, LessThan, LessThanOrEqual, Literal, Not, Or, PredicateHelper, RowOrdering}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Coalesce, CreateNamedStruct, EqualTo, Exists, Expression, GetStructField, GreaterThan, GreaterThanOrEqual, Greatest, If, IsNotNull, IsNull, Least, LessThan, LessThanOrEqual, Literal, Not, Or, PredicateHelper, RowOrdering, SubExprUtils}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{DeclarativeAggregate, Max, Min}
-import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftOuter, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, JoinHint, LogicalPlan, Project, RepartitionByExpression}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -117,21 +116,19 @@ case class Top2Keyed(valueExpr: Expression, keyExpr: Expression,
   * fact table (r7 ×100 measurement: 2.61 GB shuffled, 9.7 GB memory +
   * 2.2 GB disk spill, 2.3× DuckDB at 60 M fact rows).
   *
-  * Matched shapes (post-`RewritePredicateSubquery`, which is why this
-  * rule must ride `experimental.extraOptimizations` — the
-  * `injectOptimizerRule` slot runs in the operator-optimization batch,
-  * BEFORE EXISTS becomes a join):
+  * Matched shape: a `Filter` conjunct `[NOT] EXISTS (sub)` whose
+  * decorrelated join condition is
   *
-  *   Join LeftSemi/LeftAnti, (tk₁ = lk₁ [AND tkᵢ = lkᵢ …])
-  *                           AND NOT (ts = ls)
-  *                           [AND tv <cmp> e]
+  *   (tk₁ = lk₁ [AND tkᵢ = lkᵢ …]) AND NOT (ts = ls) [AND tv <cmp> e]
   *
   * with tk/ts/tv plain attributes of the subquery side, lk/ls/e
   * deterministic expressions over the outer side, and <cmp> one of
   * >, >=, <, <= in either orientation. Everything else — extra
   * conjuncts, OR trees (null-aware anti joins like NOT IN), multiple
-  * inequalities, non-orderable types — DECLINES and leaves the join
-  * untouched.
+  * inequalities, non-orderable types — DECLINES and leaves the
+  * subquery untouched. The rule runs in the Pre-CBO batch
+  * ([[GraftExtensions]]), before `RewritePredicateSubquery` turns
+  * EXISTS into the semi/anti joins it replaces.
   *
   * The rewrite is exact (no functional-dependency assumptions), because
   * per outer row the subquery's truth depends only on per-key extremes:
@@ -301,23 +298,38 @@ object RewriteExistsOther extends Rule[LogicalPlan] with PredicateHelper {
     Project(left.output, Filter(keep, joined))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case j @ Join(left, right, LeftSemi, Some(cond), _) =>
-      classify(cond, left, right)
-        .map(rewrite(left, right, semi = true, _)).getOrElse(j)
-    case j @ Join(left, right, LeftAnti, Some(cond), _) =>
-      classify(cond, left, right)
-        .map(rewrite(left, right, semi = false, _)).getOrElse(j)
+  /** One `Filter` conjunct as an EXISTS (semi) / NOT EXISTS (anti)
+    * over a fully decorrelated subquery: (subquery plan, correlated
+    * predicate, semi?). */
+  private def existsOf(e: Expression): Option[(LogicalPlan, Expression, Boolean)] = {
+    def decorrelated(sub: LogicalPlan, jc: Seq[Expression]) =
+      jc.nonEmpty && !sub.exists(_.expressions.exists(SubExprUtils.containsOuter))
+    e match {
+      case Exists(sub, _, _, jc, _) if decorrelated(sub, jc) =>
+        Some((sub, jc.reduce(And), true))
+      case Not(Exists(sub, _, _, jc, _)) if decorrelated(sub, jc) =>
+        Some((sub, jc.reduce(And), false))
+      case _ => None
+    }
   }
 
-  /** Add to `experimental.extraOptimizations` (idempotent) — see the
-    * class doc for why the `injectOptimizerRule` slot cannot host this
-    * rule. [[graft.Sessions.install]] wires it into every graft entry
-    * point at session construction.
-    */
-  def install(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.contains(this))
-      ex.extraOptimizations = ex.extraOptimizations :+ this
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+    // the split RewritePredicateSubquery makes: the other conjuncts
+    // filter first, each collapsed subquery then wraps the result, and a
+    // declined one stays in a Filter on top for Spark to rewrite later
+    case f @ Filter(cond, child) =>
+      val (subs, others) = splitConjunctivePredicates(cond)
+        .partition(existsOf(_).isDefined)
+      val base = others.reduceOption(And).map(Filter(_, child)).getOrElse(child)
+      val (rewritten, declined) = subs.foldLeft((base, Seq.empty[Expression])) {
+        case ((p, kept), c) =>
+          val (sub, jc, semi) = existsOf(c).get
+          classify(jc, p, sub) match {
+            case Some(shape) => (rewrite(p, sub, semi, shape), kept)
+            case None => (p, kept :+ c)
+          }
+      }
+      if (declined.size == subs.size) f
+      else declined.reduceOption(And).map(Filter(_, rewritten)).getOrElse(rewritten)
   }
 }

@@ -79,15 +79,6 @@ object MaterializedViews {
 
   def clear(): Unit = registry.clear()
 
-  /** Idempotently append [[Rewrite]] to the session's
-    * extraOptimizations (same slot as RewriteExistsOther — the END of
-    * the optimizer, where aggregates are in final logical form). */
-  def install(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.contains(Rewrite))
-      ex.extraOptimizations = ex.extraOptimizations :+ Rewrite
-  }
-
   private def factSuffixOf(plan: LogicalPlan): Option[String] = plan match {
     case l: LogicalRelation => l.relation match {
       case h: HadoopFsRelation =>

@@ -124,8 +124,8 @@ case class TopKPerGroupExec(
   * `row_number()` (rank/dense_rank admit ties — different semantics);
   * the filter is `rn <= k` / `rn < k` / `rn = 1` over an integer
   * literal and references nothing else; and the projection uses only
-  * child columns (the rank value must be dead). Runs in the
-  * user-provided optimizer batch, i.e. AFTER InferWindowGroupLimit has
+  * child columns (the rank value must be dead). Runs in the Pre-CBO
+  * batch ([[GraftExtensions]]), i.e. AFTER InferWindowGroupLimit has
   * possibly planted a WindowGroupLimit under the Window — that node is
   * redundant once the whole Window collapses, so it is skipped.
   */
@@ -189,17 +189,9 @@ object TopKStrategy extends SparkStrategy {
 
 object TopK {
 
-  /** Install [[TopKStrategy]] on the session (idempotent). Also injected
-    * catalog-wide by [[GraftExtensions]].
-    */
-  def install(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    if (!ex.extraStrategies.contains(TopKStrategy))
-      ex.extraStrategies = ex.extraStrategies :+ TopKStrategy
-  }
-
-  /** Top-k rows per group of `df`. `orderCols` are (name, ascending?)
-    * and MUST form a total order for a deterministic result.
+  /** Top-k rows per group of `df`, planned by [[TopKStrategy]]
+    * ([[GraftExtensions]]). `orderCols` are (name, ascending?) and MUST
+    * form a total order for a deterministic result.
     */
   def perGroup(
       df: DataFrame,
@@ -207,7 +199,6 @@ object TopK {
       orderCols: Seq[(String, Boolean)],
       k: Int): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output
       .find(_.name == n)
@@ -230,21 +221,12 @@ object TopK {
       .orderBy(col("o_custkey"), col("o_totalprice").desc, col("o_orderkey"))
   }
 
-  /** Install strategy + rewrite rule (idempotent). */
-  def installRewrite(spark: SparkSession): Unit = {
-    install(spark)
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.contains(RewriteWindowTopK))
-      ex.extraOptimizations = ex.extraOptimizations :+ RewriteWindowTopK
-  }
-
   /** The IDIOMATIC window formulation (row_number ≤ 3, rank dropped) —
     * rewritten automatically to the native operator by
     * [[RewriteWindowTopK]]; the plan assertion lives in TopKSpec. Same
     * oracle as plan_topk_native.
     */
   def topkRewrite(spark: SparkSession, dir: String): DataFrame = {
-    installRewrite(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))

@@ -626,9 +626,12 @@ object Gvt {
 
   private def resolveManifestOnce(dir: String, asOf: Option[Int])
       : (Seq[GvtFile], GvtSchemaState, Option[StructType]) = {
+    // floor BEFORE latest: a floor is never above the latest version at
+    // the time it is read, so a concurrent append + vacuum cannot leave
+    // the latest snapshot below a floor read after it
+    val floor = vacuumFloor(dir)
     val last = asOf.getOrElse(latestVersion(dir))
     require(last >= 0, s"GVT at $dir has no commits (asOf=$asOf)")
-    val floor = vacuumFloor(dir)
     require(last >= floor,
       s"GVT at $dir: version $last was vacuumed (floor $floor) — " +
         "time travel below the retention floor is gone by design")
@@ -926,9 +929,12 @@ object Gvt {
     * both, folds the whole retained log. */
   def snapshotDF(spark: SparkSession, dir: String,
       asOf: Option[Int] = None): DataFrame = {
+    // floor BEFORE latest: a floor is never above the latest version at
+    // the time it is read, so a concurrent append + vacuum cannot leave
+    // the latest snapshot below a floor read after it
+    val floor = vacuumFloor(dir)
     val last = asOf.getOrElse(latestVersion(dir))
     require(last >= 0, s"GVT at $dir has no commits (asOf=$asOf)")
-    val floor = vacuumFloor(dir)
     require(last >= floor,
       s"GVT at $dir: version $last was vacuumed (floor $floor) — " +
         "time travel below the retention floor is gone by design")

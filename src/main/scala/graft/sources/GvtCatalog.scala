@@ -21,7 +21,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * atomic publish are IDENTICAL through both paths — GvtCatalogSpec
   * asserts the SQL-written twin is hash-equal to the API-written one).
   *
-  * Registration (one conf pair, [[graft.Sessions]] carries it):
+  * Catalog conf (one pair, [[graft.Sessions]] carries it):
   * {{{
   *   spark.sql.catalog.gvt = graft.sources.GvtCatalog
   *   spark.sql.catalog.gvt.warehouse = /data/gvt

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions.{expr, lit}
   * re-implementing writeData's clustering/stats/commit protocol inside
   * DataWriters for zero new capability. Instead, `DataSourceV2Strategy`
   * throws for unsupported tables only at PHYSICAL PLANNING, so an
-  * optimizer-stage rewrite (the same `experimental.extraOptimizations`
-  * slot every graft rule rides — [[graft.Sessions.install]]) intercepts
-  * the resolved command first and lowers it onto the Gvt API:
+  * optimizer-stage rewrite (the Pre-CBO slot every graft rule rides —
+  * [[graft.plans.GraftExtensions]]) intercepts the resolved command
+  * first and lowers it onto the Gvt API:
   *
   *  - `UPDATE gvt.t SET ... WHERE ...` → [[GvtUpdateCommand]] →
   *    [[Gvt.updateWhere]]: ONE atomic copy-on-write commit, only files
@@ -53,8 +53,7 @@ object RewriteGvtDml extends Rule[LogicalPlan] {
       case t: GvtTable if t.isWritable => Some(t)
       case _ => None
     }
-    // by the user-rule optimizer slot, V2ScanRelationPushDown has
-    // already turned the relation into a scan relation
+    // a scan relation once V2ScanRelationPushDown has run
     case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
       gvtOf(r.relation)
     case s: SubqueryAlias => gvtOf(s.child)

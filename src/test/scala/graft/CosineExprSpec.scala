@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 class CosineExprSpec extends GraftSuite {
 
   test("expression equals HOF cosine bit-for-bit on all sf0.001 vectors") {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, sf0001, "embeddings")
     val probe = e.filter(col("vec_id") === 0).select(col("embedding").as("probe"))
     val both = e.crossJoin(broadcast(probe)).select(
@@ -21,7 +20,6 @@ class CosineExprSpec extends GraftSuite {
   }
 
   test("expression runs inside WholeStageCodegen") {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, sf0001, "embeddings")
     val probe = e.filter(col("vec_id") === 0).select(col("embedding").as("probe"))
     val df = e.crossJoin(broadcast(probe))
@@ -35,7 +33,6 @@ class CosineExprSpec extends GraftSuite {
   }
 
   test("self-similarity is exactly 1 within fp tolerance") {
-    graft.functions.CosineSimilarity.register(spark)
     val bad = Tables(spark, sf0001, "embeddings")
       .select(expr("cosine_sim(embedding, embedding)").as("s"))
       .filter(abs(col("s") - 1.0) > 1e-12).count()
@@ -45,7 +42,6 @@ class CosineExprSpec extends GraftSuite {
   test("sorted_intersect_count equals size(array_intersect) on random " +
       "sorted-distinct arrays incl. empty/disjoint/equal edges") {
     import spark.implicits._
-    graft.functions.SortedIntersectCount.register(spark)
     val rnd = new scala.util.Random(42)
     def arr(): Seq[Long] =
       Seq.fill(rnd.nextInt(80))(rnd.nextInt(120).toLong).distinct.sorted
@@ -66,8 +62,6 @@ class CosineExprSpec extends GraftSuite {
   }
 
   test("a null ELEMENT nulls the kernel results instead of reading 0") {
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.SortedIntersectCount.register(spark)
     // array(...) with a null literal gives a containsNull = true schema
     // — the guarded codegen path; repartition so the expressions
     // actually execute instead of constant-folding

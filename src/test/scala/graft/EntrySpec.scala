@@ -7,10 +7,26 @@ class EntrySpec extends GraftSuite {
   }
 
   test("every declared query runs on sf0.001 and returns rows") {
+    // no key may change the shared session: graft's functions, rules and
+    // strategy come from GraftExtensions at construction. The only
+    // session functions a key adds are the ones udf_scalar and udf_sql
+    // exist to demonstrate.
+    val ex = spark.experimental
+    def functionNames = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).toSet
+    val functionsBefore = functionNames
+    val (rulesBefore, strategiesBefore) = (ex.extraOptimizations, ex.extraStrategies)
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf0001).count()
       assert(n > 0, s"query $name returned 0 rows")
     }
+    val demoUdfs = Set("graft_reverse", "graft_discounted", "graft_qty_band")
+    val functionsAfter = functionNames
+    assert(functionsBefore -- functionsAfter == Set.empty[String])
+    assert(functionsAfter -- functionsBefore -- demoUdfs == Set.empty[String],
+      "a key registered a session function")
+    assert(ex.extraOptimizations == rulesBefore, "a key installed an optimizer rule")
+    assert(ex.extraStrategies == strategiesBefore, "a key installed a planner strategy")
   }
 
   test("every oracleSql key has a matching queries key") {

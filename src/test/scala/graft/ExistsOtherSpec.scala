@@ -10,19 +10,16 @@ import graft.plans.RewriteExistsOther
   * corners — nulls in every role, ties on the comparison value, single-
   * key groups, keys absent from the subquery side, both comparison
   * directions and orientations — by comparing rewritten results against
-  * the same SQL executed with the rule removed.
+  * the same SQL executed with the rule excluded
+  * (`spark.sql.optimizer.excludedRules`). Each run also checks, from
+  * the query's planning tracker, that the rule fired exactly when the
+  * plan says it should — so a rule that silently stopped being
+  * installed cannot pass by comparing a plan with itself.
   */
 class ExistsOtherSpec extends GraftSuite {
 
   import scala.jdk.CollectionConverters._
   import org.apache.spark.sql.{Row, types => T}
-
-  private def withoutRule[A](body: => A): A = {
-    val ex = spark.experimental
-    val prev = ex.extraOptimizations
-    ex.extraOptimizations = prev.filterNot(_ == RewriteExistsOther)
-    try body finally ex.extraOptimizations = prev
-  }
 
   private val tSchema = T.StructType(Seq(
     T.StructField("k", T.LongType),
@@ -53,6 +50,8 @@ class ExistsOtherSpec extends GraftSuite {
   private def check(sql: String, expectRewrite: Boolean): Unit = {
     val actual = spark.sql(sql)
     val plan = actual.queryExecution.optimizedPlan.toString
+    assert((timesFired(actual, RewriteExistsOther) > 0) == expectRewrite,
+      s"rule firing should be $expectRewrite:\n$plan")
     if (expectRewrite) {
       assert(!plan.contains("LeftSemi") && !plan.contains("LeftAnti"),
         s"pattern should have been rewritten:\n$plan")
@@ -61,9 +60,10 @@ class ExistsOtherSpec extends GraftSuite {
         s"decline guard should have left the join in place:\n$plan")
     }
     val got = actual.collect().map(_.toString).sorted
-    val want = withoutRule {
+    val want = withRuleOff(RewriteExistsOther) {
       val df = spark.sql(sql)
       val p = df.queryExecution.optimizedPlan.toString
+      assert(timesFired(df, RewriteExistsOther) == 0, s"rule-off run fired:\n$p")
       assert(p.contains("LeftSemi") || p.contains("LeftAnti"),
         s"baseline must keep the semi/anti join:\n$p")
       df.collect().map(_.toString).sorted
@@ -142,9 +142,15 @@ class ExistsOtherSpec extends GraftSuite {
     val sql = "SELECT * FROM eo_l WHERE eo_l.s NOT IN " +
       "(SELECT eo_t.s FROM eo_t WHERE eo_t.v > 2)"
     val got = spark.sql(sql).collect().map(_.toString).sorted
-    val plan = spark.sql(sql).queryExecution.optimizedPlan.toString
+    val on = spark.sql(sql)
+    val plan = on.queryExecution.optimizedPlan.toString
     assert(plan.contains("LeftAnti"), s"NOT IN must stay an anti join:\n$plan")
-    val want = withoutRule(spark.sql(sql).collect().map(_.toString).sorted)
+    assert(timesFired(on, RewriteExistsOther) == 0, s"NOT IN must decline:\n$plan")
+    val want = withRuleOff(RewriteExistsOther) {
+      val off = spark.sql(sql)
+      assert(timesFired(off, RewriteExistsOther) == 0)
+      off.collect().map(_.toString).sorted
+    }
     assert(got.sameElements(want))
   }
 

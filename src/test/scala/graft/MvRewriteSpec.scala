@@ -38,18 +38,24 @@ class MvRewriteSpec extends GraftSuite {
     assert(!paths.exists(_.endsWith("/fact")), s"fact still scanned: $paths")
   }
 
-  test("rerouted answer equals the direct computation (rule removed)") {
-    val q = MaterializedViews.mvRewriteQuery(spark, sf0001).collect().toSeq
-    val ex = spark.experimental
-    val prev = ex.extraOptimizations
-    ex.extraOptimizations =
-      prev.filterNot(_ == MaterializedViews.Rewrite)
-    try {
-      val direct = MaterializedViews.mvRewriteQuery(spark, sf0001)
+  /** `query` answers the same with the rule on (where it must fire) and
+    * off (where it must not, and the control scans the fact). */
+  private def assertEqualsControl(query: => DataFrame): Unit = {
+    val on = query
+    assert(timesFired(on, MaterializedViews.Rewrite) > 0, "rule must fire")
+    val routed = on.collect().toSeq
+    withRuleOff(MaterializedViews.Rewrite) {
+      val direct = query
+      assert(timesFired(direct, MaterializedViews.Rewrite) == 0,
+        "rule-off control run fired")
       assert(scanPaths(direct).exists(_.endsWith("/fact")),
         "control run must scan the fact")
-      assert(direct.collect().toSeq == q)
-    } finally ex.extraOptimizations = prev
+      assert(direct.collect().toSeq == routed)
+    }
+  }
+
+  test("rerouted answer equals the direct computation (rule removed)") {
+    assertEqualsControl(MaterializedViews.mvRewriteQuery(spark, sf0001))
   }
 
   test("exact-granularity match (both grouping columns) also routes") {
@@ -84,15 +90,7 @@ class MvRewriteSpec extends GraftSuite {
     assert(paths.exists(_.endsWith("/view")), s"expected view scan: $paths")
     assert(!paths.exists(_.endsWith("/fact")), s"fact still scanned: $paths")
     // answer equality vs the rule-free control
-    val routed = q.collect().toSeq
-    val ex = spark.experimental
-    val prev = ex.extraOptimizations
-    ex.extraOptimizations = prev.filterNot(_ == MaterializedViews.Rewrite)
-    try {
-      val direct = MaterializedViews.mvRewriteFiltered(spark, sf0001)
-      assert(scanPaths(direct).exists(_.endsWith("/fact")))
-      assert(direct.collect().toSeq == routed)
-    } finally ex.extraOptimizations = prev
+    assertEqualsControl(MaterializedViews.mvRewriteFiltered(spark, sf0001))
   }
 
   test("a measure-column filter declines: group granularity can't answer it") {
@@ -152,15 +150,7 @@ class MvRewriteSpec extends GraftSuite {
     assert(scanPaths(none).exists(_.endsWith("/fact")),
       "un-coverable query must decline to the fact")
     // answer equality vs the rule-free control for the selected route
-    val routed = coarse.collect().toSeq
-    val ex = spark.experimental
-    val prev = ex.extraOptimizations
-    ex.extraOptimizations = prev.filterNot(_ == MaterializedViews.Rewrite)
-    try {
-      val direct = MaterializedViews.mvSelectQuery(spark, sf0001)
-      assert(scanPaths(direct).exists(_.endsWith("/fact")))
-      assert(direct.collect().toSeq == routed)
-    } finally ex.extraOptimizations = prev
+    assertEqualsControl(MaterializedViews.mvSelectQuery(spark, sf0001))
   }
 
   test("exprIds survive: downstream operators resolve over the rewrite") {

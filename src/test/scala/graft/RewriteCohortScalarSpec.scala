@@ -9,7 +9,7 @@ import graft.plans.RewriteCohortScalar
 
 /** Evidence tests for [[graft.plans.RewriteCohortScalar]] — the q20x
   * HAVING-vs-cohort-scalar scan-dedup rule that ships installed on
-  * every session (Sessions.install). Asserts, on EXECUTED plans:
+  * every session (GraftExtensions). Asserts, on EXECUTED plans:
   * (a) the rule fires on the real `sql_tpch_q20x` and the fact branch
   * scans lineitem ONCE (DevPlanGate measured `lineitem -> 2` before
   * the rule), with answers equal to the rule-off control;
@@ -45,13 +45,7 @@ class RewriteCohortScalarSpec extends GraftSuite {
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
-  /** Run `body` with the rule removed from extraOptimizations. */
-  private def ruleOff[A](body: => A): A = {
-    val ex = spark.experimental
-    val prev = ex.extraOptimizations
-    ex.extraOptimizations = prev.filterNot(_ == RewriteCohortScalar)
-    try body finally ex.extraOptimizations = prev
-  }
+  private def fired(df: DataFrame): Boolean = timesFired(df, RewriteCohortScalar) > 0
 
   private def li(): Unit =
     Tables(spark, sf0001, "lineitem").createOrReplaceTempView("li_cs")
@@ -60,11 +54,13 @@ class RewriteCohortScalarSpec extends GraftSuite {
 
   test("q20x: rule fires, fact branch scans lineitem once, answers equal control") {
     val q = SparkEntry.queries("sql_tpch_q20x")(spark, sf0001)
+    assert(fired(q), "rule must fire on q20x")
     val n = lineitemScans(q)
     assert(n == 1, s"expected a single lineitem scan after rewrite, saw $n")
     val rewritten = sorted(q)
-    ruleOff {
+    withRuleOff(RewriteCohortScalar) {
       val control = SparkEntry.queries("sql_tpch_q20x")(spark, sf0001)
+      assert(!fired(control), "rule-off control run fired")
       assert(lineitemScans(control) == 2,
         "control (rule off) should carry the double scan the rule removes")
       assert(sorted(control) == rewritten)
@@ -87,10 +83,12 @@ class RewriteCohortScalarSpec extends GraftSuite {
          |  (SELECT sum($qc) / count(DISTINCT l_suppkey) FROM li_cs)
          |ORDER BY l_suppkey, l_quantity""".stripMargin
     val q = spark.sql(sql)
+    assert(fired(q), "rule must fire on the composite-key shape")
     assert(lineitemScans(q) == 1, "composite-key shape should still dedup the scan")
     val rewritten = sorted(q)
-    ruleOff {
+    withRuleOff(RewriteCohortScalar) {
       val control = spark.sql(sql)
+      assert(!fired(control), "rule-off control run fired")
       assert(lineitemScans(control) == 2)
       assert(sorted(control) == rewritten,
         "composite-key rewrite changed the answer — DISTINCT lost over groups")
@@ -115,8 +113,13 @@ class RewriteCohortScalarSpec extends GraftSuite {
     val q = spark.sql(sql)
     assert(lineitemScans(q) == 2,
       "non-key distinct count must decline and keep both scans")
+    assert(!fired(q), "decline shape must leave the plan unchanged")
     val ans = sorted(q)
-    ruleOff { assert(sorted(spark.sql(sql)) == ans) }
+    withRuleOff(RewriteCohortScalar) {
+      val control = spark.sql(sql)
+      assert(!fired(control), "rule-off control run fired")
+      assert(sorted(control) == ans)
+    }
     assert(ans.nonEmpty)
   }
 
@@ -132,8 +135,13 @@ class RewriteCohortScalarSpec extends GraftSuite {
     val q = spark.sql(sql)
     assert(lineitemScans(q) == 2,
       "a foreign sum must decline and keep both scans")
+    assert(!fired(q), "decline shape must leave the plan unchanged")
     val ans = sorted(q)
-    ruleOff { assert(sorted(spark.sql(sql)) == ans) }
+    withRuleOff(RewriteCohortScalar) {
+      val control = spark.sql(sql)
+      assert(!fired(control), "rule-off control run fired")
+      assert(sorted(control) == ans)
+    }
     assert(ans.nonEmpty)
   }
 
@@ -149,8 +157,13 @@ class RewriteCohortScalarSpec extends GraftSuite {
     val q = spark.sql(sql)
     assert(lineitemScans(q) == 2,
       "decimal widening must decline and keep both scans")
+    assert(!fired(q), "decline shape must leave the plan unchanged")
     val ans = sorted(q)
-    ruleOff { assert(sorted(spark.sql(sql)) == ans) }
+    withRuleOff(RewriteCohortScalar) {
+      val control = spark.sql(sql)
+      assert(!fired(control), "rule-off control run fired")
+      assert(sorted(control) == ans)
+    }
     assert(ans.nonEmpty)
   }
 }

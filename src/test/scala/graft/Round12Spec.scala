@@ -250,11 +250,4 @@ class Round12Spec extends GraftSuite {
     assert(spark.read.format("gvt").option("path", dir).load()
       .columns.toSeq == Seq("k", "v"))
   }
-
-  test("function registration is idempotent (no replace-warning churn)") {
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
-    assert(spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
-  }
 }

@@ -53,4 +53,16 @@ class TablesLayoutSpec extends GraftSuite {
     assert(staged.exceptAll(reference).count() == 0)
     assert(reference.exceptAll(staged).count() == 0)
   }
+
+  test("a table dir rewritten with a new column in the same JVM reads the new schema") {
+    val dir = Files.createTempDirectory("tables-rewrite").toString
+    val path = s"$dir/t.parquet"
+    spark.range(5).toDF("a").write.parquet(path)
+    assert(Tables(spark, dir, "t").columns.toSeq == Seq("a"))
+    spark.range(5).withColumn("b", col("id") * 2).toDF("a", "b")
+      .write.mode("overwrite").parquet(path)
+    val t = Tables(spark, dir, "t")
+    assert(t.columns.toSeq == Seq("a", "b"))
+    assert(t.orderBy("a").collect().map(r => r.getLong(1)).toSeq == Seq(0L, 2L, 4L, 6L, 8L))
+  }
 }

@@ -44,7 +44,6 @@ class TopKSpec extends GraftSuite {
   }
 
   test("extreme k literals decline instead of wrapping or overflowing") {
-    plans.TopK.installRewrite(spark)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -69,7 +68,6 @@ class TopKSpec extends GraftSuite {
   }
 
   test("rewrite does NOT fire when the rank column is still referenced") {
-    plans.TopK.installRewrite(spark)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -83,7 +81,6 @@ class TopKSpec extends GraftSuite {
   }
 
   test("rewrite does NOT fire on a GLOBAL window, even under count() pruning") {
-    plans.TopK.installRewrite(spark)
     import org.apache.spark.sql.expressions.Window
     // no PARTITION BY: count() prunes the rank projection, which once made
     // this match the dead-rank guard vacuously and build an illegal

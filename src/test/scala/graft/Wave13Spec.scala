@@ -171,7 +171,6 @@ class Wave13Spec extends GraftSuite {
   }
 
   test("knn_join: IVF nprobe=2 recall vs brute-force top-3") {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, sf001, "embeddings")
     val qv = e.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))

@@ -111,7 +111,6 @@ class Wave3Spec extends GraftSuite {
   }
 
   test("sliding_windows generator matches the HOF chunking formulation") {
-    functions.SlidingWindows.register(spark)
     val gen = Tables(spark, sf0001, "documents")
       .withColumn("w", split(col("text"), " "))
       .select(col("doc_id"), expr("sliding_windows(w, 64, 48)"))
