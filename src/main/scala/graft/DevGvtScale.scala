@@ -28,9 +28,6 @@ object DevGvtScale {
     val dir = args.head
     val tiles = if (args.length > 1) args(1).toInt else 20
     val spark = Sessions.localFor("32", dir, "ERROR")
-    if (sys.env.get("SPARK_GRAFT_SCALE_ONLY").contains("branch")) {
-      branchProbe(spark, 1000000); spark.stop(); return
-    }
     if (sys.env.get("SPARK_GRAFT_SCALE_ONLY").contains("dv")) {
       dvProbe(spark); spark.stop(); return
     }
@@ -224,95 +221,7 @@ object DevGvtScale {
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), sum("o_totalprice").as("s")).collect()
     }
-
-    // ---- claim 7: 100k-entry manifest — DF path keeps it off the driver ----
-    // A 100 TB table at 128 MB/file is ~10⁶ manifest entries; this
-    // fabricates a 10⁵-entry manifest (parquet checkpoint written by a
-    // Spark job + JSON twin for the driver-path contrast) and measures
-    // snapshot resolution and zone-map pruning through both paths. The
-    // DF path collects only the pruned SURVIVORS; the driver path
-    // parses and holds all 100k entries.
-    manifestProbe(spark, 100000)
-    // ---- claim 8: the same probe at the full 10⁶ design point, plus
-    // the checkpointParquet WRITE cost (snapshotDF fold + one-file
-    // parquet write, all as a Spark job) at that size — the numbers
-    // behind the auto parquetOnlyCheckpoints default (tryPublish skips
-    // the JSON checkpoint once the previous one outgrows
-    // jsonCheckpointMaxBytes ≈ 8×10⁴ entries).
-    manifestProbe(spark, 1000000)
-    // ---- claim 9: branch + publish at 10⁶ manifest entries — the WAP
-    // cycle is O(tail + churn), never O(files). createBranch hard-links
-    // the parent's anchors (no manifest materialization), the audit
-    // writes real (small) commits on the branch, and publish diffs the
-    // two snapshotDF manifests as a Spark job, collecting only the
-    // churn. The heap deltas are the evidence.
-    branchProbe(spark, 1000000)
     spark.stop()
-  }
-
-  private def branchProbe(spark: org.apache.spark.sql.SparkSession,
-      nFiles: Int): Unit = {
-    def timed[A](what: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[gvt-scale] $what: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    def heapMB(): Double = {
-      System.gc(); Thread.sleep(100); System.gc()
-      val r = Runtime.getRuntime
-      (r.totalMemory() - r.freeMemory()) / 1e6
-    }
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val mTable = Staging.tempDir(s"gvt_branch$nFiles")
-    val ld = Paths.get(mTable, Gvt.LogDir)
-    Files.createDirectories(ld)
-    // a real table always has its data pool; the branch's `data`
-    // symlink must not dangle
-    Files.createDirectories(Paths.get(mTable, "data"))
-    val manifest = spark.range(nFiles).select(
-      format_string("data/c0-synth/part-%07d.parquet", col("id")).as("path"),
-      lit(250000L).as("rows"),
-      map(lit("doc_id"), (col("id") * 1000).cast("string")).as("min"),
-      map(lit("doc_id"), ((col("id") + 1) * 1000 - 1).cast("string")).as("max"),
-      lit(null).cast("array<string>").as("dv"),
-      lit(0L).as("dvRows"))
-    val tmp = ld.resolve(".tmp-fab")
-    manifest.repartition(1).write.parquet(tmp.toString)
-    Files.move(tmp, ld.resolve(f"${0}%08d.ckpt.parquet"),
-      StandardCopyOption.ATOMIC_MOVE)
-    Files.write(ld.resolve(f"${0}%08d.json"),
-      """{"version":0,"op":"append","adds":[],"removes":[],"ts":1}"""
-        .getBytes("UTF-8"))
-    // parquet-only regime on purpose: no JSON ckpt, publishViaDF=auto
-    // must route through the DF path by itself
-    println(s"[gvt-scale] branch probe: $nFiles-entry parent fabricated " +
-      "(parquet-only checkpoint regime)")
-    val h0 = heapMB()
-    val bdir = timed("createBranch at 10^6 entries (linked anchors)") {
-      Gvt.createBranch(spark, mTable, "wap")
-    }
-    val h1 = heapMB()
-    // the audit: one real (small) append on the branch — data files are
-    // real parquet, manifest entries of the fabricated million are not
-    // read by any of this (publish is pure metadata)
-    timed("branch audit: real 10k-row append") {
-      Gvt.append(spark, bdir,
-        spark.range(10000).select(col("id").as("k"), (col("id") * 10).as("v")),
-        Seq("k"))
-    }
-    val h2 = heapMB()
-    val v = timed("publishBranch (DF delta diff, auto-routed)") {
-      Gvt.publishBranch(spark, mTable, "wap")
-    }
-    val h3 = heapMB()
-    val c = Gvt.commitAt(mTable, v)
-    println(f"[gvt-scale] publish commit: ${c.adds.size} adds, " +
-      f"${c.removes.size} removes; heap create $h0%.0f→$h1%.0f MB, " +
-      f"publish $h2%.0f→$h3%.0f MB")
-    require(c.removes.isEmpty && c.adds.nonEmpty && c.adds.size < 100,
-      s"publish delta not churn-sized: ${c.adds.size}/${c.removes.size}")
-    timed("dropBranch") { Gvt.dropBranch(mTable, "wap") }
   }
 
   /** r13 claim: a DV load far above driver-heap comfort reads through
@@ -384,101 +293,6 @@ object DevGvtScale {
     println(f"[gvt-scale] driver heap: before $h0%.0f MB, after per-task " +
       f"reads $h1%.0f/$h2%.0f MB (FLAT), after broadcast build $h3%.0f MB " +
       f"(+${h3 - h2}%.0f MB = the position map the scale path never builds)")
-  }
-
-  private def manifestProbe(spark: org.apache.spark.sql.SparkSession,
-      nFiles: Int): Unit = {
-    def timed[A](what: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[gvt-scale] $what: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val mTable = Staging.tempDir(s"gvt_manifest$nFiles")
-      val ld = Paths.get(mTable, Gvt.LogDir)
-      Files.createDirectories(ld)
-      // each synthetic file covers 1000 consecutive doc_ids — tight,
-      // disjoint zone maps, the well-clustered-table shape
-      val manifest = spark.range(nFiles).select(
-        format_string("data/c0-synth/part-%06d.parquet", col("id")).as("path"),
-        lit(250000L).as("rows"),
-        map(lit("doc_id"), (col("id") * 1000).cast("string")).as("min"),
-        map(lit("doc_id"), ((col("id") + 1) * 1000 - 1).cast("string")).as("max"),
-        lit(null).cast("array<string>").as("dv"),
-        lit(0L).as("dvRows"))
-      timed(s"fabricate parquet ckpt ($nFiles entries, Spark job)") {
-        val tmp = ld.resolve(".tmp-fab")
-        manifest.repartition(1).write.parquet(tmp.toString)
-        Files.move(tmp, ld.resolve(f"${0}%08d.ckpt.parquet"),
-          StandardCopyOption.ATOMIC_MOVE)
-      }
-      Files.write(ld.resolve(f"${0}%08d.json"),
-        """{"version":0,"op":"append","adds":[],"removes":[],"ts":1}"""
-          .getBytes("UTF-8"))
-      // JSON twin so the driver path has its usual anchor
-      timed("fabricate JSON ckpt twin (driver-path contrast)") {
-        val files = manifest
-          .as(org.apache.spark.sql.Encoders.product[Gvt.GvtFile])
-          .collect().toSeq
-        val m = new com.fasterxml.jackson.databind.ObjectMapper()
-          .registerModule(
-            com.fasterxml.jackson.module.scala.DefaultScalaModule)
-        Files.write(ld.resolve(f"${0}%08d.ckpt.json"),
-          m.writeValueAsBytes(Gvt.GvtCheckpoint(0, files)))
-      }
-      def heapMB(): Double = {
-        System.gc(); Thread.sleep(100); System.gc()
-        val r = Runtime.getRuntime
-        (r.totalMemory() - r.freeMemory()) / 1e6
-      }
-      val h0 = heapMB()
-      val cnt = timed("DF path: snapshotDF.count() (resolution as a job)") {
-        Gvt.snapshotDF(spark, mTable).count()
-      }
-      // prune to a 0.05% range: survivors = ~50 of 100k
-      val survivors = timed("DF path: zone-map prune to 0.05% key range") {
-        val m = Gvt.snapshotDF(spark, mTable)
-        val mn = element_at(col("min"), lit("doc_id")).cast("double")
-        val mx = element_at(col("max"), lit("doc_id")).cast("double")
-        m.filter(when(mn.isNotNull && mx.isNotNull,
-            !(mx < lit(5.0e7) || mn > lit(5.005e7))).otherwise(lit(true)))
-          .select("path", "dv").collect().length
-      }
-      val h1 = heapMB()
-      println(f"[gvt-scale] DF path: $cnt entries resolved, $survivors " +
-        f"survivors collected; driver heap $h0%.0f → $h1%.0f MB")
-      val h2 = heapMB()
-      val drv = timed("driver path: Gvt.snapshot (all entries on driver)") {
-        Gvt.snapshot(mTable)
-      }
-      val keptDrv = drv.count { f =>
-        (f.min.get("doc_id"), f.max.get("doc_id")) match {
-          case (Some(mn), Some(mx)) =>
-            !(mx.toDouble < 5.0e7 || mn.toDouble > 5.005e7)
-          case _ => true
-        }
-      }
-      val h3 = heapMB()
-      println(f"[gvt-scale] driver path: ${drv.size} entries materialized, " +
-        f"$keptDrv kept; driver heap $h2%.0f → $h3%.0f MB " +
-        "(full manifest resident)")
-      require(survivors == keptDrv,
-        s"prune parity broken: DF $survivors vs driver $keptDrv")
-      // checkpointParquet WRITE at this size: one more commit doc, then
-      // the twin for v1 = snapshotDF fold over (ckpt v0 + tail) +
-      // repartition(1) parquet write — the whole thing a Spark job,
-      // nothing manifest-sized on the driver
-      Files.write(ld.resolve(f"${1}%08d.json"),
-        """{"version":1,"op":"append","adds":[],"removes":[],"ts":2}"""
-          .getBytes("UTF-8"))
-      timed(s"checkpointParquet write ($nFiles entries)") {
-        Gvt.checkpointParquet(spark, mTable, 1)
-      }
-      require(Files.isDirectory(ld.resolve(f"${1}%08d.ckpt.parquet")),
-        "checkpointParquet twin missing")
-    }
   }
 
   /** r14 claim: coordinator-log resolution is O(tail) at any age, and

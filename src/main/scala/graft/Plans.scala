@@ -39,7 +39,6 @@ object Plans {
     "stream_static_join" -> "stream-static enrichment: dimension broadcast, event side never shuffles for the join",
     "plan_mv_rewrite_filtered" -> "MV rewrite with a grouping-column filter re-applied onto the view scan (fact untouched)",
     "etl_gvt_mv_refresh" -> "GVT-backed incremental MV: the read is a plain scan of the versioned summary",
-    "scan_manifest_df" -> "manifest-as-DataFrame pruning: snapshot fold + zone-map filter run as a Spark job, only survivor (path, dv) rows reach the driver",
     "plan_mv_select" -> "cost-based MV selection: the rewrite routes to the cheapest qualifying view by actual stats bytes",
     "sql_tpch_q20x" -> "cohort-scalar scan dedup: the HAVING aggregate and the AVG scalar share ONE fact scan (RewriteCohortScalar re-roots the subquery on the grouped aggregate)",
     "etl_gvt_wap" -> "write-audit-publish: the post-publish read is a plain snapshot scan — the squash moved metadata only",

@@ -45,12 +45,12 @@ object Sessions {
       .config("spark.sql.catalog.gvt", "graft.sources.GvtCatalog")
       .config("spark.sql.catalog.gvt.warehouse",
         s"${System.getProperty("java.io.tmpdir")}/gvt-warehouse")
-      // codegen class cache sized for the whole 305-key suite (static
+      // codegen class cache sized for the whole 304-key suite (static
       // conf, default 100 entries): with only 100, a suite-wide pass
       // evicts every earlier key's generated classes, so the r17
       // pass-separated bench reps re-Janino + re-JIT each key on BOTH
       // passes (~2x on codegen-heavy keys, measured). ~8 units/key x
-      // 305 keys fits comfortably; entries are bytecode+classloader,
+      // 304 keys fits comfortably; entries are bytecode+classloader,
       // a few hundred MB ceiling against the 8 GB heap. Production
       // jobs with many distinct plans want the same.
       .config("spark.sql.codegen.cache.maxEntries", "4096")

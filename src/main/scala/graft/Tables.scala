@@ -41,7 +41,7 @@ object Tables {
     * the per-action floor: a bare `spark.read.parquet` measures ~100 ms
     * per call at local[32] (footer read + inference inside the session
     * lock), vs ~6 ms with the schema provided (DevFloor probe, r17).
-    * With ~1.5 Tables calls per key x 305 keys x 2 reps that floor is a
+    * With ~1.5 Tables calls per key x 304 keys x 2 reps that floor is a
     * double-digit share of the whole bench. The memo is keyed by path,
     * not session: a footer schema is a pure function of the file (all
     * graft sessions set the same nanosAsLong flag inference depends

@@ -113,9 +113,9 @@ object DedupVariants {
     * whose true pairs sit above the banding's safe band (the r6 fixture
     * regeneration proved the corpus can change under us).
     */
-  /** Per-(corpus, threshold) memo of the auto prefix-order decision —
-    * the gate job runs once per (JVM, corpus, threshold), not once per
-    * key that routes through [[ngramCandidates]]. */
+  /** Per-corpus memo of the auto prefix-order decision — the gate job
+    * runs once per (JVM, corpus), not once per key that routes through
+    * [[ngramCandidates]]. */
   private val autoGateMemo =
     scala.collection.concurrent.TrieMap.empty[String, Boolean]
   /** MUST be called after regenerating a corpus in place (same path,
@@ -123,12 +123,14 @@ object DedupVariants {
     * way: a stale gate changes candidate volume, never recall. */
   private[graft] def clearAutoGateMemo(): Unit = autoGateMemo.clear()
 
+  private val AutoSkewThreshold = 0.1
+
   /** The df-skew gate behind `spark.graft.ppjoin.dfOrdered=auto`: turn
     * on df-ordered prefixes iff the HOTTEST shingle's doc-frequency
-    * share exceeds `spark.graft.ppjoin.autoSkewThreshold` (default
-    * 0.10 — fixture corpora measure ≤0.02, an every-doc boilerplate
-    * phrase measures ≈1.0). Measured on a DETERMINISTIC ~5% key-hash
-    * sample of the corpus (whole corpus below 1000 docs), so the gate
+    * share reaches [[AutoSkewThreshold]] (fixture corpora measure
+    * ≤0.02, an every-doc boilerplate phrase measures ≈1.0). Measured on
+    * a DETERMINISTIC ~5% key-hash sample of the corpus (whole corpus
+    * below 1000 docs), so the gate
     * costs one small aggregate over sampled shingles — the doc filter
     * sits under the shingle projection, so unsampled docs are never
     * shingled — and the decision is stable across runs and partition
@@ -137,13 +139,9 @@ object DedupVariants {
     * ~(sN)²/2 candidate pairs if it stays in prefixes. */
   private def autoDfOrderedGate(spark: SparkSession, dir: String,
       sets: DataFrame): Boolean = {
-    val thresh = spark.conf
-      .get("spark.graft.ppjoin.autoSkewThreshold", "0.1").toDouble
-    // memo key carries the threshold: a conf change must re-decide, not
-    // read a stale verdict frozen under the old threshold. (A corpus
-    // REGENERATED at the same path still needs clearAutoGateMemo —
-    // documented there; fixture regen is the only case that hits it.)
-    autoGateMemo.getOrElseUpdate(s"$dir#$thresh", {
+    // a corpus REGENERATED at the same path needs clearAutoGateMemo —
+    // documented there; fixture regen is the only case that hits it
+    autoGateMemo.getOrElseUpdate(dir, {
       val total = sets.count() // column-pruned: no shingling for a count
       val sampled =
         if (total <= 1000) sets
@@ -156,12 +154,12 @@ object DedupVariants {
           .groupBy("sh").agg(count(lit(1)).as("df"))
           .agg(coalesce(max(col("df")), lit(0L)).as("m")).head.getLong(0)
       val share = if (n == 0) 0.0 else maxDf.toDouble / n
-      val decision = share >= thresh
-      // one observable line per (corpus, threshold) decision — lands in
+      val decision = share >= AutoSkewThreshold
+      // one observable line per corpus decision — lands in
       // the bench/verify stderr tail so a corpus regen that flips the
       // gate shows up in artifacts, not just in timings
       Console.err.println(f"[ppjoin-auto-gate] dir=$dir share=$share%.4f " +
-        f"thresh=$thresh n=$n dfOrdered=${if (decision) "on" else "off"}")
+        f"thresh=$AutoSkewThreshold n=$n dfOrdered=${if (decision) "on" else "off"}")
       decision
     })
   }

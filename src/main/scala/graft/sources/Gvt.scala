@@ -27,6 +27,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   _gvt_log/00000040.ckpt.json             full-state checkpoint
   * }}}
   *
+  * The JSON checkpoint is the table's one checkpoint format: every
+  * `checkpointEvery`-th commit and every [[vacuum]] floor writes one
+  * `%08d.ckpt.json` doc holding the full active-file list, and
+  * [[snapshot]] resolution anchors on the newest one ≤ v.
+  *
   * A commit records `adds` (new files with row counts + per-column
   * min/max stats) and `removes` (paths logically deleted). Snapshot at
   * version v = replay adds∖removes through v, starting from the newest
@@ -517,8 +522,6 @@ object Gvt {
     logDirOf(dir).resolve(f"$v%08d.json")
   private def ckptPath(dir: String, v: Int) =
     logDirOf(dir).resolve(f"$v%08d.ckpt.json")
-  private def pqCkptPath(dir: String, v: Int) =
-    logDirOf(dir).resolve(f"$v%08d.ckpt.parquet")
 
   /** Lowest commit doc still in the log (a branch's oldest readable
     * version via its linked seed tail), or -1 for an empty table. */
@@ -557,11 +560,6 @@ object Gvt {
     def unapply(name: String): Option[Int] =
       name match { case Re(d) => Some(d.toInt); case _ => None }
   }
-  private object PqCkptName {
-    private val Re = raw"(\d{8})\.ckpt\.parquet".r
-    def unapply(name: String): Option[Int] =
-      name match { case Re(d) => Some(d.toInt); case _ => None }
-  }
   private object VacuumName {
     private val Re = raw"(\d{8})\.vacuum\.json".r
     def unapply(name: String): Option[Int] =
@@ -580,6 +578,15 @@ object Gvt {
     finally it.close()
   }
 
+  /** Newest checkpoint ≤ `upTo`, or -1. */
+  private def newestCkpt(dir: String, upTo: Int): Int = {
+    val it = Files.list(logDirOf(dir))
+    try it.iterator().asScala().map(_.getFileName.toString)
+      .collect { case CkptName(v) if v <= upTo => v }
+      .foldLeft(-1)(math.max)
+    finally it.close()
+  }
+
   // tiny shim: Files.list gives a Java stream; keep usage in one place
   // (private[sources]: GvtCatalog imports it rather than owning a twin)
   implicit private[sources] class JIter[A](private val it: java.util.Iterator[A]) {
@@ -592,9 +599,9 @@ object Gvt {
     * column-mapping/constraint state, AND the unified physical data
     * schema at `asOf` — [[snapshot]] / [[mappingAt]] / [[pinnedSchema]]
     * are views of this, and the combined read paths ([[read]],
-    * [[readPrunedMulti]]) call it once: the JSON checkpoint (which at
-    * the flip threshold is ~16 MiB) is parsed a single time per
-    * resolution, not once per concern (r11 review finding).
+    * [[readPrunedMulti]]) call it once: the checkpoint is parsed a
+    * single time per resolution, not once per concern (r11 review
+    * finding).
     *
     * The schema pin is `None` (unresolvable) whenever any adds-bearing
     * doc in the resolution path predates the pin, or two pins disagree
@@ -637,14 +644,7 @@ object Gvt {
         "time travel below the retention floor is gone by design")
     require(Files.exists(commitPath(dir, last)),
       s"GVT at $dir has no version $last")
-    val ld = logDirOf(dir)
-    val ckptVersion: Int = {
-      val it = Files.list(ld)
-      try it.iterator().asScala().map(_.getFileName.toString)
-        .collect { case CkptName(v) if v <= last => v }
-        .foldLeft(-1)(math.max)
-      finally it.close()
-    }
+    val ckptVersion = newestCkpt(dir, last)
     val active = mutable.LinkedHashMap.empty[String, GvtFile]
     var state: GvtSchemaState = EmptySchemaState
     var pin: Option[StructType] = Some(new StructType())
@@ -887,137 +887,6 @@ object Gvt {
           s"($pred) — drop the check first")
     }
 
-  // --------------------------------------------------------------------
-  // MANIFEST AS A DATAFRAME — the 100 TB path. A 100 TB table at 128 MB
-  // a file is ~10⁶ manifest entries; [[snapshot]]'s driver Seq is fine
-  // to ~10⁵ but beyond that the full file list must never land in
-  // driver memory. This section keeps manifest STATE distributed:
-  // checkpoints are parquet datasets written BY A SPARK JOB from the
-  // previous parquet checkpoint plus the commit tail (so the writer
-  // never materializes the list either), snapshot resolution is a
-  // ≤[[CheckpointEvery]]-step DataFrame fold, and zone-map pruning is a
-  // Spark filter over the manifest — the driver sees only the pruned
-  // SURVIVOR list it must hand to the parquet scan (the same contract
-  // as Delta's checkpoint-parquet + state-reconstruction DataFrame).
-  // --------------------------------------------------------------------
-
-  private def gvtFileEnc = org.apache.spark.sql.Encoders.product[GvtFile]
-
-  /** Small per-commit file lists (adds of ONE commit — bounded by that
-    * commit's churn, never table size) lifted to a DataFrame. */
-  private def filesDF(spark: SparkSession, files: Seq[GvtFile]): DataFrame =
-    spark.createDataset(files)(gvtFileEnc).toDF()
-
-  /** Newest parquet checkpoint ≤ `upTo`, or -1. */
-  private def newestPqCkpt(dir: String, upTo: Int): Int = {
-    val ld = logDirOf(dir)
-    if (!Files.isDirectory(ld)) return -1
-    val it = Files.list(ld)
-    try it.iterator().asScala().map(_.getFileName.toString)
-      .collect { case PqCkptName(v) if v <= upTo => v }
-      .foldLeft(-1)(math.max)
-    finally it.close()
-  }
-
-  /** Active-file manifest at `asOf` as a DATAFRAME (columns = the
-    * [[GvtFile]] fields) — no driver materialization of the file list.
-    * Anchors on the newest parquet checkpoint ≤ asOf and folds the
-    * remaining commit tail (anti-join removes, union adds — each step
-    * bounded by ONE commit's churn). Bridges: a table that has never
-    * written a parquet checkpoint anchors on the JSON checkpoint (one
-    * driver-side doc read, the pre-existing liability) or, lacking
-    * both, folds the whole retained log. */
-  def snapshotDF(spark: SparkSession, dir: String,
-      asOf: Option[Int] = None): DataFrame = {
-    // floor BEFORE latest: a floor is never above the latest version at
-    // the time it is read, so a concurrent append + vacuum cannot leave
-    // the latest snapshot below a floor read after it
-    val floor = vacuumFloor(dir)
-    val last = asOf.getOrElse(latestVersion(dir))
-    require(last >= 0, s"GVT at $dir has no commits (asOf=$asOf)")
-    require(last >= floor,
-      s"GVT at $dir: version $last was vacuumed (floor $floor) — " +
-        "time travel below the retention floor is gone by design")
-    require(Files.exists(commitPath(dir, last)),
-      s"GVT at $dir has no version $last")
-    val pq = newestPqCkpt(dir, last)
-    val (anchorV, base0) =
-      if (pq >= 0) (pq, spark.read.parquet(pqCkptPath(dir, pq).toString))
-      else {
-        val ld = logDirOf(dir)
-        val js = {
-          val it = Files.list(ld)
-          try it.iterator().asScala().map(_.getFileName.toString)
-            .collect { case CkptName(v) if v <= last => v }
-            .foldLeft(-1)(math.max)
-          finally it.close()
-        }
-        if (js >= 0) {
-          val ck = mapper.readValue(
-            Files.readAllBytes(ckptPath(dir, js)), classOf[GvtCheckpoint])
-          (js, filesDF(spark, ck.files))
-        } else (-1, filesDF(spark, Nil))
-      }
-    // pre-r12 parquet twins lack `bytes`, pre-r13 twins lack `tz`;
-    // backfill the missing-field defaults so unionByName/encoders line up
-    val base1 =
-      if (base0.columns.contains("bytes")) base0
-      else base0.withColumn("bytes", lit(0L))
-    val base =
-      if (base1.columns.contains("tz")) base1
-      else base1.withColumn("tz", lit(null).cast("string"))
-    ((anchorV + 1) to last).foldLeft(base) { (df, v) =>
-      val c = commitAt(dir, v)
-      // adds UPSERT by path — the driver path's LinkedHashMap.put
-      // contract. A commit may re-add a surviving path with a new DV
-      // and no matching remove (publishBranch's DV-audit squash does;
-      // dv_delete and restore re-add by design), so for THOSE ops the
-      // anti-join must drop removed AND re-added paths before the
-      // union, or the fold yields duplicate manifest rows and the
-      // dv-less twin resurrects deleted rows on the DF read path.
-      // Every other op's adds are freshly-written `c<version>-<uuid>`
-      // dirs that cannot pre-exist in the manifest — and narrowing the
-      // anti-join to actual removes lets an APPEND commit skip the
-      // join entirely (r12: the r10 blanket `removes ++ adds` put one
-      // anti-join per append into this fold and cost scan_manifest_df
-      // +0.27 s/query on an 8-append table — the r9→r10 'ambient'
-      // residue the r12 A/B pinned to code).
-      val mayReAdd =
-        ReAddOps.contains(c.op) || c.op == "publish"
-      val gone =
-        if (mayReAdd) c.removes ++ c.adds.map(_.path) else c.removes
-      val afterRemoves =
-        if (gone.isEmpty) df
-        else df.join(
-          spark.createDataset(gone)(
-            org.apache.spark.sql.Encoders.STRING).toDF("path"),
-          Seq("path"), "left_anti")
-      if (c.adds.isEmpty) afterRemoves
-      else afterRemoves.unionByName(filesDF(spark, c.adds))
-    }
-  }
-
-  /** Write the parquet-checkpoint twin for version `v` (idempotent;
-    * racing writers resolve by atomic directory move). The state is
-    * computed by [[snapshotDF]] — previous parquet checkpoint + tail —
-    * so the WRITE is a Spark job too: no driver materialization at any
-    * manifest size. One output file: manifest rows are ~200 B, so even
-    * 10⁶ entries are one well-sized parquet file, and a single-file
-    * checkpoint keeps resolution a single-split scan. */
-  def checkpointParquet(spark: SparkSession, dir: String, v: Int): Unit = {
-    val target = pqCkptPath(dir, v)
-    if (Files.exists(target)) return
-    val tmp = logDirOf(dir)
-      .resolve(s".tmp-pqckpt-${UUID.randomUUID().toString.take(8)}")
-    snapshotDF(spark, dir, Some(v)).repartition(1)
-      .write.parquet(tmp.toString)
-    try Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: FileAlreadyExistsException | _: java.nio.file.FileSystemException =>
-        deleteRecursively(tmp) // lost the race; the winner's twin stands
-    }
-  }
-
   private[sources] def deleteRecursively(p: java.nio.file.Path): Unit = {
     // NOFOLLOW: a symlinked directory (a branch's shared `data` link)
     // must be unlinked as an entry, never descended into — following it
@@ -1028,50 +897,6 @@ object Gvt {
       finally s.close()
     }
     Files.deleteIfExists(p)
-  }
-
-  /** [[readPrunedMulti]] through the DataFrame manifest: zone-map file
-    * pruning AS A SPARK JOB. The survivor condition matches the driver
-    * path exactly — a file is pruned only when BOTH bounds parse
-    * numerically and the box provably misses (missing/garbage stats ⇒
-    * keep; pruning is never load-bearing) — and the driver collects
-    * only the SURVIVORS (path + dv), never the manifest. Returns
-    * (df, filesKept, filesTotal). */
-  def readPrunedMultiDF(spark: SparkSession, dir: String,
-      ranges: Seq[(String, Double, Double)], asOf: Option[Int] = None)
-      : (DataFrame, Long, Long) = {
-    // range columns are LOGICAL; the DF manifest's stats maps key
-    // PHYSICAL names (mapping resolution is one metadata walk)
-    val state = mappingAt(dir, asOf)
-    val physRanges = ranges.map { case (c, lo, hi) =>
-      (state.physicalOf(c), lo, hi)
-    }
-    val m = snapshotDF(spark, dir, asOf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val total = m.count()
-      require(total > 0, s"GVT at $dir is empty at version $asOf")
-      val survive = physRanges.map { case (c, lo, hi) =>
-        val mn = element_at(col("min"), lit(c)).cast("double")
-        val mx = element_at(col("max"), lit(c)).cast("double")
-        when(mn.isNotNull && mx.isNotNull,
-          !(mx < lit(lo) || mn > lit(hi))).otherwise(lit(true))
-      }.reduce(_ && _)
-      val kept = m.filter(survive).select(col("path"), col("dv"))
-        .collect()
-        .map(r => GvtFile(r.getString(0), 0L, Map.empty, Map.empty,
-          Option(r.getSeq[String](1)).map(_.toSeq).orNull))
-        .toSeq.sortBy(_.path)
-      val df =
-        if (kept.isEmpty) {
-          val donor = m.select("path").head.getString(0)
-          applyMapping(spark.read.parquet(s"$dir/$donor").limit(0), state)
-        } else applyMapping(readFiles(spark, dir, kept, !state.mappingEmpty), state)
-      val filtered = ranges.foldLeft(df) { case (d, (column, lo, hi)) =>
-        d.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-      }
-      (filtered, kept.size.toLong, total)
-    } finally m.unpersist()
   }
 
   /** TIMESTAMP time travel: the greatest version whose publish
@@ -1378,6 +1203,22 @@ object Gvt {
     Written(adds, written.schema.json)
   }
 
+  /** Write the checkpoint of version `v` (idempotent: a racing writer's
+    * link wins). It carries the column-mapping state AND the unified
+    * data-schema pin: vacuum deletes pre-floor schema and data commits,
+    * so the anchor must serve both on its own (null when absent — old
+    * readers see the pre-pin shape). */
+  private def writeCheckpoint(dir: String, v: Int): Unit = {
+    val (files, st, pin) = resolveManifest(dir, Some(v))
+    val tmp = Files.createTempFile(logDirOf(dir), ".tmp-", ".ckpt")
+    try {
+      Files.write(tmp, mapper.writeValueAsBytes(GvtCheckpoint(v, files,
+        if (st.isEmpty) null else st, pin.map(_.json).orNull)))
+      try Files.createLink(ckptPath(dir, v), tmp)
+      catch { case _: FileAlreadyExistsException => () }
+    } finally Files.delete(tmp)
+  }
+
   /** Atomically publish `commit` at its version; returns false if the
     * version was already taken (optimistic-concurrency loser).
     *
@@ -1426,56 +1267,13 @@ object Gvt {
     if (won && commit.version > 0 && commit.version % ckptEvery == 0) try {
       GvtMaintenance.tableCkptFailpoint()
       // checkpoints AFTER the commit is visible; a lost race or failure
-      // here only costs replay length, never correctness — so the WHOLE
-      // block is best-effort (r15: previously only the parquet twin
-      // was, and a JSON-checkpoint IO failure would make an
-      // already-committed write look failed to its caller — the same
-      // committed-op-reported-as-failure shape as the r14 advisor's
-      // absorb finding). A swallow is counted and warned
-      // ([[GvtMaintenance.tableCkptSwallowed]]): a persistently failing
-      // writer degrades resolution to O(log) and must be visible.
-      // `parquetOnlyCheckpoints` is the >10⁵-file regime: skip the JSON
-      // checkpoint (whose write materializes the full list on the
-      // driver) and keep only the parquet twin, whose state is computed
-      // AND written as a Spark job — the driver path ([[snapshot]])
-      // then replays a longer tail from the last JSON checkpoint, which
-      // is exactly the path such tables should no longer use.
-      // auto (the default): flip to parquet-only once the PREVIOUS
-      // JSON checkpoint outgrew `jsonCheckpointMaxBytes` (~200 B/entry,
-      // so the 16 MiB default ≈ 8×10⁴ files — the regime where the
-      // JSON write's driver materialization starts to hurt). The
-      // decision is sticky: once a JSON checkpoint is skipped, the next
-      // probe finds only the parquet twin and stays parquet-only — a
-      // table that big should never drift back onto the driver path by
-      // accident. Explicit true/false still overrides.
-      // the auto probe is [[manifestIsBig]]'s newest-≤ scan, NOT a look
-      // at exactly version-CheckpointEvery: vacuum deletes that doc and
-      // writes a (huge) JSON checkpoint at its floor, and the probe
-      // must find THAT one — or a big table would flip back onto the
-      // driver JSON path for one commit after every vacuum
-      val parquetOnly = {
-        val conf = if (spark == null) None else spark.conf
-          .getOption("spark.graft.gvt.parquetOnlyCheckpoints")
-        conf match {
-          case Some(v) if v != "auto" => v.toBoolean
-          case _ => manifestIsBig(spark, dir, commit.version)
-        }
-      }
-      if (!parquetOnly) {
-        // the checkpoint carries the column-mapping state AND the
-        // unified data-schema pin: vacuum deletes pre-floor schema and
-        // data commits, so the anchor must serve both on its own (null
-        // when absent — old readers see the pre-pin shape)
-        val (files, st, pin) = resolveManifest(dir, Some(commit.version))
-        val ctmp = Files.createTempFile(ld, ".tmp-", ".ckpt")
-        Files.write(ctmp,
-          mapper.writeValueAsBytes(GvtCheckpoint(commit.version, files,
-            if (st.isEmpty) null else st, pin.map(_.json).orNull)))
-        try Files.createLink(ckptPath(dir, commit.version), ctmp)
-        catch { case _: FileAlreadyExistsException => () }
-        Files.delete(ctmp)
-      }
-      if (spark != null) checkpointParquet(spark, dir, commit.version)
+      // here only costs replay length, never correctness — so the block
+      // is best-effort: a checkpoint IO failure must not make an
+      // already-committed write look failed to its caller. A swallow is
+      // counted and warned ([[GvtMaintenance.tableCkptSwallowed]]): a
+      // persistently failing writer degrades resolution to O(log) and
+      // must be visible.
+      writeCheckpoint(dir, commit.version)
     } catch {
       case scala.util.control.NonFatal(e) => GvtMaintenance.swallow(
         GvtMaintenance.tableCkptSwallowed,
@@ -2221,16 +2019,7 @@ object Gvt {
     // (1) anchor: a checkpoint AT retainFrom (idempotent; carries the
     // mapping state and the data-schema pin — the pre-floor schema and
     // data commits are about to go)
-    if (!Files.exists(ckptPath(dir, retainFrom))) {
-      val (files, st, pin) = resolveManifest(dir, Some(retainFrom))
-      val ctmp = Files.createTempFile(ld, ".tmp-", ".ckpt")
-      Files.write(ctmp,
-        mapper.writeValueAsBytes(GvtCheckpoint(retainFrom, files,
-          if (st.isEmpty) null else st, pin.map(_.json).orNull)))
-      try Files.createLink(ckptPath(dir, retainFrom), ctmp)
-      catch { case _: FileAlreadyExistsException => () }
-      Files.delete(ctmp)
-    }
+    if (!Files.exists(ckptPath(dir, retainFrom))) writeCheckpoint(dir, retainFrom)
     // live branches share this table's data pool: every version a branch
     // can still read (its fork version through its head) pins its files,
     // even below the parent's retention floor — a published-or-dropped
@@ -2335,16 +2124,6 @@ object Gvt {
           if (Files.deleteIfExists(p)) docsDeleted += 1
         case CkptName(v) if v < retainFrom =>
           if (Files.deleteIfExists(p)) docsDeleted += 1
-        case PqCkptName(v) if v < retainFrom =>
-          // parquet twin directory; a peer may be reaping it too
-          try { deleteRecursively(p); docsDeleted += 1 }
-          catch { case _: java.nio.file.NoSuchFileException => () }
-        case n if n.startsWith(".tmp-pqckpt-") && aged(p) =>
-          // a crash between writing the twin and its atomic move leaks
-          // the tmp dir; no name pattern above ever matches it, so the
-          // vacuum walk reaps aged ones here (grace keeps live writers)
-          try { deleteRecursively(p); docsDeleted += 1 }
-          catch { case _: java.nio.file.NoSuchFileException => () }
         case _ => ()
       }
     } finally docs.close()
@@ -2489,29 +2268,6 @@ object Gvt {
   def branchDir(dir: String, name: String): String =
     branchPath(dir, name).toString
 
-  /** Is this table in the big-manifest regime? Same signal as
-    * tryPublish's parquet-only flip: the newest JSON checkpoint ≤
-    * `upTo` outgrew `jsonCheckpointMaxBytes` (~200 B/entry, 16 MiB ≈
-    * 8×10⁴ files) — or only a parquet twin exists at all, which is
-    * that regime's steady state. */
-  private def manifestIsBig(spark: SparkSession, dir: String,
-      upTo: Int): Boolean = {
-    val maxBytes = Option(spark)
-      .flatMap(_.conf.getOption("spark.graft.gvt.jsonCheckpointMaxBytes"))
-      .map(_.toLong).getOrElse(16L * 1024 * 1024)
-    val ld = logDirOf(dir)
-    if (!Files.isDirectory(ld)) return false
-    val jsonCk = {
-      val it = Files.list(ld)
-      try it.iterator().asScala().map(_.getFileName.toString)
-        .collect { case CkptName(v) if v <= upTo => v }
-        .foldLeft(-1)(math.max)
-      finally it.close()
-    }
-    if (jsonCk >= 0) Files.size(ckptPath(dir, jsonCk)) > maxBytes
-    else newestPqCkpt(dir, upTo) >= 0
-  }
-
   /** The parent version branch `name` forked from. */
   def branchBase(dir: String, name: String): Int = {
     val ref = branchPath(dir, name).resolve("branch.json")
@@ -2538,10 +2294,9 @@ object Gvt {
     * O(files): instead of materializing the fork manifest into a fresh
     * checkpoint (a 10⁶-entry table must never pass through the driver
     * just to get a branch), it HARD-LINKS the parent's own resolution
-    * anchors — the newest JSON checkpoint ≤ fork, the newest parquet
-    * checkpoint twin, and the commit docs between them and the fork —
-    * so the branch resolves exactly like the parent did at the fork,
-    * through either path, and stays readable even after the parent
+    * anchors — the newest checkpoint ≤ fork and the commit docs
+    * between it and the fork — so the branch resolves exactly like the
+    * parent did at the fork, and stays readable even after the parent
     * vacuums its own copies (links survive the source's deletion).
     * Returns the branch's table dir. */
   def createBranch(spark: SparkSession, dir: String, name: String): String = {
@@ -2561,42 +2316,19 @@ object Gvt {
     Files.createSymbolicLink(bdir.resolve("data"),
       Paths.get("..", "..", "data"))
     val bld = Files.createDirectories(bdir.resolve(LogDir))
-    val ld = logDirOf(dir)
-    // driver-path anchor: newest JSON checkpoint ≤ base (-1 on a young,
-    // never-vacuumed table — then commits 0..base all still exist)
-    val jsonCk = {
-      val it = Files.list(ld)
-      try it.iterator().asScala().map(_.getFileName.toString)
-        .collect { case CkptName(v) if v <= base => v }
-        .foldLeft(-1)(math.max)
-      finally it.close()
-    }
-    if (jsonCk >= 0)
-      try Files.createLink(bld.resolve(f"$jsonCk%08d.ckpt.json"),
-        ckptPath(dir, jsonCk))
+    // anchor: newest checkpoint ≤ base (-1 on a young, never-vacuumed
+    // table — then commits 0..base all still exist)
+    val ck = newestCkpt(dir, base)
+    if (ck >= 0)
+      try Files.createLink(bld.resolve(f"$ck%08d.ckpt.json"), ckptPath(dir, ck))
       catch { case _: FileAlreadyExistsException => () }
-    // DF-path anchor: link the parquet twin's files (flat dir) — but
-    // only when the linked commit tail reaches it; a twin OLDER than
-    // the JSON anchor would fold versions whose docs we don't link
-    val pqCk = newestPqCkpt(dir, base)
-    if (pqCk >= 0 && pqCk >= jsonCk) {
-      val src = pqCkptPath(dir, pqCk)
-      val dst = Files.createDirectories(
-        bld.resolve(f"$pqCk%08d.ckpt.parquet"))
-      val s = Files.list(src)
-      try s.iterator().asScala().foreach { f =>
-        if (Files.isRegularFile(f))
-          try Files.createLink(dst.resolve(f.getFileName.toString), f)
-          catch { case _: FileAlreadyExistsException => () }
-      } finally s.close()
-    }
     // the tail: every commit doc from the anchor through the fork —
     // the anchor version's own doc included, so branch time travel
     // reaches back to the parent's newest checkpoint ≤ fork (deeper
     // history stays the parent's to serve). All docs exist in the
-    // parent — vacuum ensures a JSON checkpoint at its floor and keeps
-    // the floor doc, so [jsonCk, base] is never vacuumed away.
-    (math.max(jsonCk, 0) to base).foreach { v =>
+    // parent — vacuum ensures a checkpoint at its floor and keeps the
+    // floor doc, so [ck, base] is never vacuumed away.
+    (math.max(ck, 0) to base).foreach { v =>
       try Files.createLink(bld.resolve(f"$v%08d.json"), commitPath(dir, v))
       catch { case _: FileAlreadyExistsException => () }
     }
@@ -2641,47 +2373,17 @@ object Gvt {
         throw new java.util.ConcurrentModificationException(
           s"GVT $dir: advanced $base -> $head since branch '$name' forked " +
             "and the branch holds non-append commits; re-audit on a fresh branch")
-      // Net delta, two regimes (`spark.graft.gvt.publishViaDF`: auto).
-      // Big manifests (the >8×10⁴-entry JSON-checkpoint-overflow regime,
-      // same threshold as tryPublish's parquet-only flip) diff the two
-      // snapshotDF manifests as a Spark job and the driver collects only
-      // the CHURN — files the branch added or rewrote, paths it dropped
-      // — never either side's full file list, so publish stays O(delta)
-      // at any table size. Small manifests keep the in-memory diff (the
-      // DF path's fixed job cost dwarfs a thousand-entry Seq walk).
-      // fork-state resolution reads the BRANCH's linked log, not the
-      // parent's: the parent's vacuum floor may have passed the fork
-      // (vacuum pins the branch's FILES precisely so it can still
-      // land), and the branch's seed links serve version `base` forever
-      val viaDF = spark.conf
-        .getOption("spark.graft.gvt.publishViaDF").getOrElse("auto") match {
-        case "auto" => manifestIsBig(spark, bdir, base)
-        case v => v.toBoolean
-      }
-      val (adds, removes) = if (viaDF) {
-        val baseM = snapshotDF(spark, bdir, Some(base))
-        val bM = snapshotDF(spark, bdir)
-        // identity = (path, dv, dvRows): data files are immutable once
-        // written (same path ⇒ same rows/stats), so only a DV swap can
-        // change a surviving path — and set ops can't compare the
-        // min/max map columns anyway. The semi-join recovers the full
-        // manifest row (maps included) for just the changed paths.
-        val key = Seq("path", "dv", "dvRows")
-        val changed = bM.select(key.map(col): _*)
-          .exceptAll(baseM.select(key.map(col): _*)).select("path")
-        val a = bM.join(changed, Seq("path"), "left_semi")
-          .as(gvtFileEnc).collect().toSeq
-        val r = baseM.select("path").exceptAll(bM.select("path"))
-          .as(org.apache.spark.sql.Encoders.STRING).collect().toSeq
-        (a, r)
-      } else {
-        val baseFiles = snapshot(bdir, Some(base))
-        val bFiles = snapshot(bdir)
-        val baseByPath = baseFiles.map(f => f.path -> f).toMap
-        val bPaths = bFiles.map(_.path).toSet
-        (bFiles.filterNot(f => baseByPath.get(f.path).contains(f)),
-          baseFiles.map(_.path).filterNot(bPaths.contains))
-      }
+      // net delta by an in-memory diff. Fork-state resolution reads the
+      // BRANCH's linked log, not the parent's: the parent's vacuum floor
+      // may have passed the fork (vacuum pins the branch's FILES
+      // precisely so it can still land), and the branch's seed links
+      // serve version `base` forever
+      val baseFiles = snapshot(bdir, Some(base))
+      val bFiles = snapshot(bdir)
+      val baseByPath = baseFiles.map(f => f.path -> f).toMap
+      val bPaths = bFiles.map(_.path).toSet
+      val adds = bFiles.filterNot(f => baseByPath.get(f.path).contains(f))
+      val removes = baseFiles.map(_.path).filterNot(bPaths.contains)
       // WAP GATE: the branch's net-new rows must pass the PARENT's
       // CURRENT checks — a constraint added after the fork still gates
       // the publish (branch appends enforced only the checks the

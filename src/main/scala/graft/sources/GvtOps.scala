@@ -223,8 +223,8 @@ object GvtOps {
     * manifest zone-map prune inside [[GvtFileIndex.listFiles]], so the
     * scan touches 1-of-8 tile files (GvtDsv2Spec asserts both the
     * `PushedFilters` in the plan and the file count); shares
-    * `scan_manifest_prune`'s oracle — all three prune paths (caller-
-    * driven driver list, DF manifest, connector) must agree exactly. */
+    * `scan_manifest_prune`'s oracle — both prune paths (caller-driven
+    * driver list, connector) must agree exactly. */
   def gvtDsv2(spark: SparkSession, dir: String): DataFrame = {
     val (qlo, qhi) = tileBounds(spark, dir)
     spark.read.format("gvt").option("path", tilesGvt(spark, dir)).load()
@@ -441,22 +441,6 @@ object GvtOps {
       .agg(count(lit(1)).as("n_orders"),
         round(sum("o_totalprice"), 2).as("total_price"))
       .orderBy("o_orderpriority")
-
-  /** The SAME pruned read through the DATAFRAME manifest path
-    * ([[Gvt.readPrunedMultiDF]]): snapshot resolution and zone-map
-    * pruning run as a Spark job over the parquet-checkpoint manifest,
-    * and the driver only ever sees the pruned survivor list — the
-    * ≥10⁵-file regime where [[Gvt.snapshot]]'s driver Seq stops
-    * scaling. Shares `scan_manifest_prune`'s oracle: both paths must
-    * produce the identical answer. */
-  def manifestDf(spark: SparkSession, dir: String): DataFrame = {
-    val (qlo, qhi) = tileBounds(spark, dir)
-    val (df, _, _) = Gvt.readPrunedMultiDF(spark, tilesGvt(spark, dir),
-      Seq(("l_orderkey", qlo.toDouble, qhi.toDouble)))
-    df.groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n_rows"), round(sum("l_quantity"), 2).as("sum_qty"))
-      .orderBy("l_returnflag")
-  }
 
   /** Pruning stats for GvtSpec (scanned vs total file counts). */
   def manifestPruneStats(spark: SparkSession, dir: String): (Int, Int) = {
@@ -1556,7 +1540,6 @@ object GvtOps {
     "etl_gvt_txn_multi" -> gvtTxnMulti,
     "etl_gvt_txn_wap" -> gvtTxnWap,
     "scan_manifest_prune" -> manifestPrune,
-    "scan_manifest_df" -> manifestDf,
     "scan_gvt_dsv2" -> gvtDsv2,
     "scan_gvt_dsv2_dv" -> gvtDsv2Dv,
     "scan_gvt_dsv2_dvf" -> gvtDsv2DvFetch,
@@ -1737,15 +1720,6 @@ object GvtOps {
         "c_acctbal, c_mktsegment FROM customer, sh " +
         "WHERE c_custkey % 100 = 0" +
         ") ORDER BY change_type, c_custkey"),
-    "scan_manifest_df" ->
-      ("WITH b AS (SELECT min(l_orderkey) AS lo, max(l_orderkey) AS hi " +
-        "FROM lineitem), " +
-        "r AS (SELECT lo + (hi-lo+1)*4//8 AS qlo, " +
-        "lo + (hi-lo+1)*5//8 - 1 AS qhi FROM b) " +
-        "SELECT l_returnflag, count(*) AS n_rows, " +
-        "round(sum(l_quantity),2) AS sum_qty FROM lineitem, r " +
-        "WHERE l_orderkey >= qlo AND l_orderkey <= qhi " +
-        "GROUP BY l_returnflag ORDER BY l_returnflag"),
     "scan_manifest_prune" ->
       ("WITH b AS (SELECT min(l_orderkey) AS lo, max(l_orderkey) AS hi " +
         "FROM lineitem), " +

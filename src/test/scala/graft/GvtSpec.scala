@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 import graft.sources.{Gvt, GvtOps}
 
 /** Format-level tests for the [[graft.sources.Gvt]] versioned table:
-  * log replay, time travel, checkpoint-anchored resolution, optimistic
+  * log replay, time travel, checkpoint-anchored resolution (the JSON
+  * `%08d.ckpt.json` checkpoint is the one checkpoint format), optimistic
   * concurrency, copy-on-write file granularity (untouched files carry
   * over BY REFERENCE through delete/merge), manifest pruning, and
   * atomic compaction. The registry keys' end-state correctness is the
@@ -98,6 +99,14 @@ class GvtSpec extends GraftSuite {
     val ld = Paths.get(dir, Gvt.LogDir)
     assert(Files.exists(ld.resolve(f"${10}%08d.ckpt.json")),
       "no checkpoint written at version 10")
+    // one checkpoint format: the log holds commit docs and the JSON
+    // checkpoint, nothing else
+    val listing = Files.list(ld)
+    val entries = try listing.iterator().asScala.map(_.getFileName.toString).toList
+      finally listing.close()
+    assert(entries.sorted ==
+      ((0 until 12).map(v => f"$v%08d.json") :+ f"${10}%08d.ckpt.json").sorted,
+      s"unexpected log entries: ${entries.sorted}")
     // replay must anchor on the checkpoint, not version 0: deleting the
     // pre-checkpoint commit docs must not change the answer
     (0 until 10).foreach(v => Files.delete(ld.resolve(f"$v%08d.json")))
@@ -591,123 +600,6 @@ class GvtSpec extends GraftSuite {
     }
   }
 
-  test("DF manifest: snapshotDF ≡ snapshot, parquet twin written and " +
-      "anchoring, pruning parity") {
-    val dir = freshDir()
-    (0 until 12).foreach(i =>
-      Gvt.append(spark, dir, slab(i * 10, i * 10 + 10).repartition(1),
-        Seq("k")))
-    Gvt.delete(spark, dir, col("k") === 55L, Seq("k"))
-    // the parquet twin landed at the checkpoint cadence
-    val pq = Paths.get(dir, Gvt.LogDir).resolve(f"${10}%08d.ckpt.parquet")
-    assert(Files.isDirectory(pq), "no parquet checkpoint twin at v10")
-    // DF manifest ≡ driver manifest, latest and time-traveled, including
-    // rows/stats/dv fields (dv normalized: null ≡ empty)
-    def asSet(files: Seq[Gvt.GvtFile]) =
-      files.map(f => (f.path, f.rows, f.min, f.max,
-        Option(f.dv).getOrElse(Nil), f.dvRows)).toSet
-    def dfAsSet(df: DataFrame) = df.collect().map { r =>
-      (r.getString(0), r.getLong(1),
-        r.getMap[String, String](2).toMap, r.getMap[String, String](3).toMap,
-        Option(r.getSeq[String](4)).map(_.toSeq).getOrElse(Nil), r.getLong(5))
-    }.toSet
-    assert(dfAsSet(Gvt.snapshotDF(spark, dir)) == asSet(Gvt.snapshot(dir)))
-    assert(dfAsSet(Gvt.snapshotDF(spark, dir, Some(7))) ==
-      asSet(Gvt.snapshot(dir, Some(7))))
-    // anchoring is real: drop the pre-checkpoint commit docs — the DF
-    // path must resolve from the parquet twin + tail alone
-    (0 until 10).foreach(v =>
-      Files.delete(Paths.get(dir, Gvt.LogDir).resolve(f"$v%08d.json")))
-    assert(dfAsSet(Gvt.snapshotDF(spark, dir)) == asSet(Gvt.snapshot(dir)))
-    // pruning parity: same kept/total and the same rows as the driver path
-    val ranges = Seq(("k", 30.0, 49.0))
-    val (dDf, kept, total) = Gvt.readPrunedMultiDF(spark, dir, ranges)
-    val (dDrv, keptDrv, totalDrv) = Gvt.readPrunedMulti(spark, dir, ranges)
-    assert((kept, total) == (keptDrv.toLong, totalDrv.toLong),
-      s"prune counts diverge: df ($kept,$total) vs driver ($keptDrv,$totalDrv)")
-    assert(kept < total, "nothing pruned in a range-tiled table")
-    assert(sortedRows(dDf) == sortedRows(dDrv))
-  }
-
-  test("parquetOnlyCheckpoints: no JSON ckpt, both read paths correct") {
-    val dir = freshDir()
-    spark.conf.set("spark.graft.gvt.parquetOnlyCheckpoints", "true")
-    try {
-      (0 until 12).foreach(i =>
-        Gvt.append(spark, dir, slab(i, i + 1), Seq("k")))
-      val ld = Paths.get(dir, Gvt.LogDir)
-      assert(!Files.exists(ld.resolve(f"${10}%08d.ckpt.json")),
-        "JSON checkpoint written in parquet-only mode")
-      assert(Files.isDirectory(ld.resolve(f"${10}%08d.ckpt.parquet")),
-        "parquet checkpoint missing in parquet-only mode")
-      // driver path replays the longer tail; DF path anchors on parquet
-      assert(sortedRows(Gvt.read(spark, dir)) ==
-        (0L until 12L).map(k => (k, k * 10)))
-      assert(Gvt.snapshotDF(spark, dir).count() ==
-        Gvt.snapshot(dir).size.toLong)
-    } finally spark.conf.unset("spark.graft.gvt.parquetOnlyCheckpoints")
-  }
-
-  test("auto parquet-only: JSON ckpt stops once the previous one is big, stays off") {
-    val dir = freshDir()
-    val ld = Paths.get(dir, Gvt.LogDir)
-    // tiny byte threshold stands in for the 16 MiB (~8e4 entries)
-    // default — the flip logic is identical, only the scale differs
-    spark.conf.set("spark.graft.gvt.jsonCheckpointMaxBytes", "200")
-    try {
-      (0 until 22).foreach(i => Gvt.append(spark, dir, slab(i, i + 1), Seq("k")))
-      // v10: previous ckpt (v0) absent -> JSON still written
-      assert(Files.exists(ld.resolve(f"${10}%08d.ckpt.json")),
-        "fresh table must keep writing JSON checkpoints")
-      // v20: v10's JSON outgrew the threshold -> parquet twin only
-      assert(!Files.exists(ld.resolve(f"${20}%08d.ckpt.json")),
-        "JSON checkpoint written past the size threshold")
-      assert(Files.isDirectory(ld.resolve(f"${20}%08d.ckpt.parquet")))
-      // sticky: v30 sees no JSON at v20 but a twin -> stays parquet-only
-      (22 until 32).foreach(i => Gvt.append(spark, dir, slab(i, i + 1), Seq("k")))
-      assert(!Files.exists(ld.resolve(f"${30}%08d.ckpt.json")),
-        "auto parquet-only must be sticky once flipped")
-      assert(Files.isDirectory(ld.resolve(f"${30}%08d.ckpt.parquet")))
-      // both read paths stay correct across the flip
-      assert(sortedRows(Gvt.read(spark, dir)) ==
-        (0L until 32L).map(k => (k, k * 10)))
-      assert(Gvt.snapshotDF(spark, dir).count() ==
-        Gvt.snapshot(dir).size.toLong)
-    } finally spark.conf.unset("spark.graft.gvt.jsonCheckpointMaxBytes")
-  }
-
-  test("vacuum reaps pre-floor parquet checkpoint twins") {
-    val dir = freshDir()
-    (0 until 22).foreach(i => Gvt.append(spark, dir, slab(i, i + 1), Seq("k")))
-    val ld = Paths.get(dir, Gvt.LogDir)
-    assert(Files.isDirectory(ld.resolve(f"${10}%08d.ckpt.parquet")))
-    Gvt.vacuum(dir, retainFrom = 15, graceMs = 0L)
-    assert(!Files.exists(ld.resolve(f"${10}%08d.ckpt.parquet")),
-      "pre-floor parquet twin survived vacuum")
-    assert(Files.isDirectory(ld.resolve(f"${20}%08d.ckpt.parquet")),
-      "retained parquet twin deleted")
-    // and the DF path still resolves above the floor
-    assert(Gvt.snapshotDF(spark, dir).count() == 22L)
-  }
-
-  test("vacuum reaps aged leaked .tmp-pqckpt-* twins, keeps young ones") {
-    val dir = freshDir()
-    (0 until 3).foreach(i => Gvt.append(spark, dir, slab(i, i + 1), Seq("k")))
-    val ld = Paths.get(dir, Gvt.LogDir)
-    // simulate a writer that crashed between twin write and atomic move
-    val leakedAged = ld.resolve(".tmp-pqckpt-deadbeef")
-    val leakedYoung = ld.resolve(".tmp-pqckpt-young123")
-    Files.createDirectory(leakedAged)
-    Files.write(leakedAged.resolve("part-0.parquet"), Array[Byte](1, 2))
-    Files.createDirectory(leakedYoung)
-    Gvt.vacuum(dir, Gvt.latestVersion(dir), graceMs = 60000L)
-    assert(Files.exists(leakedAged) && Files.exists(leakedYoung),
-      "grace window must protect a possibly-live twin write")
-    Gvt.vacuum(dir, Gvt.latestVersion(dir), graceMs = 0L)
-    assert(!Files.exists(leakedAged), "aged leaked twin survived vacuum")
-    assert(!Files.exists(leakedYoung), "aged leaked twin survived vacuum")
-  }
-
   test("diffWithUpdates pairs churned keys into update images; no-op rewrites stay silent") {
     val dir = freshDir()
     Gvt.append(spark, dir, slab(0, 10), Seq("k"))
@@ -780,7 +672,7 @@ class GvtSpec extends GraftSuite {
     intercept[IllegalStateException] { Gvt.createBranch(spark, dir, "drops") }
   }
 
-  test("branch: linked-anchor seed resolves through a checkpointed parent; DF publish ≡ driver publish") {
+  test("branch: linked-anchor seed through a checkpointed parent") {
     val dir = freshDir()
     // 12 commits: the parent crosses CheckpointEvery, so the fork seed
     // must anchor on the parent's own checkpoint + linked tail (no
@@ -796,52 +688,30 @@ class GvtSpec extends GraftSuite {
     // branch time travel BELOW the fork works through the linked tail
     assert(sortedRows(Gvt.read(spark, b, asOf = Some(10))) ==
       (0L until 110L).map(k => (k, k * 10)))
-    // both publish regimes produce the same commit: audit on the
-    // branch (append + DV delete — a surviving path whose dv changed,
-    // the identity case the (path, dv, dvRows) key exists for)
+    // audit on the branch (append + DV delete — a surviving path whose
+    // dv changed) publishes through the linked seed
     Gvt.append(spark, b, slab(200, 210), Seq("k"))
     Gvt.deleteWhereDV(spark, b, col("k") === 5L)
-    spark.conf.set("spark.graft.gvt.publishViaDF", "true")
-    val v = try Gvt.publishBranch(spark, dir, "linked")
-      finally spark.conf.unset("spark.graft.gvt.publishViaDF")
-    val dfCommit = Gvt.commitAt(dir, v)
+    Gvt.publishBranch(spark, dir, "linked")
     val expected = ((0L until 120L) ++ (200L until 210L)).filter(_ != 5L)
     assert(sortedRows(Gvt.read(spark, dir)) == expected.map(k => (k, k * 10)))
-    // driver-path control on an identical second branch of the same fork
-    val dir2 = freshDir()
-    (0 until 12).foreach(i => Gvt.append(spark, dir2, slab(i * 10, i * 10 + 10), Seq("k")))
-    val b2 = Gvt.createBranch(spark, dir2, "linked")
-    Gvt.append(spark, b2, slab(200, 210), Seq("k"))
-    Gvt.deleteWhereDV(spark, b2, col("k") === 5L)
-    spark.conf.set("spark.graft.gvt.publishViaDF", "false")
-    val v2 = try Gvt.publishBranch(spark, dir2, "linked")
-      finally spark.conf.unset("spark.graft.gvt.publishViaDF")
-    val drvCommit = Gvt.commitAt(dir2, v2)
-    assert(dfCommit.adds.map(_.path).sorted.size == drvCommit.adds.map(_.path).sorted.size &&
-      dfCommit.removes.sorted == drvCommit.removes.sorted,
-      s"DF and driver publish disagree: ${dfCommit.adds.size}/${dfCommit.removes} vs " +
-        s"${drvCommit.adds.size}/${drvCommit.removes}")
-    assert(sortedRows(Gvt.read(spark, dir2)) == expected.map(k => (k, k * 10)))
   }
 
-  test("snapshotDF upserts re-added paths: a DV-audit publish yields no duplicate manifest rows") {
+  test("DV-audit publish re-adds a path without duplicating it") {
     val dir = freshDir()
     Gvt.append(spark, dir, slab(0, 10), Seq("k"))
     val b = Gvt.createBranch(spark, dir, "dvdup")
     Gvt.deleteWhereDV(spark, b, col("k") === 3L) // path survives, dv swaps
     // publish commits adds=[path with dv] and removes=[] — the upsert
-    // shape the DF fold must handle like the driver's LinkedHashMap.put
+    // shape resolution must handle by path
     Gvt.publishBranch(spark, dir, "dvdup")
     Gvt.dropBranch(dir, "dvdup")
-    val m = Gvt.snapshotDF(spark, dir)
-    assert(m.count() == Gvt.snapshot(dir).size.toLong,
-      "DF manifest diverged from the driver manifest")
-    assert(m.groupBy("path").count().filter(col("count") > 1).count() == 0,
-      "duplicate manifest row after DV re-add")
-    // the DF-path read must not resurrect the DV-deleted row through a
+    val paths = Gvt.snapshot(dir).map(_.path)
+    assert(paths.distinct == paths, s"duplicate manifest path after DV re-add: $paths")
+    // the pruned read must not resurrect the DV-deleted row through a
     // dv-less duplicate entry
-    val (df, _, _) = Gvt.readPrunedMultiDF(spark, dir, Seq(("k", 0.0, 1e9)))
-    assert(df.count() == 9L, "DF-path read resurrected a DV-deleted row")
+    val (df, _, _) = Gvt.readPrunedMulti(spark, dir, Seq(("k", 0.0, 1e9)))
+    assert(df.count() == 9L, "pruned read resurrected a DV-deleted row")
   }
 
   test("re-publishing a stale branch: rewrite branches abort, append-only ones stay state-neutral") {
@@ -861,8 +731,8 @@ class GvtSpec extends GraftSuite {
     Gvt.dropBranch(dir, "stale")
     // an APPEND-ONLY stale branch re-publishes (rebase is legal), but
     // its adds re-add live (path, dv) entries with no removes — the
-    // log's upsert contract must keep BOTH manifest paths duplicate-
-    // free and the state unchanged (one junk commit aside)
+    // log's upsert contract must keep the manifest duplicate-free and
+    // the state unchanged (one junk commit aside)
     val b2 = Gvt.createBranch(spark, dir, "stale2")
     Gvt.append(spark, b2, slab(200, 210), Seq("k"))
     Gvt.publishBranch(spark, dir, "stale2")
@@ -873,10 +743,6 @@ class GvtSpec extends GraftSuite {
     Gvt.publishBranch(spark, dir, "stale2")
     assert(sortedRows(Gvt.read(spark, dir)) == rows, "re-publish changed state")
     assert(manifestKey() == manifest)
-    val m = Gvt.snapshotDF(spark, dir)
-    assert(m.count() == manifest.size.toLong &&
-      m.groupBy("path").count().filter(col("count") > 1).count() == 0,
-      "re-publish duplicated manifest rows on the DF path")
     Gvt.dropBranch(dir, "stale2")
   }
 
@@ -934,25 +800,6 @@ class GvtSpec extends GraftSuite {
     Gvt.publishBranch(spark, dir, "late")
     assert(sortedRows(Gvt.read(spark, dir)) ==
       ((0L until 20L) ++ (100L until 110L)).map(k => (k, k * 10)))
-  }
-
-  test("auto parquet-only survives a vacuum that deletes the cadence-aligned checkpoint") {
-    val dir = freshDir()
-    spark.conf.set("spark.graft.gvt.jsonCheckpointMaxBytes", "1")
-    try {
-      (0 until 25).foreach(i =>
-        Gvt.append(spark, dir, slab(i * 10, i * 10 + 10), Seq("k")))
-      // v20 already flipped parquet-only (v10's JSON outgrew 1 byte)
-      assert(!Files.exists(Paths.get(dir, Gvt.LogDir, f"${20}%08d.ckpt.json")))
-      Gvt.vacuum(dir, 22, graceMs = 0L) // deletes docs < 22, JSON ckpt at 22
-      (25 until 31).foreach(i =>
-        Gvt.append(spark, dir, slab(i * 10, i * 10 + 10), Seq("k")))
-      // v30's probe must find the floor checkpoint (newest-≤ scan), not
-      // look at exactly v20 and fall back onto the driver JSON path
-      assert(!Files.exists(Paths.get(dir, Gvt.LogDir, f"${30}%08d.ckpt.json")),
-        "big table flipped back to the driver JSON checkpoint after vacuum")
-      assert(Files.isDirectory(Paths.get(dir, Gvt.LogDir, f"${30}%08d.ckpt.parquet")))
-    } finally spark.conf.unset("spark.graft.gvt.jsonCheckpointMaxBytes")
   }
 
   test("branch: DV audit publishes vectors; vacuum pins live branches, reaps dropped ones") {

@@ -191,9 +191,6 @@ class SurveyCoverageSpec extends GraftSuite {
     // round-8 third wave: TIMESTAMP AS OF time travel (strictly-monotonic
     // commit timestamps + O(log tail) binary-search resolution)
     "scan_time_travel_ts",
-    // round-9: the manifest as a DATAFRAME — parquet-checkpoint snapshot
-    // resolution + zone-map pruning as Spark jobs (the ≥10⁵-file regime)
-    "scan_manifest_df",
     // round-9: cost-based MV selection — cheapest covering candidate
     // view wins by actual stats bytes
     "plan_mv_select",
