@@ -157,7 +157,7 @@ object DevGvtConcurrent {
       case "wap" =>
         val writer = args(2).toInt
         if (writer == 0) {
-          val b = Gvt.createBranch(spark, table, "drop")
+          val b = Gvt.createBranch(table, "drop")
           (0 until 2).foreach { i =>
             Gvt.append(spark, b,
               spark.range(20000L + i * 1000L, 20000L + (i + 1) * 1000L)
@@ -468,8 +468,8 @@ object DevGvtConcurrent {
         // single-JVM; the cross-JVM question is the publish+doc race).
         // The audit runs ON the staged branches (only the pre-audited
         // 900-row slice is staged; the check demands exactly it).
-        val b1 = Gvt.createBranch(spark, t1, "xwap")
-        val b2 = Gvt.createBranch(spark, t2, "xwap")
+        val b1 = Gvt.createBranch(t1, "xwap")
+        val b2 = Gvt.createBranch(t2, "xwap")
         Gvt.append(spark, b1, spark.range(100000L, 100900L).toDF("k")
           .withColumn("tag", lit(2)), Seq("k"))
         Gvt.append(spark, b2, spark.range(100000L, 100200L).toDF("k")

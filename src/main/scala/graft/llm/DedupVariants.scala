@@ -98,21 +98,6 @@ object DedupVariants {
 
   private val NgramTau = 0.6
 
-  /** The PPJoin candidate stage of [[ngramJaccard]] — (candidate pairs,
-    * full shingle sets) — extracted so the round-5 scaling experiment
-    * measures the ACTUAL candidate volume the operator generates (one
-    * definition, no dev-tool drift), not a re-derivation of it.
-    *
-    * Prefix filtering guarantees EXACT recall at the given τ: any pair
-    * with J >= τ must share a token within each side's first
-    * |X| - ceil(τ·|X|) + 1 tokens under the global hash order, so the
-    * candidate set is a superset of the true pair set BY CONSTRUCTION —
-    * not probabilistically, like LSH banding. τ is a parameter since r7:
-    * llm_dedup_near routes through this stage at τ=0.5 so its
-    * exhaustive-jaccard oracle holds on ANY corpus, not just corpora
-    * whose true pairs sit above the banding's safe band (the r6 fixture
-    * regeneration proved the corpus can change under us).
-    */
   /** Per-corpus memo of the auto prefix-order decision — the gate job
     * runs once per (JVM, corpus), not once per key that routes through
     * [[ngramCandidates]]. */
@@ -164,6 +149,21 @@ object DedupVariants {
     })
   }
 
+  /** The PPJoin candidate stage of [[ngramJaccard]] — (candidate pairs,
+    * full shingle sets) — extracted so the round-5 scaling experiment
+    * measures the ACTUAL candidate volume the operator generates (one
+    * definition, no dev-tool drift), not a re-derivation of it.
+    *
+    * Prefix filtering guarantees EXACT recall at the given τ: any pair
+    * with J >= τ must share a token within each side's first
+    * |X| - ceil(τ·|X|) + 1 tokens under the global hash order, so the
+    * candidate set is a superset of the true pair set BY CONSTRUCTION —
+    * not probabilistically, like LSH banding. τ is a parameter since r7:
+    * llm_dedup_near routes through this stage at τ=0.5 so its
+    * exhaustive-jaccard oracle holds on ANY corpus, not just corpora
+    * whose true pairs sit above the banding's safe band (the r6 fixture
+    * regeneration proved the corpus can change under us).
+    */
   private[graft] def ngramCandidates(
       spark: SparkSession, dir: String,
       tau: Double = NgramTau): (DataFrame, DataFrame) = {

@@ -8,9 +8,13 @@ import scala.collection.mutable
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StringType, StructType}
 
 /** Graft Versioned Table (GVT) — a minimal lakehouse table format:
   * immutable parquet data files plus an append-only JSON commit log,
@@ -51,12 +55,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * create-if-absent; on S3 it would go through a log-store /
   * conditional-put instead.
   *
-  * Reads go through the NATIVE parquet scan (`spark.read.parquet` on
-  * the snapshot's file list): vectorized reader, predicate pushdown,
-  * column pruning and whole-stage codegen all apply — a custom DSv2
-  * `PartitionReader` would forfeit vectorization for no semantic gain.
-  * [[readPruned]] additionally prunes FILES from the manifest stats
-  * before Spark ever sees them (zone-map skipping at planning time).
+  * Reads go through the NATIVE parquet scan: a `HadoopFsRelation` whose
+  * file index is the manifest-backed [[GvtFileIndex]] and whose schema
+  * is the commit log's pin ([[scanFiles]]), so building a DataFrame
+  * lists no directory and reads no footer. Vectorized reader, predicate
+  * pushdown, column pruning and whole-stage codegen all apply — a
+  * custom DSv2 `PartitionReader` would forfeit vectorization for no
+  * semantic gain. [[readPruned]] additionally prunes FILES from the
+  * manifest stats before Spark ever sees them (zone-map skipping at
+  * planning time).
   *
   * Scale design notes:
   *  - [[merge]] bounds rewrite I/O to files that actually contain a
@@ -98,14 +105,6 @@ object Gvt {
   /** Normalized DV list (old log docs deserialize `dv` as null). */
   private def dvOf(f: GvtFile): Seq[String] = Option(f.dv).getOrElse(Nil)
 
-  /** `txn` is an optional idempotence token ([[appendTxn]]): null on
-    * plain commits and on every pre-existing log doc (Jackson leaves
-    * the missing field null on read). `ts` is the commit's publish
-    * timestamp (epoch millis), stamped by [[tryPublish]] as
-    * `max(clock, previous ts + 1)` so it is STRICTLY increasing even
-    * when commits land inside one millisecond — [[versionAt]] needs the
-    * strict order to resolve a timestamp to exactly one version. 0 on
-    * pre-timestamp log docs (Jackson's missing-primitive default). */
   /** COLUMN-MAPPING state (rename/drop without rewriting history —
     * the Delta column-mapping shape): data files always store columns
     * under their PHYSICAL names (the name at first write), and this
@@ -189,10 +188,11 @@ object Gvt {
       // valid: the normal DDL order declares checks BEFORE the first
       // load, and read()'s nonEmpty require must not forbid it (r11
       // advisor finding) — the in-write gate enforces from load one
-      val live = if (v == 0) Nil else snapshot(dir)
+      val (live, _, pin) =
+        if (v == 0) (Nil, state, None) else resolveManifest(dir, None)
       if (live.nonEmpty) {
         val bad = applyMapping(readFiles(spark, dir, live,
-          !state.mappingEmpty), state)
+          schemaFor(spark, dir, live, pin)), state)
           .filter(!coalesce(expr(predicate), lit(true))).limit(1).count()
         require(bad == 0,
           s"GVT at $dir has existing rows violating '$predicate' — " +
@@ -288,7 +288,16 @@ object Gvt {
     -1 // unreachable
   }
 
-  /** `dataSchema` PINS the physical parquet schema of the files this
+  /** `txn` is an optional idempotence token ([[appendTxn]]): null on
+    * plain commits and on every pre-existing log doc (Jackson leaves
+    * the missing field null on read). `ts` is the commit's publish
+    * timestamp (epoch millis), stamped by [[tryPublish]] as
+    * `max(clock, previous ts + 1)` so it is STRICTLY increasing even
+    * when commits land inside one millisecond — [[versionAt]] needs the
+    * strict order to resolve a timestamp to exactly one version. 0 on
+    * pre-timestamp log docs (Jackson's missing-primitive default).
+    *
+    * `dataSchema` PINS the physical parquet schema of the files this
     * commit ADDED (`StructType.json`) — a per-commit immutable fact, so
     * it folds race-free: the table's unified schema at any version is
     * the MERGE of the checkpoint's pin plus the tail commits' pins,
@@ -606,13 +615,14 @@ object Gvt {
     * The schema pin is `None` (unresolvable) whenever any adds-bearing
     * doc in the resolution path predates the pin, or two pins disagree
     * on a column's type — callers then fall back to the footer merge,
-    * so the pin is an optimization that can never be wrong. */
-  /** Retry wrapper for the anchor-plus-tail walk: a CONCURRENT VACUUM
-    * unlinking pre-floor docs can make a racing reader's directory
-    * listing MISS unrelated entries (POSIX readdir gives no snapshot
-    * guarantee while entries are being removed), so the walk can
-    * anchor below the vacuum's fresh floor checkpoint and then chase
-    * just-deleted commit docs into NoSuchFileException. The
+    * so the pin is an optimization that can never be wrong.
+    *
+    * The walk retries: a CONCURRENT VACUUM unlinking pre-floor docs
+    * can make a racing reader's directory listing MISS unrelated
+    * entries (POSIX readdir gives no snapshot guarantee while entries
+    * are being removed), so the walk can anchor below the vacuum's
+    * fresh floor checkpoint and then chase just-deleted commit docs
+    * into NoSuchFileException. The
     * post-vacuum directory is complete and consistent — re-list and
     * re-resolve. Bounded: a miss that persists past the retries is a
     * real hole (a vacuumed version someone still references) and
@@ -642,6 +652,10 @@ object Gvt {
     require(last >= floor,
       s"GVT at $dir: version $last was vacuumed (floor $floor) — " +
         "time travel below the retention floor is gone by design")
+    // a LATEST head that vanished was unlinked by a vacuum at a newer
+    // head after the listing: retryable, like a readdir miss
+    if (asOf.isEmpty && !Files.exists(commitPath(dir, last)))
+      throw new java.nio.file.NoSuchFileException(commitPath(dir, last).toString)
     require(Files.exists(commitPath(dir, last)),
       s"GVT at $dir has no version $last")
     val ckptVersion = newestCkpt(dir, last)
@@ -714,9 +728,10 @@ object Gvt {
 
   /** The unified PHYSICAL schema at `asOf`, from manifest metadata
     * alone (no footer reads) — None when any doc in the resolution
-    * predates the r12 pin. The DSv2 connector and [[logicalColumns]]
-    * consume it; [[read]] keeps parquet's own footer-merge semantics
-    * (the two agree whenever the pin resolves — GvtDsv2Spec). */
+    * predates the r12 pin. Every DataFrame this object builds over
+    * table data, and the DSv2 connector's, takes its schema from this
+    * pin through [[schemaFor]], so [[read]] and the connector serve the
+    * same unified schema. */
   def pinnedSchema(dir: String,
       asOf: Option[Int] = None): Option[StructType] =
     resolveManifest(dir, asOf)._3
@@ -861,19 +876,25 @@ object Gvt {
     -1 // unreachable
   }
 
-  /** Current logical column set: the unified physical schema (the
-    * metadata pin when it resolves — no footer read; the merged footer
-    * schema on pre-pin tables), mapped. */
+  /** Current logical column set: the unified physical schema at the
+    * head ([[schemaFor]]), mapped. */
   private def logicalColumns(spark: SparkSession, dir: String,
       state: GvtSchemaState): Seq[String] = {
-    val physical = pinnedSchema(dir).map(_.fieldNames.toSeq).getOrElse {
-      val files = snapshot(dir)
+    val (files, _, pin) = resolveManifest(dir, None)
+    schemaFor(spark, dir, files, pin).fieldNames.toSeq.flatMap(state.logicalOf)
+  }
+
+  /** The physical schema a read of `files` gets: the manifest pin when
+    * it resolves, so no footer is read. Only on a pre-pin log (`pin` is
+    * None) does it merge the footers of `files` — the one footer-inference
+    * read left, which launches Spark's schema-merge job. */
+  private[sources] def schemaFor(spark: SparkSession, dir: String,
+      files: Seq[GvtFile], pin: Option[StructType]): StructType =
+    pin.filter(_.nonEmpty).getOrElse {
       require(files.nonEmpty, s"GVT at $dir is empty")
       spark.read.option("mergeSchema", "true")
-        .parquet(files.map(f => s"$dir/${f.path}"): _*).columns.toSeq
+        .parquet(files.map(f => s"$dir/${f.path}"): _*).schema
     }
-    physical.flatMap(state.logicalOf)
-  }
 
   /** A schema change may not orphan a CHECK's column reference (the
     * Delta contract: drop the constraint first or restate it). Word
@@ -934,20 +955,21 @@ object Gvt {
   }
 
   /** Snapshot read — time travel via `asOf`. Native vectorized parquet
-    * scan over the manifest's file list; no directory listing.
-    * `mergeSchema = true` unifies schemas across commits (schema
-    * evolution: an added column back-fills null in pre-evolution files
-    * — merge-on-read, no rewrite of history; at real scale pin the
-    * unified schema in table metadata instead of re-merging footers). */
-  def read(spark: SparkSession, dir: String, asOf: Option[Int] = None,
-      mergeSchema: Boolean = false): DataFrame = {
-    val (files, state, _) = resolveManifest(dir, asOf)
+    * scan over the manifest's file list with the version's UNIFIED
+    * schema from the commit log's pin ([[schemaFor]]): building the
+    * DataFrame lists no directory and reads no footer. Schema evolution
+    * is merge-on-read — a column added by a later commit back-fills
+    * null in older files, no history is rewritten — and the result is
+    * the schema the DSv2 connector serves for the same version. */
+  def read(spark: SparkSession, dir: String,
+      asOf: Option[Int] = None): DataFrame = {
+    val (files, state, pin) = resolveManifest(dir, asOf)
     require(files.nonEmpty, s"GVT at $dir is empty at version $asOf")
     // physical scan, logical face: files store stable physical names;
     // the version's OWN mapping state aliases them (time travel below a
     // rename shows the old name — history unrewritten)
-    applyMapping(readFiles(spark, dir, files,
-      mergeSchema || !state.mappingEmpty), state)
+    applyMapping(
+      readFiles(spark, dir, files, schemaFor(spark, dir, files, pin)), state)
   }
 
   /** `data/cN-uuid/part-x.parquet` from `_metadata.file_path`: the last
@@ -965,33 +987,84 @@ object Gvt {
     * broadcasts it in the common case; either way the join is keyed and
     * distributed — no driver materialization. */
   private def readFilesWithId(spark: SparkSession, dir: String,
-      files: Seq[GvtFile], mergeSchema: Boolean = false): DataFrame = {
-    val r = if (mergeSchema) spark.read.option("mergeSchema", "true")
-            else spark.read
-    val base = r.parquet(files.map(f => s"$dir/${f.path}"): _*)
+      files: Seq[GvtFile], schema: StructType): DataFrame = {
+    val base = scanFiles(spark, dir, files, schema)
       .select(col("*"), relFileCol.as("_gvt_file"),
         col("_metadata.row_index").as("_gvt_pos"))
     val dvDirs = files.flatMap(dvOf).distinct
     if (dvDirs.isEmpty) base
-    else {
-      val dv = spark.read.parquet(dvDirs.map(d => s"$dir/$d"): _*)
-      base.join(dv, Seq("_gvt_file", "_gvt_pos"), "left_anti")
-    }
+    else base.join(readDv(spark, dir, dvDirs),
+      Seq("_gvt_file", "_gvt_pos"), "left_anti")
   }
 
   /** DV-aware snapshot-subset read (every internal rewrite MUST come
     * through here — reading a file without its vectors would resurrect
-    * deleted rows into the rewrite). */
+    * deleted rows into the rewrite). `schema` is the physical schema of
+    * the result, normally the version's pin ([[schemaFor]]): files
+    * lacking one of its columns read it as null. */
   private def readFiles(spark: SparkSession, dir: String,
-      files: Seq[GvtFile], mergeSchema: Boolean = false): DataFrame =
-    if (files.forall(f => dvOf(f).isEmpty)) {
+      files: Seq[GvtFile], schema: StructType): DataFrame =
+    if (files.forall(f => dvOf(f).isEmpty))
       // fast path: no vectors anywhere — plain vectorized scan, no
       // metadata columns, no join in the plan
-      val r = if (mergeSchema) spark.read.option("mergeSchema", "true")
-              else spark.read
-      r.parquet(files.map(f => s"$dir/${f.path}"): _*)
-    } else readFilesWithId(spark, dir, files, mergeSchema)
+      scanFiles(spark, dir, files, schema)
+    else readFilesWithId(spark, dir, files, schema)
       .drop("_gvt_file", "_gvt_pos")
+
+  /** A parquet scan of `files` under `schema`: a `HadoopFsRelation`
+    * over the manifest-backed [[GvtFileIndex]], so building it lists no
+    * directory and infers no schema — no Spark job runs until an action.
+    * Empty `files` give an empty DataFrame of that schema. */
+  private def scanFiles(spark: SparkSession, dir: String,
+      files: Seq[GvtFile], schema: StructType): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new GvtFileIndex(spark, dir, files, schema), new StructType(), schema,
+      None, new ParquetFileFormat, Map.empty)(spark))
+
+  /** The parquet part files under the table-relative dir `sub`, as
+    * stat-less manifest entries sized by one local listing — how a
+    * commit's freshly written files and the DV sidecars are scanned
+    * without Spark's listing. */
+  private def partFiles(dir: String, sub: String): Seq[GvtFile] = {
+    val it = Files.list(Paths.get(dir, sub))
+    try it.iterator().asScala()
+      .filter(_.getFileName.toString.matches("[^._].*\\.parquet"))
+      .map(p => GvtFile(s"$sub/${p.getFileName}", 0L, Map.empty, Map.empty,
+        bytes = Files.size(p)))
+      .toSeq.sortBy(_.path)
+    finally it.close()
+  }
+
+  /** Row identities of a deletion-vector sidecar. */
+  private val DvSchema = new StructType()
+    .add("_gvt_file", StringType).add("_gvt_pos", LongType)
+
+  /** The (`_gvt_file`, `_gvt_pos`) rows of the sidecar dirs `dvDirs`. */
+  private[sources] def readDv(spark: SparkSession, dir: String,
+      dvDirs: Seq[String]): DataFrame =
+    scanFiles(spark, dir, dvDirs.flatMap(partFiles(dir, _)), DvSchema)
+
+  /** The schema a `spark.read.parquet` of the file at `path` infers,
+    * from its footer alone, read on the driver: Spark's own footer
+    * decoding, made nullable at every level as a file read is. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val reader = ParquetFileReader.open(
+      spark.sessionState.newHadoopConf(), p)
+    val footer = try reader.getFooter finally reader.close()
+    asNullable(ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      .asInstanceOf[StructType]
+  }
+
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), true)
+    case m: MapType =>
+      MapType(asNullable(m.keyType), asNullable(m.valueType), true)
+    case other => other
+  }
 
   // --------------------------------------------------------------------
   // ZONE-MAP STAT COMPARISON — one rule shared by every prune path (the
@@ -1112,23 +1185,28 @@ object Gvt {
     // stats key PHYSICAL names; the survivor rule is the SHARED
     // [[zSurvives]] (Double round-trips through toString exactly, so
     // the numeric semantics are unchanged)
-    val (files, state, _) = resolveManifest(dir, asOf)
+    val (files, state, pin) = resolveManifest(dir, asOf)
     val bounds = ranges.map { case (column, lo, hi) =>
       ZBound(state.physicalOf(column),
         Some(lo.toString), Some(hi.toString), ZKind.Num)
     }
     val kept = files.filter(f => zSurvives(f, bounds))
-    val df =
-      if (kept.isEmpty)
-        // all files pruned: preserve schema from any file, return empty
-        applyMapping(
-          spark.read.parquet(s"$dir/${files.head.path}").limit(0), state)
-      else applyMapping(readFiles(spark, dir, kept, !state.mappingEmpty), state)
+    // all files pruned: an empty scan of the same schema
+    val schema = schemaFor(spark, dir,
+      if (kept.isEmpty) files.take(1) else kept, pin)
+    val df = applyMapping(readFiles(spark, dir, kept, schema), state)
     val filtered = ranges.foldLeft(df) { case (d, (column, lo, hi)) =>
       d.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
     }
     (filtered, kept.size, files.size)
   }
+
+  /** A staged commit directory: the manifest entries (bytes stamped
+    * from one local listing — commit-churn-bounded, never table size)
+    * plus the written files' physical parquet schema, which the commit
+    * doc pins so readers resolve the unified schema from metadata
+    * alone. */
+  private final case class Written(adds: Seq[GvtFile], dataSchema: String)
 
   /** Write `df` as a new commit directory and return its [[GvtFile]]
     * entries (stats for `statsCols` via one distributed per-file agg).
@@ -1142,13 +1220,6 @@ object Gvt {
     * the write path keeps the manifest's min/max tight through appends,
     * merges, and deletes alike; the extra exchange is bounded by the
     * commit's own data, never the table. */
-  /** A staged commit directory: the manifest entries (bytes stamped
-    * from one local stat each — commit-churn-bounded, never table
-    * size) plus the written files' physical parquet schema, which the
-    * commit doc pins so readers resolve the unified schema from
-    * metadata alone. */
-  private final case class Written(adds: Seq[GvtFile], dataSchema: String)
-
   private def writeData(spark: SparkSession, dir: String, df: DataFrame,
       statsCols: Seq[String], version: Int,
       cluster: Boolean = true): Written = {
@@ -1160,7 +1231,13 @@ object Gvt {
           .sortWithinPartitions(statsCols.map(col): _*)
       else df
     shaped.write.parquet(cdir)
-    val written = spark.read.parquet(cdir)
+    // the read-back lists `cdir` locally and takes the physical schema
+    // from one footer on the driver: every part file of one write
+    // carries the same schema, so no Spark job infers it
+    val parts = partFiles(dir, sub)
+    val schema = footerSchema(spark, s"$dir/${parts.head.path}")
+    val bytes = parts.map(f => f.path -> f.bytes).toMap
+    val written = scanFiles(spark, dir, parts, schema)
     val fname = element_at(split(input_file_name(), "/"), -1).as("_gvt_fname")
     // TIMESTAMP stats are recorded as UTC EPOCH MICROS (r14): a
     // TimestampType value IS an instant, and `cast(string)` rendered
@@ -1176,7 +1253,7 @@ object Gvt {
     // already and stays string-rendered; no zone stamp is needed for
     // anything written from here on ([[GvtFile.tz]] remains for old
     // manifests).
-    def isTsType(c: String) = written.schema.fields.exists(f =>
+    def isTsType(c: String) = schema.fields.exists(f =>
       f.name == c &&
         f.dataType == org.apache.spark.sql.types.TimestampType)
     val aggs = count(lit(1)).as("_gvt_rows") +:
@@ -1197,10 +1274,10 @@ object Gvt {
             Option(r.getString(2 + 2 * i)).map(c -> _) }.toMap,
           statsCols.zipWithIndex.flatMap { case (c, i) =>
             Option(r.getString(3 + 2 * i)).map(c -> _) }.toMap,
-          bytes = Files.size(Paths.get(cdir, r.getString(0))))
+          bytes = bytes(s"$sub/${r.getString(0)}"))
       }
       .sortBy(_.path)
-    Written(adds, written.schema.json)
+    Written(adds, schema.json)
   }
 
   /** Write the checkpoint of version `v` (idempotent: a racing writer's
@@ -1313,8 +1390,7 @@ object Gvt {
         checks = if (notNull.isEmpty) null else notNull,
         stats = if (statsCols.isEmpty) null else statsCols)
     if (!tryPublish(dir, GvtCommit(0, "create", Nil, Nil, schema = state,
-        dataSchema = StructType(
-          schema.fields.map(_.copy(nullable = true))).json), spark))
+        dataSchema = asNullable(schema).json), spark))
       throw new IllegalStateException(s"GVT at $dir already exists")
     0
   }
@@ -1358,7 +1434,7 @@ object Gvt {
       // state snapshot — if it declared a check our in-write gate never
       // saw, the staged files must pass it before we may land (r11
       // review finding: the addCheck/append TOCTOU)
-      validateLateChecks(spark, dir, w.adds, state)
+      validateLateChecks(spark, dir, w, state)
     }
     v
   }
@@ -1368,13 +1444,14 @@ object Gvt {
     * [[appendTxn]]. Throws instead of committing bad rows; the staged
     * files become orphans (vacuum reaps them). */
   private def validateLateChecks(spark: SparkSession, dir: String,
-      adds: Seq[GvtFile], snapshotState: GvtSchemaState): Unit = {
+      staged: Written, snapshotState: GvtSchemaState): Unit = {
     val now = mappingAt(dir)
     val late = now.checkMap.toSet -- snapshotState.checkMap.toSet
     if (late.nonEmpty) {
-      val staged = applyMapping(readFiles(spark, dir, adds), now)
+      val rows = applyMapping(readFiles(spark, dir, staged.adds,
+        DataType.fromJson(staged.dataSchema).asInstanceOf[StructType]), now)
       late.foreach { case (name, pred) =>
-        require(staged.filter(!coalesce(expr(pred), lit(true)))
+        require(rows.filter(!coalesce(expr(pred), lit(true)))
           .limit(1).count() == 0,
           s"GVT at $dir: check '$name' ($pred) was declared while this " +
             "append was in flight and its rows violate it — nothing " +
@@ -1402,6 +1479,14 @@ object Gvt {
       Files.readAllBytes(commitPath(dir, v)), classOf[GvtCommit]))
   }
 
+  /** The committed version carrying `txnId`, if any — the lookup a
+    * RETRIED multi-table transaction needs to re-pin a table whose
+    * append already landed before the crash ([[GvtTxn.commitIdempotent]]:
+    * appendTxn returns None on the dup, this recovers the version to
+    * pin). Same forgetting horizon as [[appendTxn]]. */
+  private[sources] def versionOfTxn(dir: String, txnId: String): Option[Int] =
+    listCommits(dir).find(_.txn == txnId).map(_.version)
+
   /** IDEMPOTENT append — the exactly-once streaming-sink primitive: the
     * commit doc carries `txnId`, and a batch whose txnId already appears
     * in the log is skipped (returns None). A foreachBatch sink writing
@@ -1420,14 +1505,6 @@ object Gvt {
     * than the retention floor are forgotten with their data — retention
     * must exceed the source's redelivery horizon, same contract as any
     * log-truncating transactional sink. */
-  /** The committed version carrying `txnId`, if any — the lookup a
-    * RETRIED multi-table transaction needs to re-pin a table whose
-    * append already landed before the crash ([[GvtTxn.commitIdempotent]]:
-    * appendTxn returns None on the dup, this recovers the version to
-    * pin). Same forgetting horizon as [[appendTxn]]. */
-  private[sources] def versionOfTxn(dir: String, txnId: String): Option[Int] =
-    listCommits(dir).find(_.txn == txnId).map(_.version)
-
   def appendTxn(spark: SparkSession, dir: String, df: DataFrame,
       statsCols: Seq[String], txnId: String): Option[Int] = {
     require(txnId != null && txnId.nonEmpty, "appendTxn needs a txn id")
@@ -1449,32 +1526,19 @@ object Gvt {
       v = latestVersion(dir) + 1
       // same TOCTOU gate as append: a check declared since our state
       // snapshot must pass against the staged files before we land
-      validateLateChecks(spark, dir, w.adds, txnState)
+      validateLateChecks(spark, dir, w, txnState)
     }
     None // unreachable
   }
 
-  /** MERGE (upsert): rows of `source` whose `key` matches an existing
-    * row REPLACE it; the rest are inserts. Copy-on-write at file
-    * granularity — only files that actually contain a matched key are
-    * rewritten:
-    *   1. manifest prune: drop files whose [min,max] on `key` misses
-    *      the source's key range entirely (metadata-only);
-    *   2. exact probe: scan ONLY the key column of surviving files,
-    *      semi-join with source keys, collect the distinct file names
-    *      that hit (column-pruned — at 100 TB this reads one column of
-    *      a pruned subset, not the table);
-    *   3. rewrite: touched rows anti-joined on key (drop the matched
-    *      old versions) unioned with ALL source rows, written as new
-    *      files; untouched files carry over by reference.
-    * Aborts (throws) on concurrent commit — the read set is stale. */
   /** Files of `files` that contain at least one key from `srcKeys`:
     * manifest-range prune (metadata-only), then an exact column-pruned
     * probe — scan ONLY the key column of surviving candidates,
     * semi-join with the source keys, collect the distinct FILE NAMES
     * that hit (a file-count-bounded metadata collect, never data). */
   private def filesContaining(spark: SparkSession, dir: String,
-      files: Seq[GvtFile], srcKeys: DataFrame, key: String): Seq[GvtFile] = {
+      files: Seq[GvtFile], pin: Option[StructType], srcKeys: DataFrame,
+      key: String): Seq[GvtFile] = {
     val bounds = srcKeys.agg(min(col(key)).cast("string"),
       max(col(key)).cast("string")).head
     val (srcLo, srcHi) = (bounds.getString(0), bounds.getString(1))
@@ -1505,7 +1569,8 @@ object Gvt {
         // DV-aware probe: a key whose only occurrences are DV-deleted
         // must not drag its file into the rewrite. Still column-pruned —
         // the scan reads the key column plus constant-cost metadata.
-        val probe = readFilesWithId(spark, dir, candidates)
+        val probe = readFilesWithId(spark, dir, candidates,
+          schemaFor(spark, dir, candidates, pin))
           .select(col(key), col("_gvt_file"))
         probe.join(srcKeys, Seq(key), "left_semi")
           .select("_gvt_file").distinct().collect()
@@ -1539,11 +1604,25 @@ object Gvt {
     -1 // unreachable
   }
 
+  /** MERGE (upsert): rows of `source` whose `key` matches an existing
+    * row REPLACE it; the rest are inserts. Copy-on-write at file
+    * granularity — only files that actually contain a matched key are
+    * rewritten:
+    *   1. manifest prune: drop files whose [min,max] on `key` misses
+    *      the source's key range entirely (metadata-only);
+    *   2. exact probe: scan ONLY the key column of surviving files,
+    *      semi-join with source keys, collect the distinct file names
+    *      that hit (column-pruned — at 100 TB this reads one column of
+    *      a pruned subset, not the table);
+    *   3. rewrite: touched rows anti-joined on key (drop the matched
+    *      old versions) unioned with ALL source rows, written as new
+    *      files; untouched files carry over by reference.
+    * Aborts (throws) on concurrent commit — the read set is stale. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       key: String, statsCols: Seq[String],
       txn: String = null): Int = rmwRetry(spark) {
     val base = latestVersion(dir)
-    val (files, state, _) = resolveManifest(dir, Some(base))
+    val (files, state, pin) = resolveManifest(dir, Some(base))
     if (source.isEmpty) return base // no-op: nothing to upsert
     // MAPPING-AWARE (logical in, logical ops, physical out): the source
     // and the key speak logical names; new rows must pass the table's
@@ -1574,19 +1653,18 @@ object Gvt {
         "be unique in the source (stricter than SQL MERGE cardinality); " +
         "deduplicate the source first")
       val srcKeys = keyCounts.select(col(key))
-      val touchedFiles = filesContaining(spark, dir, files,
+      val touchedFiles = filesContaining(spark, dir, files, pin,
         srcKeys.withColumnRenamed(key, keyP), keyP)
       val rewritten =
         if (touchedFiles.isEmpty) source1
         else {
-          // REWRITE reads always merge footers (bounded by the touched
-          // set, never the table): schema-evolved files sampled wrong
-          // would silently drop an evolved column from the survivors
-          // (r11 second-review finding — pre-existing for unmapped
-          // evolved tables). Production pins the unified schema in table
-          // metadata instead of re-merging.
-          val touchedDf = applyMapping(
-            readFiles(spark, dir, touchedFiles, mergeSchema = true), state)
+          // REWRITE reads take the table's unified schema (the pin;
+          // the touched files' merged footers on a pre-pin log): a
+          // schema-evolved file read under one file's schema would
+          // silently drop an evolved column from the survivors (r11
+          // second-review finding)
+          val touchedDf = applyMapping(readFiles(spark, dir, touchedFiles,
+            schemaFor(spark, dir, touchedFiles, pin)), state)
           // restore the file schema order (using-join puts the key first)
           touchedDf.join(srcKeys, Seq(key), "left_anti")
             .select(touchedDf.columns.map(col): _*)
@@ -1614,16 +1692,16 @@ object Gvt {
       key: String, statsCols: Seq[String],
       txn: String = null): Int = rmwRetry(spark) {
     val base = latestVersion(dir)
-    val (files, state, _) = resolveManifest(dir, Some(base))
+    val (files, state, pin) = resolveManifest(dir, Some(base))
     if (keys.isEmpty) return base
     val keyP = state.physicalOf(key)
     val srcKeys = keys.select(col(key)).distinct()
-    val touchedFiles = filesContaining(spark, dir, files,
+    val touchedFiles = filesContaining(spark, dir, files, pin,
       srcKeys.withColumnRenamed(key, keyP), keyP)
     if (touchedFiles.isEmpty) return base
-    // rewrite read: always merge footers (see merge)
-    val touchedDf = applyMapping(
-      readFiles(spark, dir, touchedFiles, mergeSchema = true), state)
+    // rewrite read: the table's unified schema (see merge)
+    val touchedDf = applyMapping(readFiles(spark, dir, touchedFiles,
+      schemaFor(spark, dir, touchedFiles, pin)), state)
     // using-join reorders the key column first; restore the file schema
     // order so rewritten files stay column-order-stable
     val kept = touchedDf.join(srcKeys, Seq(key), "left_anti")
@@ -1647,11 +1725,11 @@ object Gvt {
   def delete(spark: SparkSession, dir: String, predicate: Column,
       statsCols: Seq[String], txn: String = null): Int = rmwRetry(spark) {
     val base = latestVersion(dir)
-    val (files, state, _) = resolveManifest(dir, Some(base))
+    val (files, state, pin) = resolveManifest(dir, Some(base))
     // the predicate speaks LOGICAL names; the row-identity metadata
     // columns pass through applyMapping untouched
-    val touched: Set[String] = applyMapping(
-      readFilesWithId(spark, dir, files, !state.mappingEmpty), state)
+    val touched: Set[String] = applyMapping(readFilesWithId(spark, dir,
+      files, schemaFor(spark, dir, files, pin)), state)
       .filter(predicate)
       .select("_gvt_file").distinct()
       .collect().map(r => r.getString(0)).toSet
@@ -1661,9 +1739,9 @@ object Gvt {
     // KEEP rows where it is false OR NULL. A bare !predicate would turn
     // null into null and silently drop non-matching rows of any
     // nullable column — coalesce to false before negating.
-    // rewrite read: always merge footers (see merge)
-    val kept = applyMapping(
-      readFiles(spark, dir, touchedFiles, mergeSchema = true), state)
+    // rewrite read: the table's unified schema (see merge)
+    val kept = applyMapping(readFiles(spark, dir, touchedFiles,
+      schemaFor(spark, dir, touchedFiles, pin)), state)
       .filter(!coalesce(predicate, lit(false)))
     val v = base + 1
     val w =
@@ -1693,16 +1771,16 @@ object Gvt {
       txn: String = null): Int = rmwRetry(spark) {
     require(assignments.nonEmpty, "updateWhere needs at least one SET")
     val base = latestVersion(dir)
-    val (files, state, _) = resolveManifest(dir, Some(base))
-    val touched: Set[String] = applyMapping(
-      readFilesWithId(spark, dir, files, !state.mappingEmpty), state)
+    val (files, state, pin) = resolveManifest(dir, Some(base))
+    val touched: Set[String] = applyMapping(readFilesWithId(spark, dir,
+      files, schemaFor(spark, dir, files, pin)), state)
       .filter(predicate)
       .select("_gvt_file").distinct()
       .collect().map(r => r.getString(0)).toSet
     if (touched.isEmpty) return base // no-op: nothing matched
     val touchedFiles = files.filter(f => touched.contains(f.path))
-    val touchedDf = applyMapping(
-      readFiles(spark, dir, touchedFiles, mergeSchema = true), state)
+    val touchedDf = applyMapping(readFiles(spark, dir, touchedFiles,
+      schemaFor(spark, dir, touchedFiles, pin)), state)
     val byName = assignments.toMap
     byName.keys.foreach(c => require(touchedDf.columns.contains(c),
       s"GVT at $dir has no column '$c' to SET"))
@@ -1756,12 +1834,12 @@ object Gvt {
       .getOption("spark.graft.gvt.dvAbsorbRatio")
       .map(_.toDouble).getOrElse(0.5)
     val base = latestVersion(dir)
-    val (files, state, _) = resolveManifest(dir, Some(base))
+    val (files, state, pin) = resolveManifest(dir, Some(base))
     val v = base + 1
     // predicate on logical names; the sidecar stores (file, pos) only,
     // so the mapping never touches what gets written
-    val matches = applyMapping(
-      readFilesWithId(spark, dir, files, !state.mappingEmpty), state)
+    val matches = applyMapping(readFilesWithId(spark, dir,
+      files, schemaFor(spark, dir, files, pin)), state)
       .filter(predicate)
       .select(col("_gvt_file"), col("_gvt_pos"))
     val sub = f"data/dv$v%d-${UUID.randomUUID().toString.take(8)}"
@@ -1771,8 +1849,7 @@ object Gvt {
     // stats instead of scanning the whole sidecar — the layout that
     // makes file-sliced access O(that file's positions) at any DV size
     matches.orderBy("_gvt_file", "_gvt_pos").write.parquet(s"$dir/$sub")
-    val written = spark.read.parquet(s"$dir/$sub")
-    val perFile = written.groupBy("_gvt_file")
+    val perFile = readDv(spark, dir, Seq(sub)).groupBy("_gvt_file")
       .agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     if (perFile.isEmpty) return base // no-op: nothing matched
@@ -1832,17 +1909,17 @@ object Gvt {
       minDeletedFraction: Double, statsCols: Seq[String]): Int =
       rmwRetry(spark) {
     val base = latestVersion(dir)
-    val (files, state, _) = resolveManifest(dir, Some(base))
+    val (files, state, pin) = resolveManifest(dir, Some(base))
     val doomed = files.filter(f =>
       dvOf(f).nonEmpty && f.dvRows >= f.rows * minDeletedFraction)
     if (doomed.isEmpty) return base
     // physical rewrite (no alias round-trip; caller stat names
-    // translate), with two invariants every rewrite op shares: footers
-    // always merge (see merge), and RETIRED physical slots are purged
-    // — a dropped column must not ride a maintenance rewrite past the
-    // vacuum horizon (the GDPR story; r11 second-review finding)
-    val live = state.drops.foldLeft(
-      readFiles(spark, dir, doomed, mergeSchema = true))(_.drop(_))
+    // translate), with two invariants every rewrite op shares: reads
+    // take the unified schema (see merge), and RETIRED physical slots
+    // are purged — a dropped column must not ride a maintenance rewrite
+    // past the vacuum horizon (the GDPR story; r11 second-review finding)
+    val live = state.drops.foldLeft(readFiles(spark, dir, doomed,
+      schemaFor(spark, dir, doomed, pin)))(_.drop(_))
     val v = base + 1
     val w =
       if (live.isEmpty) Written(Nil, null)
@@ -1861,16 +1938,17 @@ object Gvt {
   def compact(spark: SparkSession, dir: String, smallRows: Long,
       targetFiles: Int, statsCols: Seq[String]): Int = rmwRetry(spark) {
     val base = latestVersion(dir)
-    val (files, state, _) = resolveManifest(dir, Some(base))
+    val (files, state, pin) = resolveManifest(dir, Some(base))
     val small = files.filter(_.rows < smallRows)
     if (small.size <= targetFiles) return base // nothing to gain
     // DV-aware: compaction ABSORBS deletion vectors — the rewritten
     // files carry no dv entries, so the vectors die with the removes.
-    // Physical end to end; caller stats names translate; footers merge
-    // and retired slots purge, like every rewrite (see absorbDeletes).
+    // Physical end to end; caller stats names translate; the unified
+    // schema reads and retired slots purge, like every rewrite (see
+    // absorbDeletes).
     val statsP = statsCols.map(state.physicalOf)
-    val smallDf = state.drops.foldLeft(
-      readFiles(spark, dir, small, mergeSchema = true))(_.drop(_))
+    val smallDf = state.drops.foldLeft(readFiles(spark, dir, small,
+      schemaFor(spark, dir, small, pin)))(_.drop(_))
     // explicit file-count control, range-clustered when stats exist so
     // compaction REPAIRS zone-map locality rather than destroying it
     val packed =
@@ -2151,9 +2229,8 @@ object Gvt {
   def diff(spark: SparkSession, dir: String, fromV: Int, toV: Int)
       : DataFrame = {
     require(fromV <= toV, s"diff range reversed: $fromV > $toV")
-    val state = mappingAt(dir, Some(toV))
+    val (b, state, pin) = resolveManifest(dir, Some(toV))
     val a = snapshot(dir, Some(fromV))
-    val b = snapshot(dir, Some(toV))
     // file identity includes its deletion vectors: a DV delete leaves
     // the data file path unchanged but shrinks its LIVE rows, so the
     // entry must count as churned (old-DV read minus new-DV read = the
@@ -2163,15 +2240,15 @@ object Gvt {
     val bIds = b.map(ident).toSet
     val removed = a.filterNot(f => bIds.contains(ident(f)))
     val added = b.filterNot(f => aIds.contains(ident(f)))
-    val schemaDonor = (b ++ a).head // require above + snapshot() ⇒ nonEmpty
+    // both sides read under `toV`'s unified schema (one empty side is
+    // an empty scan of it), so exceptAll lines the columns up
+    val schemaDonor = (b ++ a).take(1)
     def readOrEmpty(files: Seq[GvtFile]): DataFrame = applyMapping(
-      if (files.isEmpty)
-        spark.read.parquet(s"$dir/${schemaDonor.path}").limit(0)
-      else readFiles(spark, dir, files, !state.mappingEmpty), state)
+      readFiles(spark, dir, files, schemaFor(spark, dir,
+        if (files.isEmpty) schemaDonor else files, pin)), state)
     val oldRows = readOrEmpty(removed)
-    // align column order by name: rewrites (merge/deleteKeys joins) can
-    // produce files whose physical column order differs from older ones,
-    // and exceptAll is positional
+    // align column order by name: on a pre-pin log each side carries
+    // its own files' merged footer schema, and exceptAll is positional
     val newRows = readOrEmpty(added).select(oldRows.columns.map(col): _*)
     // exceptAll against an empty side is the identity, but Spark still
     // plans (and shuffles) the set op — skip it when a side churned no
@@ -2299,7 +2376,7 @@ object Gvt {
     * parent did at the fork, and stays readable even after the parent
     * vacuums its own copies (links survive the source's deletion).
     * Returns the branch's table dir. */
-  def createBranch(spark: SparkSession, dir: String, name: String): String = {
+  def createBranch(dir: String, name: String): String = {
     val base = latestVersion(dir)
     require(base >= 0, s"GVT $dir has no commits to branch from")
     val bdir = branchPath(dir, name)
@@ -2384,6 +2461,30 @@ object Gvt {
       val bPaths = bFiles.map(_.path).toSet
       val adds = bFiles.filterNot(f => baseByPath.get(f.path).contains(f))
       val removes = baseFiles.map(_.path).filterNot(bPaths.contains)
+      // the squash's adds are files born on the BRANCH; their schemas
+      // live in branch commit docs the parent never sees, so the
+      // publish doc pins the merge of EXACTLY the branch commits that
+      // created the published files — not the branch's full unified
+      // schema, which could carry a column the branch once wrote and
+      // then deleted every file of (the phantom-column class the r12
+      // restore/overwrite resets fixed; second-review finding). An
+      // unresolvable pin leaves null and the parent falls back to
+      // footer merges. The WAP gate below reads the adds under it too.
+      val branchPin: Option[StructType] = if (adds.isEmpty) None
+        else {
+          val addPaths = adds.map(_.path).toSet
+          var pinOpt: Option[StructType] = Some(new StructType())
+          ((base + 1) to bHead).foreach { bv =>
+            val c = commitAt(bdir, bv)
+            if (c.adds.exists(f => addPaths.contains(f.path))) {
+              if (c.dataSchema != null)
+                pinOpt = pinOpt.flatMap(mergeStruct(_,
+                  DataType.fromJson(c.dataSchema).asInstanceOf[StructType]))
+              else if (!ReAddOps.contains(c.op)) pinOpt = None
+            }
+          }
+          pinOpt.filter(_.nonEmpty)
+        }
       // WAP GATE: the branch's net-new rows must pass the PARENT's
       // CURRENT checks — a constraint added after the fork still gates
       // the publish (branch appends enforced only the checks the
@@ -2396,7 +2497,8 @@ object Gvt {
         // ONE combined pass probes all checks (any-violation), and only
         // the rare blocked path pays per-check scans to NAME the
         // culprits in the error.
-        def added = applyMapping(readFiles(spark, dir, adds), parentChecks)
+        lazy val added = applyMapping(readFiles(spark, dir, adds,
+          schemaFor(spark, dir, adds, branchPin)), parentChecks)
         val preds = parentChecks.checkMap.values
           .map(p => !coalesce(expr(p), lit(true))).reduce(_ || _)
         if (added.filter(preds).limit(1).count() > 0) {
@@ -2411,32 +2513,8 @@ object Gvt {
         }
       }
       val v = head + 1
-      // the squash's adds are files born on the BRANCH; their schemas
-      // live in branch commit docs the parent never sees, so the
-      // publish doc pins the merge of EXACTLY the branch commits that
-      // created the published files — not the branch's full unified
-      // schema, which could carry a column the branch once wrote and
-      // then deleted every file of (the phantom-column class the r12
-      // restore/overwrite resets fixed; second-review finding). An
-      // unresolvable pin leaves null and the parent falls back to
-      // footer merges.
-      val branchPin: String = if (adds.isEmpty) null
-        else {
-          val addPaths = adds.map(_.path).toSet
-          var pinOpt: Option[StructType] = Some(new StructType())
-          ((base + 1) to bHead).foreach { bv =>
-            val c = commitAt(bdir, bv)
-            if (c.adds.exists(f => addPaths.contains(f.path))) {
-              if (c.dataSchema != null)
-                pinOpt = pinOpt.flatMap(mergeStruct(_,
-                  DataType.fromJson(c.dataSchema).asInstanceOf[StructType]))
-              else if (!ReAddOps.contains(c.op)) pinOpt = None
-            }
-          }
-          pinOpt.filter(_.nonEmpty).map(_.json).orNull
-        }
       if (!tryPublish(dir, GvtCommit(v, "publish", adds, removes,
-          dataSchema = branchPin), spark))
+          dataSchema = branchPin.map(_.json).orNull), spark))
         throw new java.util.ConcurrentModificationException(
           s"GVT $dir: version $v committed concurrently; publish read set stale")
       v

@@ -133,13 +133,12 @@ object GvtDataSource {
   }
 
   /** Snapshot schema: the version's UNIFIED schema — served from the
-    * manifest's metadata pin when it resolves ([[Gvt.pinnedSchema]]:
-    * zero footer reads, the r12 fix for the 4.3 s cold footer merge at
-    * 2000 files, DevDsv2Scale), falling back to the merged-footer read
-    * for pre-pin tables (same merge-on-read contract as
-    * [[Gvt.read]](mergeSchema = true) — added columns surface the
-    * union, pre-evolution files back-fill null). MEMOIZED per
-    * (dir, resolved version): a version's file set is immutable, and
+    * manifest's metadata pin when it resolves (zero footer reads, the
+    * r12 fix for the 4.3 s cold footer merge at 2000 files,
+    * DevDsv2Scale), falling back to the merged-footer read for pre-pin
+    * tables; [[Gvt.schemaFor]] is the one place deciding, so
+    * [[Gvt.read]] serves the same schema. MEMOIZED per (dir, resolved
+    * version): a version's file set is immutable, and
     * `DataFrameReader.load` calls inferSchema on EVERY query. */
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), StructType]()
@@ -152,23 +151,11 @@ object GvtDataSource {
     val (dir, asOf) = resolved
     val version = asOf.getOrElse(Gvt.latestVersion(dir))
     schemaMemo.computeIfAbsent((dir, version), _ => {
-      val physical = Gvt.pinnedSchema(dir, Some(version))
-        .filter(_.nonEmpty).getOrElse {
-          val files = Gvt.snapshot(dir, Some(version))
-          require(files.nonEmpty, s"GVT at $dir is empty at version $version")
-          spark.read.option("mergeSchema", "true")
-            .parquet(files.map(f => s"$dir/${f.path}"): _*).schema
-        }
-      Gvt.mapSchema(physical, Gvt.mappingAt(dir, Some(version)))
+      val (files, state, pin) = Gvt.resolveAll(dir, Some(version))
+      Gvt.mapSchema(Gvt.schemaFor(spark, dir, files, pin), state)
     })
   }
 
-  /** Per-file deleted-row positions of a version's deletion vectors,
-    * sorted for binary search, BROADCAST once per (session, version) —
-    * every scan of that immutable snapshot reuses the torrent blocks.
-    * Built by one Spark job over the sidecar parquet (collect is
-    * bounded by `dvRows`, which the manifest knows and
-    * [[Gvt.absorbDeletes]] bounds by rewriting heavily-deleted files). */
   /** BOUNDED LRU (r12 review fixes, both passes): a long-lived
     * maintenance loop reading version after version must not
     * accumulate one broadcast per version forever, and eviction must
@@ -225,6 +212,12 @@ object GvtDataSource {
     }
   }
 
+  /** Per-file deleted-row positions of a version's deletion vectors,
+    * sorted for binary search, BROADCAST once per (session, version) —
+    * every scan of that immutable snapshot reuses the torrent blocks.
+    * Built by one Spark job over the sidecar parquet (collect is
+    * bounded by `dvRows`, which the manifest knows and
+    * [[Gvt.absorbDeletes]] bounds by rewriting heavily-deleted files). */
   private[sources] def dvBroadcast(spark: SparkSession, dir: String,
       version: Int, dvDirs: Seq[String])
       : org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]] =
@@ -233,7 +226,7 @@ object GvtDataSource {
       val hit = dvMemo.get(key)
       if (hit != null) hit
       else {
-        val m = spark.read.parquet(dvDirs.map(d => s"$dir/$d"): _*)
+        val m = Gvt.readDv(spark, dir, dvDirs)
           .groupBy("_gvt_file")
           .agg(org.apache.spark.sql.functions.sort_array(
             org.apache.spark.sql.functions.collect_list("_gvt_pos")).as("pos"))

@@ -42,7 +42,7 @@ object GvtOps {
       val orders = graft.Tables(spark, dir, "orders")
       val stats = Seq("o_orderkey")
       Gvt.append(spark, tmp, orders.filter(col("o_orderkey") % 4 =!= 0), stats)
-      val b = Gvt.createBranch(spark, tmp, "drop_q3")
+      val b = Gvt.createBranch(tmp, "drop_q3")
       Gvt.append(spark, b, orders.filter(col("o_orderkey") % 4 === 0), stats)
       Gvt.delete(spark, b, col("o_orderkey") % 20 === 0, stats)
       Gvt.publishBranch(spark, tmp, "drop_q3")
@@ -75,7 +75,7 @@ object GvtOps {
       Gvt.append(spark, tmp, orders.filter(col("o_orderkey") % 4 =!= 0), stats)
       Gvt.addCheck(spark, tmp, "price_positive", "o_totalprice > 0")
       Gvt.addNotNull(spark, tmp, "o_orderstatus")
-      val b = Gvt.createBranch(spark, tmp, "drop_q4")
+      val b = Gvt.createBranch(tmp, "drop_q4")
       Gvt.append(spark, b, orders.filter(col("o_orderkey") % 4 === 0), stats)
       Gvt.delete(spark, b, col("o_orderkey") % 20 === 0, stats)
       Gvt.publishBranch(spark, tmp, "drop_q4")
@@ -557,7 +557,7 @@ object GvtOps {
     }
 
   def gvtSchemaEvo(spark: SparkSession, dir: String): DataFrame =
-    Gvt.read(spark, evoGvt(spark, dir), mergeSchema = true)
+    Gvt.read(spark, evoGvt(spark, dir))
       .select("c_custkey", "c_name", "c_mktsegment", "c_tier")
       .orderBy("c_custkey")
 
@@ -849,8 +849,8 @@ object GvtOps {
         (fact, base, Seq("o_orderkey")),
         (summary, stateOf(base), Seq("o_orderstatus"))))
       // the audited drop, staged on branches of BOTH tables
-      val fb = Gvt.createBranch(spark, fact, "drop_q")
-      val sb = Gvt.createBranch(spark, summary, "drop_q")
+      val fb = Gvt.createBranch(fact, "drop_q")
+      val sb = Gvt.createBranch(summary, "drop_q")
       Gvt.append(spark, fb, orders.filter(col("o_orderkey") % 4 === 0),
         Seq("o_orderkey"))
       Gvt.delete(spark, fb, col("o_orderkey") % 20 === 0, Seq("o_orderkey"))
@@ -861,7 +861,7 @@ object GvtOps {
       Gvt.dropBranch(fact, "drop_q")
       Gvt.dropBranch(summary, "drop_q")
       // the crash: a fact-only branch squash whose txn doc never lands
-      val fb2 = Gvt.createBranch(spark, fact, "poison")
+      val fb2 = Gvt.createBranch(fact, "poison")
       Gvt.append(spark, fb2,
         orders.filter(col("o_orderkey") % 5 === 0)
           .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L)),

@@ -60,7 +60,7 @@ class GvtConstraintSpec extends GraftSuite {
   test("WAP gate: a check added AFTER the fork blocks the publish; audit unblocks") {
     val dir = Files.createTempDirectory("gvt-ck-").toString + "/t"
     Gvt.append(spark, dir, slab(1, 100), Seq("k"))
-    val b = Gvt.createBranch(spark, dir, "drop")
+    val b = Gvt.createBranch(dir, "drop")
     // branch stages rows that are legal under the checks it inherited
     // (none) but illegal under the parent's LATER policy
     Gvt.append(spark, b, slab(-10, 0), Seq("k"))
@@ -111,7 +111,7 @@ class GvtConstraintSpec extends GraftSuite {
     Gvt.append(spark, dir, slab(1, 50), Seq("k"))
     Gvt.renameColumn(spark, dir, "v", "value")
     Gvt.addCheck(spark, dir, "value_nonneg", "value >= 0")
-    val b = Gvt.createBranch(spark, dir, "drop")
+    val b = Gvt.createBranch(dir, "drop")
     // post-rename appends speak the LOGICAL name
     Gvt.append(spark, b,
       slab(50, 60).withColumnRenamed("v", "value"), Seq("k")) // all valid

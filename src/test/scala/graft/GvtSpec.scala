@@ -4,8 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 import graft.sources.{Gvt, GvtOps}
 
@@ -626,7 +628,7 @@ class GvtSpec extends GraftSuite {
   test("branch: isolated writes, publish squashes atomically, audit ≡ published") {
     val dir = freshDir()
     Gvt.append(spark, dir, slab(0, 10), Seq("k"))
-    val b = Gvt.createBranch(spark, dir, "wap")
+    val b = Gvt.createBranch(dir, "wap")
     assert(Gvt.listBranches(dir) == Seq("wap"))
     // branch sees the fork state; every op works on the branch dir
     assert(sortedRows(Gvt.read(spark, b)) == (0L until 10L).map(k => (k, k * 10)))
@@ -652,9 +654,9 @@ class GvtSpec extends GraftSuite {
   test("branch: append-only branch lands on an advanced head; rewrite branch aborts") {
     val dir = freshDir()
     Gvt.append(spark, dir, slab(0, 10), Seq("k"))
-    val bApp = Gvt.createBranch(spark, dir, "drops")
+    val bApp = Gvt.createBranch(dir, "drops")
     Gvt.append(spark, bApp, slab(100, 110), Seq("k"))
-    val bRw = Gvt.createBranch(spark, dir, "fixes")
+    val bRw = Gvt.createBranch(dir, "fixes")
     Gvt.delete(spark, bRw, col("k") < 2L, Seq("k"))
     // parent advances past both forks
     Gvt.append(spark, dir, slab(10, 15), Seq("k"))
@@ -669,7 +671,7 @@ class GvtSpec extends GraftSuite {
       Gvt.publishBranch(spark, dir, "fixes")
     } finally spark.conf.unset("spark.graft.gvt.rmwRetries")
     // double-create is a loud failure
-    intercept[IllegalStateException] { Gvt.createBranch(spark, dir, "drops") }
+    intercept[IllegalStateException] { Gvt.createBranch(dir, "drops") }
   }
 
   test("branch: linked-anchor seed through a checkpointed parent") {
@@ -678,7 +680,7 @@ class GvtSpec extends GraftSuite {
     // must anchor on the parent's own checkpoint + linked tail (no
     // fresh fork-manifest checkpoint is written any more)
     (0 until 12).foreach(i => Gvt.append(spark, dir, slab(i * 10, i * 10 + 10), Seq("k")))
-    val b = Gvt.createBranch(spark, dir, "linked")
+    val b = Gvt.createBranch(dir, "linked")
     val bld = Paths.get(b, Gvt.LogDir)
     assert(Files.exists(bld.resolve(f"${10}%08d.ckpt.json")),
       "seed must hard-link the parent's newest checkpoint, not write one at the fork")
@@ -700,7 +702,7 @@ class GvtSpec extends GraftSuite {
   test("DV-audit publish re-adds a path without duplicating it") {
     val dir = freshDir()
     Gvt.append(spark, dir, slab(0, 10), Seq("k"))
-    val b = Gvt.createBranch(spark, dir, "dvdup")
+    val b = Gvt.createBranch(dir, "dvdup")
     Gvt.deleteWhereDV(spark, b, col("k") === 3L) // path survives, dv swaps
     // publish commits adds=[path with dv] and removes=[] — the upsert
     // shape resolution must handle by path
@@ -720,7 +722,7 @@ class GvtSpec extends GraftSuite {
     // a REWRITE branch cannot re-publish at all: its own first publish
     // advanced the parent past the fork, so the advanced-head guard
     // fires before any duplicate commit can form
-    val b = Gvt.createBranch(spark, dir, "stale")
+    val b = Gvt.createBranch(dir, "stale")
     Gvt.append(spark, b, slab(100, 110), Seq("k"))
     Gvt.deleteWhereDV(spark, b, col("k") === 105L)
     Gvt.publishBranch(spark, dir, "stale")
@@ -733,7 +735,7 @@ class GvtSpec extends GraftSuite {
     // its adds re-add live (path, dv) entries with no removes — the
     // log's upsert contract must keep the manifest duplicate-free and
     // the state unchanged (one junk commit aside)
-    val b2 = Gvt.createBranch(spark, dir, "stale2")
+    val b2 = Gvt.createBranch(dir, "stale2")
     Gvt.append(spark, b2, slab(200, 210), Seq("k"))
     Gvt.publishBranch(spark, dir, "stale2")
     val rows = sortedRows(Gvt.read(spark, dir))
@@ -751,7 +753,7 @@ class GvtSpec extends GraftSuite {
     (0 until 11).foreach(i =>
       Gvt.append(spark, dir, slab(i * 10, i * 10 + 10), Seq("k"))) // ckpt at v10
     Gvt.delete(spark, dir, col("k") < 10L, Seq("k")) // v11 drops v0's file
-    val b = Gvt.createBranch(spark, dir, "history") // fork 11, links [10, 11]
+    val b = Gvt.createBranch(dir, "history") // fork 11, links [10, 11]
     intercept[IllegalArgumentException] { Gvt.vacuum(b, 0, graceMs = 0L) }
     // parent vacuums to head: v0's file is referenced ONLY by the
     // branch's sub-fork read at the linked checkpoint version
@@ -791,7 +793,7 @@ class GvtSpec extends GraftSuite {
   test("append-only branch publishes after the parent's floor passes the fork") {
     val dir = freshDir()
     Gvt.append(spark, dir, slab(0, 10), Seq("k")) // v0
-    val b = Gvt.createBranch(spark, dir, "late") // fork at 0
+    val b = Gvt.createBranch(dir, "late") // fork at 0
     Gvt.append(spark, b, slab(100, 110), Seq("k"))
     Gvt.append(spark, dir, slab(10, 20), Seq("k")) // v1
     Gvt.vacuum(dir, 1, graceMs = 0L) // parent floor 1 > fork 0
@@ -805,7 +807,7 @@ class GvtSpec extends GraftSuite {
   test("branch: DV audit publishes vectors; vacuum pins live branches, reaps dropped ones") {
     val dir = freshDir()
     Gvt.append(spark, dir, slab(0, 10), Seq("k"))
-    val b = Gvt.createBranch(spark, dir, "dv")
+    val b = Gvt.createBranch(dir, "dv")
     Gvt.append(spark, b, slab(10, 20), Seq("k"))
     Gvt.deleteWhereDV(spark, b, col("k") === 13L)   // MoR audit fix
     // an aged parent vacuum BEFORE publish must not reap the branch's
@@ -818,7 +820,7 @@ class GvtSpec extends GraftSuite {
     assert(sortedRows(Gvt.read(spark, dir)) ==
       (0L until 20L).filter(_ != 13L).map(k => (k, k * 10)))
     // drop an ABANDONED branch: its unique files become unreferenced
-    val junk = Gvt.createBranch(spark, dir, "junk")
+    val junk = Gvt.createBranch(dir, "junk")
     Gvt.append(spark, junk, slab(1000, 2000), Seq("k"))
     val before = Gvt.vacuum(dir, Gvt.latestVersion(dir), graceMs = 0L)
     assert(before._1 == 0, s"live-branch files reaped: $before")
@@ -827,6 +829,138 @@ class GvtSpec extends GraftSuite {
     assert(after._1 > 0, "dropped branch's unique files must age out")
     assert(sortedRows(Gvt.read(spark, dir)) ==
       (0L until 20L).filter(_ != 13L).map(k => (k, k * 10)))
+  }
+
+  /** Spark jobs launched by `body` from this thread. The listener keys
+    * on a local property, so other threads' jobs never count; a marker
+    * job afterwards drains the listener bus, which delivers in order. */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("gvt.spec.probe")))
+          .filter(_.startsWith(tag)).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("gvt.spec.probe", tag)
+      try {
+        body
+        sc.setLocalProperty("gvt.spec.probe", s"$tag-marker")
+        sc.parallelize(Seq(1), 1).count()
+      } finally sc.setLocalProperty("gvt.spec.probe", null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.contains(s"$tag-marker")) {
+        assert(System.currentTimeMillis() < deadline, "listener bus stalled")
+        Thread.sleep(10)
+      }
+      seen.size - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("building a read launches no Spark job, with and without DVs") {
+    val dir = freshDir()
+    Gvt.append(spark, dir, slab(0, 10).repartition(1), Seq("k"))
+    Gvt.append(spark, dir, slab(10, 20).repartition(1), Seq("k"))
+    def noJobs(label: String): Unit = {
+      val head = Gvt.latestVersion(dir)
+      assert(jobsDuring(Gvt.read(spark, dir)) == 0, s"$label: latest read")
+      assert(jobsDuring(Gvt.read(spark, dir, Some(0))) == 0,
+        s"$label: asOf read")
+      assert(jobsDuring(Gvt.read(spark, dir, Some(head))) == 0,
+        s"$label: asOf head read")
+      assert(jobsDuring(Gvt.readPruned(spark, dir, "k", 3, 12)) == 0,
+        s"$label: pruned read")
+    }
+    noJobs("no DV")
+    spark.conf.set("spark.graft.gvt.dvAbsorbRatio", "2.0")
+    try Gvt.deleteWhereDV(spark, dir, col("k") === 5L)
+    finally spark.conf.unset("spark.graft.gvt.dvAbsorbRatio")
+    assert(Gvt.snapshot(dir).exists(f => f.dv != null && f.dv.nonEmpty))
+    noJobs("DV")
+    // the job-free DataFrames still read the right rows
+    assert(sortedRows(Gvt.read(spark, dir)) ==
+      (0L until 20L).filter(_ != 5L).map(k => (k, k * 10)))
+    assert(sortedRows(Gvt.readPruned(spark, dir, "k", 3, 12)._1) ==
+      (3L to 12L).filter(_ != 5L).map(k => (k, k * 10)))
+    assert(sortedRows(Gvt.read(spark, dir, Some(1))) ==
+      (0L until 20L).map(k => (k, k * 10)))
+  }
+
+  test("an append pins the schema parquet's footer merge infers") {
+    val dir = freshDir()
+    def typed(lo: Long, until: Long): DataFrame =
+      spark.range(lo, until).select(col("id").as("k"),
+        expr("date_add(date'2024-01-01', cast(id as int))").as("d"),
+        expr("timestamp'2024-01-02 03:04:05' + make_interval(0, 0, 0, 0, 0, 0, id)")
+          .as("ts"),
+        expr("timestamp_ntz'2024-01-02 03:04:05'").as("ntz"),
+        col("id").cast("decimal(12,3)").as("dec"),
+        concat(lit("s"), col("id").cast("string")).as("s"),
+        struct(col("id").as("a"), lit("x").as("b")).as("st"),
+        array(col("id"), col("id") + 1).as("arr"),
+        map(lit("m"), col("id")).as("mp"))
+    Gvt.append(spark, dir, typed(0, 5), Seq("k"))
+    Gvt.append(spark, dir, typed(5, 10), Seq("k"))
+    val footer = spark.read.option("mergeSchema", "true")
+      .parquet(Gvt.snapshot(dir).map(f => s"$dir/${f.path}"): _*).schema
+    (0 to 1).foreach { v =>
+      assert(DataType.fromJson(Gvt.commitAt(dir, v).dataSchema) == footer,
+        s"commit $v pins a schema other than the footers'")
+    }
+    assert(Gvt.pinnedSchema(dir).contains(footer))
+    assert(Gvt.read(spark, dir).schema == footer)
+    assert(Gvt.read(spark, dir).count() == 10)
+  }
+
+  /** v0: (k, v) over [0, 5); v1 adds `w` over [5, 10). */
+  private def evolved(): String = {
+    val dir = freshDir()
+    Gvt.append(spark, dir, slab(0, 5), Seq("k"))
+    Gvt.append(spark, dir, slab(5, 10)
+      .withColumn("w", concat(lit("w"), col("k").cast("string"))), Seq("k"))
+    dir
+  }
+
+  private def evolvedRows(df: DataFrame): Seq[(Long, Long, Option[String])] =
+    df.collect().map(r =>
+      (r.getAs[Long]("k"), r.getAs[Long]("v"), Option(r.getAs[String]("w"))))
+      .toSeq.sortBy(_._1)
+
+  private val evolvedWant: Seq[(Long, Long, Option[String])] =
+    (0L until 5L).map(k => (k, k * 10, None)) ++
+      (5L until 10L).map(k => (k, k * 10, Some(s"w$k")))
+
+  test("read of an evolved table returns the union, nulls in older files") {
+    val dir = evolved()
+    val df = Gvt.read(spark, dir)
+    assert(df.columns.toSeq == Seq("k", "v", "w"))
+    assert(evolvedRows(df) == evolvedWant)
+    // time travel below the evolution serves that version's own schema
+    assert(Gvt.read(spark, dir, Some(0)).columns.toSeq == Seq("k", "v"))
+    // a rewrite touching only pre-evolution files keeps the union
+    Gvt.updateWhere(spark, dir, col("k") === 1L, Seq("v" -> lit(-1L)),
+      Seq("k"))
+    assert(evolvedRows(Gvt.read(spark, dir)) ==
+      evolvedWant.map { case (k, v, w) => (k, if (k == 1L) -1L else v, w) })
+  }
+
+  test("a pre-pin log still reads the right rows and columns") {
+    val dir = evolved()
+    // strip dataSchema from commit 1's doc, as a pre-pin writer left it
+    val doc = Paths.get(dir, Gvt.LogDir, "00000001.json")
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = om.readTree(Files.readAllBytes(doc))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("dataSchema")
+    Files.delete(doc)
+    Files.write(doc, om.writeValueAsBytes(node))
+    assert(Gvt.pinnedSchema(dir).isEmpty)
+    val df = Gvt.read(spark, dir)
+    assert(df.columns.toSeq == Seq("k", "v", "w"))
+    assert(evolvedRows(df) == evolvedWant)
   }
 }
 

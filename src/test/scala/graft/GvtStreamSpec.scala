@@ -419,7 +419,7 @@ class GvtStreamSpec extends GraftSuite {
   test("a BRANCH is a streaming source unchanged; parent commits stay invisible to it") {
     val dir = freshTable("gvtstream_branch")
     seed(dir, Seq((1L, "a", 1.0), (2L, "b", 2.0)))            // parent v0
-    val b = Gvt.createBranch(spark, dir, "feed")
+    val b = Gvt.createBranch(dir, "feed")
     seed(b, Seq((3L, "a", 3.0)))                              // branch v1
     seed(dir, Seq((9L, "b", 9.0)))                            // parent v1 — NOT the branch's
     val q = startAgg(b, "gvtstream_branch_sink")

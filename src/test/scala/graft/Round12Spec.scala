@@ -235,7 +235,7 @@ class Round12Spec extends GraftSuite {
   test("publishBranch pins only the PUBLISHED adds' schemas") {
     val dir = tmpTable("gvt-r12-brpin-")
     Gvt.append(spark, dir, slab(0, 10), Seq("k"))
-    val b = Gvt.createBranch(spark, dir, "evo")
+    val b = Gvt.createBranch(dir, "evo")
     // the branch writes an evolved column, then deletes every row of it
     Gvt.append(spark, b,
       (100L until 110L).map(k => (k, k, s"w$k")).toDF("k", "v", "w"),

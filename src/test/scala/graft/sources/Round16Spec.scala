@@ -243,7 +243,7 @@ class Round16Spec extends GraftSuite {
       Gvt.append(spark, t,
         spark.range(i, i + 1).toDF("k").repartition(1), Seq("k"))
     }
-    val b = Gvt.createBranch(spark, t, "wap")
+    val b = Gvt.createBranch(t, "wap")
     withConf("spark.graft.gvt.compactAfterFiles" -> "2") {
       (3 until 7).foreach { i =>
         Gvt.append(spark, b,
