@@ -57,18 +57,6 @@ object Staging {
 
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Stage a fixture layout ONCE per (prefix, sfDir) per JVM: `build`
-    * writes the layout into a fresh temp dir on first use; later calls
-    * (bench rep 2+, repeated test use) reuse the already-staged dir and
-    * skip the build entirely. Before this, min-of-2 bench reps still
-    * contained full staging cost on BOTH reps (r4 verdict:
-    * `join_storage_partitioned` 0.93 s was mostly its own hive-layout
-    * writes) — memoizing makes rep-2 measure the query, not the fixture.
-    * Only for builds that are pure functions of (prefix, sfDir); a query
-    * that mutates its staged dir afterwards must leave it in a state the
-    * re-run reproduces (e.g. the idempotent dynamic-partition upsert).
-    * Coarse lock: builds are rare, small, and never nest.
-    */
   /** Run `build` ONCE per key per JVM — [[memoDir]]'s memoization for
     * staging that does not live in a fresh temp dir (catalog tables in
     * the shared warehouse, ANALYZE stats in the session catalog). Same
@@ -85,6 +73,18 @@ object Staging {
     }
   }
 
+  /** Stage a fixture layout ONCE per (prefix, sfDir) per JVM: `build`
+    * writes the layout into a fresh temp dir on first use; later calls
+    * (bench rep 2+, repeated test use) reuse the already-staged dir and
+    * skip the build entirely. Before this, min-of-2 bench reps still
+    * contained full staging cost on BOTH reps (r4 verdict:
+    * `join_storage_partitioned` 0.93 s was mostly its own hive-layout
+    * writes) — memoizing makes rep-2 measure the query, not the fixture.
+    * Only for builds that are pure functions of (prefix, sfDir); a query
+    * that mutates its staged dir afterwards must leave it in a state the
+    * re-run reproduces (e.g. the idempotent dynamic-partition upsert).
+    * Coarse lock: builds are rare, small, and never nest.
+    */
   def memoDir(prefix: String, sfDir: String)(build: String => Unit): String = {
     val key = prefix + "|" + sfDir
     val hit = memo.get(key)

@@ -8,13 +8,19 @@ import scala.collection.mutable
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType, IntegerType, LongType, MapType, ShortType, StringType, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Graft Versioned Table (GVT) — a minimal lakehouse table format:
   * immutable parquet data files plus an append-only JSON commit log,
@@ -70,9 +76,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, Strin
   *    matched key: manifest-range prune, then an exact column-pruned
   *    probe (scan ONLY the key column of surviving files, semi-join
   *    against the source) — untouched files carry over by reference.
-  *  - Per-file stats are computed by ONE distributed aggregation over
-  *    the files just written (group by filename), not a per-file
-  *    driver loop.
+  *  - Per-file row counts and min/max stats come from the footers of
+  *    the files just written, read on the driver, so a commit is one
+  *    write job plus metadata; a stat the footers do not hold exactly
+  *    sends the commit to ONE distributed aggregation over those files
+  *    (group by filename).
   *  - [[compact]] bin-packs small files and removes them in one atomic
   *    commit — the small-file death spiral (100 TB ⇒ billions of 1 MB
   *    files without it) has a first-class answer, and readers never see
@@ -1044,18 +1052,22 @@ object Gvt {
       dvDirs: Seq[String]): DataFrame =
     scanFiles(spark, dir, dvDirs.flatMap(partFiles(dir, _)), DvSchema)
 
-  /** The schema a `spark.read.parquet` of the file at `path` infers,
-    * from its footer alone, read on the driver: Spark's own footer
-    * decoding, made nullable at every level as a file read is. */
-  private def footerSchema(spark: SparkSession, path: String): StructType = {
-    val p = new Path(path)
-    val reader = ParquetFileReader.open(
-      spark.sessionState.newHadoopConf(), p)
-    val footer = try reader.getFooter finally reader.close()
-    asNullable(ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+  /** The footer of the parquet file at `path`, read on the driver. */
+  private[graft] def readFooter(conf: Configuration,
+      path: String): ParquetMetadata = {
+    val reader = ParquetFileReader.open(conf, new Path(path))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** The schema a `spark.read.parquet` of the file at `path` infers from
+    * its `footer`: Spark's own footer decoding, made nullable at every
+    * level as a file read is. */
+  private def footerSchema(spark: SparkSession, path: String,
+      footer: ParquetMetadata): StructType =
+    asNullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(new Path(path), footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
       .asInstanceOf[StructType]
-  }
 
   private def asNullable(t: DataType): DataType = t match {
     case s: StructType => StructType(s.fields.map(f =>
@@ -1209,7 +1221,16 @@ object Gvt {
   private final case class Written(adds: Seq[GvtFile], dataSchema: String)
 
   /** Write `df` as a new commit directory and return its [[GvtFile]]
-    * entries (stats for `statsCols` via one distributed per-file agg).
+    * entries: one write job, then metadata. The driver lists the
+    * directory and reads each part's footer. The first footer gives the
+    * schema the commit pins (every part of one write carries the same
+    * one); all of them give each file's row count and `statsCols`
+    * min/max ([[footerStats]]). Only a commit whose stats the footers do
+    * not hold exactly takes [[aggregateStats]], one distributed
+    * aggregate over the files just written. Zero-row parts never enter
+    * the manifest, and a write whose every part is empty deletes its
+    * commit directory and returns no adds; its schema is still pinned,
+    * so an empty overwrite keeps its declared shape.
     *
     * Data files are RANGE-CLUSTERED on `statsCols` by construction
     * (repartitionByRange + sortWithinPartitions, AQE-coalesced to size):
@@ -1231,13 +1252,116 @@ object Gvt {
           .sortWithinPartitions(statsCols.map(col): _*)
       else df
     shaped.write.parquet(cdir)
-    // the read-back lists `cdir` locally and takes the physical schema
-    // from one footer on the driver: every part file of one write
-    // carries the same schema, so no Spark job infers it
+    val conf = spark.sessionState.newHadoopConf()
     val parts = partFiles(dir, sub)
-    val schema = footerSchema(spark, s"$dir/${parts.head.path}")
-    val bytes = parts.map(f => f.path -> f.bytes).toMap
-    val written = scanFiles(spark, dir, parts, schema)
+      .map(f => f -> readFooter(conf, s"$dir/${f.path}"))
+    val schema = footerSchema(spark, s"$dir/${parts.head._1.path}",
+      parts.head._2)
+    val adds =
+      if (parts.forall(p => rowsOf(p._2) == 0)) {
+        deleteRecursively(Paths.get(cdir))
+        Nil
+      } else footerStats(spark, conf, parts, schema, statsCols).getOrElse(
+        aggregateStats(spark, dir, parts.map(_._1), schema, statsCols))
+    Written(adds, schema.json)
+  }
+
+  private def rowsOf(footer: ParquetMetadata): Long =
+    footer.getBlocks.iterator().asScala().map(_.getRowCount).sum
+
+  /** The footer entry Spark writes when it rebased dates into the legacy
+    * hybrid calendar: that file's DATE stats are not the values a read
+    * returns. */
+  private val LegacyDateTimeKey = "org.apache.spark.legacyDateTime"
+
+  /** Types whose parquet column-chunk stats, read back as Spark values,
+    * order as Spark's `min`/`max` do: signed integers, dates (signed
+    * days) and UTF8_BINARY strings (unsigned byte order). */
+  private def footerStatType(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType => true
+    case s: StringType => s.collationId == StringType.collationId
+    case _ => false
+  }
+
+  /** Per-file rows and `statsCols` min/max of freshly written `parts`
+    * from their footers, rendered by Spark's own `cast(string)` so they
+    * equal [[aggregateStats]]' byte for byte; zero-row parts are left
+    * out, as the aggregate leaves them. None sends the whole commit to
+    * the aggregate, by one rule: every stats column must name one field
+    * of a [[footerStatType]], every column chunk holding a non-null
+    * value must carry its min/max (parquet drops a stat over 4 KB, and a
+    * writer may switch stats off), and parquet must not truncate stats
+    * (`parquet.statistics.truncate.length` set). */
+  private[graft] def footerStats(spark: SparkSession, conf: Configuration,
+      parts: Seq[(GvtFile, ParquetMetadata)], schema: StructType,
+      statsCols: Seq[String]): Option[Seq[GvtFile]] = {
+    val types = statsCols.map(c => schema.fields.filter(_.name == c) match {
+      case Array(f) if footerStatType(f.dataType) => Some(f.dataType)
+      case _ => None
+    })
+    if (types.contains(None) ||
+        conf.get("parquet.statistics.truncate.length") != null) return None
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    def render(v: Any, dt: DataType): String =
+      Cast(Literal(v, dt), StringType, tz).eval().toString
+    val files = parts.filter(p => rowsOf(p._2) > 0).map { case (f, footer) =>
+      val legacyDates = footer.getFileMetaData.getKeyValueMetaData
+        .containsKey(LegacyDateTimeKey)
+      val bounds = statsCols.zip(types.flatten).map { case (c, dt) =>
+        if (dt == DateType && legacyDates) None
+        else chunkBounds(footer, c, dt).map(_.map { case (lo, hi) =>
+          (c, render(lo, dt), render(hi, dt)) })
+      }
+      if (bounds.contains(None)) None
+      else {
+        val known = bounds.flatten.flatten
+        Some(f.copy(rows = rowsOf(footer),
+          min = known.map(b => b._1 -> b._2).toMap,
+          max = known.map(b => b._1 -> b._3).toMap))
+      }
+    }
+    if (files.contains(None)) None else Some(files.flatten)
+  }
+
+  /** The [min, max] of top-level column `c` over the footer's row
+    * groups, as Spark values of `dt`: Some(None) when every value is
+    * null, None when a chunk holding a non-null value has no min/max. */
+  private def chunkBounds(footer: ParquetMetadata, c: String,
+      dt: DataType): Option[Option[(Any, Any)]] = {
+    val path = ColumnPath.get(c)
+    val ord = PhysicalDataType.ordering(dt)
+    def value(v: Any): Any = (dt, v) match {
+      case (ByteType, i: Integer) => i.toByte
+      case (ShortType, i: Integer) => i.toShort
+      case (_, b: Binary) => UTF8String.fromBytes(b.getBytes)
+      case _ => v
+    }
+    footer.getBlocks.iterator().asScala()
+      .foldLeft(Option(Option.empty[(Any, Any)])) { (acc, block) =>
+        acc.flatMap { sofar =>
+          val st = block.getColumns.iterator().asScala()
+            .find(_.getPath == path).map(_.getStatistics).orNull
+          if (block.getRowCount == 0) acc
+          else if (st == null || st.isEmpty || !st.isNumNullsSet) None
+          else if (!st.hasNonNullValue)
+            if (st.getNumNulls == block.getRowCount) acc else None
+          else {
+            val (lo, hi) = (value(st.genericGetMin), value(st.genericGetMax))
+            Some(Some(sofar.fold((lo, hi)) { case (a, b) =>
+              (ord.min(a, lo), ord.max(b, hi)) }))
+          }
+        }
+      }
+  }
+
+  /** Per-file rows and `statsCols` min/max of `files` by one distributed
+    * aggregate grouped by file name (part names are unique across
+    * writes): [[writeData]]'s fallback for stats its footers do not hold
+    * exactly. Zero-row files form no group and are left out. */
+  private[graft] def aggregateStats(spark: SparkSession, dir: String,
+      files: Seq[GvtFile], schema: StructType,
+      statsCols: Seq[String]): Seq[GvtFile] = {
+    val byName = files.map(f => f.path.split('/').last -> f).toMap
     val fname = element_at(split(input_file_name(), "/"), -1).as("_gvt_fname")
     // TIMESTAMP stats are recorded as UTC EPOCH MICROS (r14): a
     // TimestampType value IS an instant, and `cast(string)` rendered
@@ -1253,9 +1377,8 @@ object Gvt {
     // already and stays string-rendered; no zone stamp is needed for
     // anything written from here on ([[GvtFile.tz]] remains for old
     // manifests).
-    def isTsType(c: String) = schema.fields.exists(f =>
-      f.name == c &&
-        f.dataType == org.apache.spark.sql.types.TimestampType)
+    def isTsType(c: String) =
+      schema.fields.exists(f => f.name == c && f.dataType == TimestampType)
     val aggs = count(lit(1)).as("_gvt_rows") +:
       statsCols.flatMap { c =>
         if (isTsType(c)) Seq(
@@ -1265,19 +1388,18 @@ object Gvt {
           min(col(c)).cast("string").as(s"_gvt_min_$c"),
           max(col(c)).cast("string").as(s"_gvt_max_$c"))
       }
-    val adds = written.groupBy(fname).agg(aggs.head, aggs.tail: _*)
+    scanFiles(spark, dir, files, schema).groupBy(fname)
+      .agg(aggs.head, aggs.tail: _*)
       .collect()
       .toSeq
       .map { r =>
-        GvtFile(s"$sub/${r.getString(0)}", r.getLong(1),
-          statsCols.zipWithIndex.flatMap { case (c, i) =>
+        byName(r.getString(0)).copy(rows = r.getLong(1),
+          min = statsCols.zipWithIndex.flatMap { case (c, i) =>
             Option(r.getString(2 + 2 * i)).map(c -> _) }.toMap,
-          statsCols.zipWithIndex.flatMap { case (c, i) =>
-            Option(r.getString(3 + 2 * i)).map(c -> _) }.toMap,
-          bytes = bytes(s"$sub/${r.getString(0)}"))
+          max = statsCols.zipWithIndex.flatMap { case (c, i) =>
+            Option(r.getString(3 + 2 * i)).map(c -> _) }.toMap)
       }
       .sortBy(_.path)
-    Written(adds, schema.json)
   }
 
   /** Write the checkpoint of version `v` (idempotent: a racing writer's
@@ -1532,16 +1654,18 @@ object Gvt {
   }
 
   /** Files of `files` that contain at least one key from `srcKeys`:
-    * manifest-range prune (metadata-only), then an exact column-pruned
-    * probe — scan ONLY the key column of surviving candidates,
-    * semi-join with the source keys, collect the distinct FILE NAMES
-    * that hit (a file-count-bounded metadata collect, never data). */
+    * manifest-range prune against the keys' `min(key)`/`max(key)` cast
+    * to string (`bounds`, null when every key is null — the caller's
+    * one aggregate over its keys computes them, so no action runs here
+    * for them), then one action: an exact column-pruned probe that
+    * scans ONLY the key column of surviving candidates, semi-joins with
+    * the source keys and collects the distinct FILE NAMES that hit (a
+    * file-count-bounded metadata collect, never data). No candidate, no
+    * action. */
   private def filesContaining(spark: SparkSession, dir: String,
       files: Seq[GvtFile], pin: Option[StructType], srcKeys: DataFrame,
-      key: String): Seq[GvtFile] = {
-    val bounds = srcKeys.agg(min(col(key)).cast("string"),
-      max(col(key)).cast("string")).head
-    val (srcLo, srcHi) = (bounds.getString(0), bounds.getString(1))
+      key: String, bounds: (String, String)): Seq[GvtFile] = {
+    val (srcLo, srcHi) = bounds
     // the comparison kind follows the KEY'S DATA TYPE (r13 ADVICE):
     // ZKind.Num against a STRING key whose values parse as numbers
     // compares the lexicographic stat strings numerically — a file box
@@ -1617,13 +1741,18 @@ object Gvt {
     *   3. rewrite: touched rows anti-joined on key (drop the matched
     *      old versions) unioned with ALL source rows, written as new
     *      files; untouched files carry over by reference.
-    * Aborts (throws) on concurrent commit — the read set is stale. */
+    * Before the probe, ONE aggregate over the persisted per-key counts
+    * gives the source's emptiness (`count(*)`), its largest key
+    * multiplicity (`max(_gvt_n)`) and its key bounds for step 1; an
+    * empty source lands no version, and the lookup that names a
+    * duplicate key runs only when there is one. So a merge is that
+    * aggregate, the probe and one [[writeData]]. Aborts (throws) on
+    * concurrent commit — the read set is stale. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       key: String, statsCols: Seq[String],
       txn: String = null): Int = rmwRetry(spark) {
     val base = latestVersion(dir)
     val (files, state, pin) = resolveManifest(dir, Some(base))
-    if (source.isEmpty) return base // no-op: nothing to upsert
     // MAPPING-AWARE (logical in, logical ops, physical out): the source
     // and the key speak logical names; new rows must pass the table's
     // checks (survivor rows were validated by the commit that wrote
@@ -1636,17 +1765,23 @@ object Gvt {
     // MERGE cardinality (which rejects only multiply-MATCHED target
     // rows and allows duplicate unmatched keys): this op's contract is
     // replace-matched-with-THE-source-row, which has no meaning for a
-    // duplicated key anywhere in the source. One bounded aggregate
-    // probe; the count column uses the reserved _gvt_ namespace so a
-    // merge key literally named "n" cannot collide (r13 review).
-    // PERSISTED: srcKeys feeds the probe here plus the bounds agg and
-    // semi-join inside filesContaining — without the persist the
-    // source lineage re-aggregates once per action (r13 review).
+    // duplicated key anywhere in the source. The count column uses the
+    // reserved _gvt_ namespace so a merge key literally named "n" cannot
+    // collide (r13 review). PERSISTED: keyCounts feeds the summary
+    // aggregate here plus the semi-join inside filesContaining and the
+    // rewrite's anti-join — without the persist the source lineage
+    // re-aggregates once per action (r13 review).
     val keyCounts = source1.groupBy(col(key))
       .agg(count(lit(1)).as("_gvt_n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val dup = keyCounts.filter(col("_gvt_n") > 1).limit(1).collect()
+      val summary = keyCounts.agg(count(lit(1)), max(col("_gvt_n")),
+        min(col(key)).cast("string"), max(col(key)).cast("string")).head
+      if (summary.getLong(0) == 0) return base // no-op: nothing to upsert
+      // the lookup that names a duplicate runs only when there is one
+      val dup =
+        if (summary.getLong(1) <= 1) Array.empty[org.apache.spark.sql.Row]
+        else keyCounts.filter(col("_gvt_n") > 1).limit(1).collect()
       require(dup.isEmpty, s"GVT $dir: merge source has duplicate values " +
         s"of key '$key' (e.g. ${dup.headOption.map(_.get(0)).orNull}, " +
         s"×${dup.headOption.map(_.get(1)).orNull}) — the upsert key must " +
@@ -1654,7 +1789,8 @@ object Gvt {
         "deduplicate the source first")
       val srcKeys = keyCounts.select(col(key))
       val touchedFiles = filesContaining(spark, dir, files, pin,
-        srcKeys.withColumnRenamed(key, keyP), keyP)
+        srcKeys.withColumnRenamed(key, keyP), keyP,
+        (summary.getString(2), summary.getString(3)))
       val rewritten =
         if (touchedFiles.isEmpty) source1
         else {
@@ -1693,11 +1829,15 @@ object Gvt {
       txn: String = null): Int = rmwRetry(spark) {
     val base = latestVersion(dir)
     val (files, state, pin) = resolveManifest(dir, Some(base))
-    if (keys.isEmpty) return base
+    // emptiness and key bounds in one aggregate, as merge takes them
+    val summary = keys.agg(count(lit(1)),
+      min(col(key)).cast("string"), max(col(key)).cast("string")).head
+    if (summary.getLong(0) == 0) return base
     val keyP = state.physicalOf(key)
     val srcKeys = keys.select(col(key)).distinct()
     val touchedFiles = filesContaining(spark, dir, files, pin,
-      srcKeys.withColumnRenamed(key, keyP), keyP)
+      srcKeys.withColumnRenamed(key, keyP), keyP,
+      (summary.getString(1), summary.getString(2)))
     if (touchedFiles.isEmpty) return base
     // rewrite read: the table's unified schema (see merge)
     val touchedDf = applyMapping(readFiles(spark, dir, touchedFiles,
@@ -1707,10 +1847,8 @@ object Gvt {
     val kept = touchedDf.join(srcKeys, Seq(key), "left_anti")
       .select(touchedDf.columns.map(col): _*)
     val v = base + 1
-    val w =
-      if (kept.isEmpty) Written(Nil, null)
-      else writeData(spark, dir, toPhysical(kept, state),
-        statsCols.map(state.physicalOf), v)
+    val w = writeData(spark, dir, toPhysical(kept, state),
+      statsCols.map(state.physicalOf), v)
     if (!tryPublish(dir,
         GvtCommit(v, "delete", w.adds, touchedFiles.map(_.path),
           txn = txn, dataSchema = w.dataSchema), spark))
@@ -1744,10 +1882,8 @@ object Gvt {
       schemaFor(spark, dir, touchedFiles, pin)), state)
       .filter(!coalesce(predicate, lit(false)))
     val v = base + 1
-    val w =
-      if (kept.isEmpty) Written(Nil, null)
-      else writeData(spark, dir, toPhysical(kept, state),
-        statsCols.map(state.physicalOf), v)
+    val w = writeData(spark, dir, toPhysical(kept, state),
+      statsCols.map(state.physicalOf), v)
     if (!tryPublish(dir,
         GvtCommit(v, "delete", w.adds, touchedFiles.map(_.path),
           txn = txn, dataSchema = w.dataSchema), spark))
@@ -1852,7 +1988,10 @@ object Gvt {
     val perFile = readDv(spark, dir, Seq(sub)).groupBy("_gvt_file")
       .agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (perFile.isEmpty) return base // no-op: nothing matched
+    if (perFile.isEmpty) { // no-op: nothing matched; drop the sidecar
+      deleteRecursively(Paths.get(dir, sub))
+      return base
+    }
     val touched = files.filter(f => perFile.contains(f.path))
     val adds = touched.map(f =>
       f.copy(dv = dvOf(f) :+ sub, dvRows = f.dvRows + perFile(f.path)))
@@ -1921,9 +2060,7 @@ object Gvt {
     val live = state.drops.foldLeft(readFiles(spark, dir, doomed,
       schemaFor(spark, dir, doomed, pin)))(_.drop(_))
     val v = base + 1
-    val w =
-      if (live.isEmpty) Written(Nil, null)
-      else writeData(spark, dir, live, statsCols.map(state.physicalOf), v)
+    val w = writeData(spark, dir, live, statsCols.map(state.physicalOf), v)
     if (!tryPublish(dir,
         GvtCommit(v, "absorb", w.adds, doomed.map(_.path),
           dataSchema = w.dataSchema), spark))

@@ -962,6 +962,181 @@ class GvtSpec extends GraftSuite {
     assert(df.columns.toSeq == Seq("k", "v", "w"))
     assert(evolvedRows(df) == evolvedWant)
   }
+
+  /** A 6,000-row table from two appends of interleaved halves, so the
+    * files of both commits span the whole key range. */
+  private def commitMixTable(): String = {
+    val dir = freshDir()
+    Gvt.append(spark, dir, slab(0, 6000).filter(col("k") % 2 === 0), Seq("k"))
+    Gvt.append(spark, dir, slab(0, 6000).filter(col("k") % 2 === 1), Seq("k"))
+    dir
+  }
+
+  test("jobs per call: append ≤3, compact ≤3, update ≤5, merge ≤11") {
+    val dir = commitMixTable()
+    val append = jobsDuring(Gvt.append(spark, dir, slab(6000, 9000), Seq("k")))
+    // the source replaces keys [8500, 9000) and inserts [9000, 9500)
+    val merge = jobsDuring(Gvt.merge(spark, dir,
+      slab(8500, 9500).withColumn("v", col("v") + 1), "k", Seq("k")))
+    val update = jobsDuring(Gvt.updateWhere(spark, dir,
+      col("k").between(100, 900), Seq("v" -> (col("v") - 1)), Seq("k")))
+    val compact = jobsDuring(Gvt.compact(spark, dir, Long.MaxValue, 1, Seq("k")))
+    assert(Gvt.latestVersion(dir) == 5, "every call must land a version")
+    assert(append <= 3, s"append ran $append jobs")
+    assert(merge <= 11, s"merge ran $merge jobs")
+    assert(update <= 5, s"update ran $update jobs")
+    assert(compact <= 3, s"compact ran $compact jobs")
+    val want = (0L until 9500L).map { k =>
+      val merged = if (k >= 8500L) 1L else 0L
+      val updated = if (k >= 100L && k <= 900L) -1L else 0L
+      (k, k * 10 + merged + updated)
+    }
+    assert(sortedRows(Gvt.read(spark, dir)) == want)
+    assert(Gvt.snapshot(dir).map(_.rows).sum == 9500L)
+  }
+
+  test("merge: an empty source lands no version") {
+    val dir = commitMixTable()
+    val head = Gvt.latestVersion(dir)
+    assert(Gvt.merge(spark, dir, slab(0, 10).filter(lit(false)), "k",
+      Seq("k")) == head)
+    assert(Gvt.latestVersion(dir) == head)
+    assert(Gvt.read(spark, dir).count() == 6000L)
+  }
+
+  test("merge: a source with a duplicate key still fails loudly") {
+    val dir = commitMixTable()
+    val head = Gvt.latestVersion(dir)
+    val e = intercept[IllegalArgumentException](Gvt.merge(spark, dir,
+      slab(10, 20).union(slab(15, 16)), "k", Seq("k")))
+    assert(e.getMessage == s"requirement failed: GVT $dir: merge source " +
+      "has duplicate values of key 'k' (e.g. 15, ×2) — the upsert key " +
+      "must be unique in the source (stricter than SQL MERGE " +
+      "cardinality); deduplicate the source first")
+    assert(Gvt.latestVersion(dir) == head)
+  }
+
+  test("rewrites that end empty land no adds and leave no data dir") {
+    val dir = freshDir()
+    Gvt.append(spark, dir, slab(0, 10).repartition(1), Seq("k"))
+    Gvt.append(spark, dir, slab(10, 20).repartition(1), Seq("k"))
+    def dataDirs = Files.list(Paths.get(dir, "data")).iterator().asScala
+      .map(_.getFileName.toString).toSet
+    val before = dataDirs
+    // every row of the first commit goes: the delete removes its files
+    // and adds none
+    assert(Gvt.delete(spark, dir, col("k") < 10, Seq("k")) == 2)
+    assert(Gvt.commitAt(dir, 2).adds.isEmpty)
+    assert(Gvt.commitAt(dir, 2).removes.toSet ==
+      Gvt.commitAt(dir, 0).adds.map(_.path).toSet)
+    assert(Gvt.deleteKeys(spark, dir, slab(10, 20).select("k"), "k",
+      Seq("k")) == 3)
+    assert(Gvt.commitAt(dir, 3).adds.isEmpty)
+    assert(Gvt.snapshot(dir).isEmpty)
+    // a DV delete matching nothing lands nothing and drops its sidecar
+    Gvt.append(spark, dir, slab(20, 30), Seq("k"))
+    val withAppend = dataDirs
+    assert(Gvt.deleteWhereDV(spark, dir, col("k") > 100L) == 4)
+    assert(dataDirs == withAppend)
+    assert(dataDirs.size == before.size + 1, s"$before → $dataDirs")
+  }
+
+  /** (path, rows, min, max) of manifest entries, ordered by path. */
+  private def statsOf(files: Seq[Gvt.GvtFile])
+      : Seq[(String, Long, Map[String, String], Map[String, String])] =
+    files.map(f => (f.path, f.rows, f.min, f.max)).sortBy(_._1)
+
+  /** The footer path's stats of the table's files (None: it declines),
+    * the aggregate's, and what the commits recorded. */
+  private def statsPaths(dir: String, cols: Seq[String]) = {
+    val files = Gvt.snapshot(dir)
+    val schema = Gvt.pinnedSchema(dir).get
+    val conf = spark.sessionState.newHadoopConf()
+    val footers = files.map(f => Gvt.readFooter(conf, s"$dir/${f.path}"))
+    (Gvt.footerStats(spark, conf, files.zip(footers), schema, cols)
+      .map(statsOf),
+      statsOf(Gvt.aggregateStats(spark, dir, files, schema, cols)),
+      statsOf(files))
+  }
+
+  test("footer stats equal the aggregate's for byte, short, int, long, " +
+      "string and date columns") {
+    val dir = freshDir()
+    val cols = Seq("b", "s", "i", "l", "str", "d")
+    def typed(lo: Long, until: Long): DataFrame =
+      spark.range(lo, until).select(
+        (col("id") % 256 - 128).cast("byte").as("b"),
+        (col("id") * 997 % 65536 - 32768).cast("short").as("s"),
+        when(col("id") === 0, lit(Int.MinValue))
+          .otherwise((col("id") * 7919).cast("int")).as("i"),
+        when(col("id") === 1, lit(Long.MinValue))
+          .when(col("id") === 2, lit(Long.MaxValue))
+          .otherwise(col("id") * -3).as("l"),
+        // "｡" (U+FF61) sorts above "😀" in UTF-16 but below it in UTF-8
+        element_at(array(lit(""), lit("ß"), lit("日本語"), lit("zeta"),
+          lit("Ωmega"), lit("😀"), lit("｡"), lit("a\u0000b"),
+          lit(null).cast("string")), (col("id") % 9 + 1).cast("int")).as("str"),
+        expr("date_add(date'1900-01-01', cast(id * 400 as int))").as("d"))
+    Gvt.append(spark, dir, typed(0, 200), cols)
+    // small row groups: a file's bounds fold over several chunks
+    spark.conf.set("parquet.block.size", "4096")
+    try Gvt.append(spark, dir, typed(200, 600).repartition(3), cols)
+    finally spark.conf.unset("parquet.block.size")
+    val conf = spark.sessionState.newHadoopConf()
+    assert(Gvt.snapshot(dir).exists(f =>
+      Gvt.readFooter(conf, s"$dir/${f.path}").getBlocks.size > 1))
+    val (footer, agg, recorded) = statsPaths(dir, cols)
+    assert(footer.contains(agg), "the footer path must serve these types")
+    assert(recorded == agg)
+    assert(recorded.map(_._2).sum == 600L)
+    // pre-1970 dates, Long.MinValue, the empty string and 4-byte UTF-8
+    // are among the bounds compared
+    assert(recorded.exists(_._3.get("d").exists(_ < "1970")))
+    assert(recorded.exists(_._3.get("l").contains(Long.MinValue.toString)))
+    assert(recorded.exists(_._3.get("str").contains("")))
+    assert(recorded.exists(_._4.get("str").contains("😀")))
+  }
+
+  test("stats the footers do not hold exactly take the aggregate") {
+    def check(label: String, df: DataFrame, cols: Seq[String],
+        footerServes: Boolean): Unit = {
+      val dir = freshDir()
+      Gvt.append(spark, dir, df, cols)
+      val (footer, agg, recorded) = statsPaths(dir, cols)
+      assert(footer.isDefined == footerServes, s"$label: footer path")
+      assert(recorded == agg, s"$label: recorded stats")
+      footer.foreach(f => assert(f == agg, s"$label: footer stats"))
+    }
+    val ids = spark.range(0, 50)
+    check("all-null long", ids.select(col("id").as("k"),
+      lit(null).cast("long").as("n")), Seq("k", "n"), footerServes = true)
+    check("string over 4 KB", ids.select(col("id").as("k"),
+      when(col("id") === 7, lit("x" * 5000))
+        .otherwise(col("id").cast("string")).as("big")),
+      Seq("k", "big"), footerServes = false)
+    check("double", ids.select(col("id").as("k"),
+      (col("id") / 3.0).as("x")), Seq("k", "x"), footerServes = false)
+    check("decimal", ids.select(col("id").as("k"),
+      (col("id") / 7).cast("decimal(12,3)").as("x")), Seq("k", "x"),
+      footerServes = false)
+    check("timestamp", ids.select(col("id").as("k"),
+      expr("timestamp'1960-01-02 03:04:05' + make_interval(0, 0, 0, id)")
+        .as("x")), Seq("k", "x"), footerServes = false)
+    check("timestamp_ntz", ids.select(col("id").as("k"),
+      expr("timestamp_ntz'2024-01-02 03:04:05' + make_interval(0, 0, 0, id)")
+        .as("x")), Seq("k", "x"), footerServes = false)
+    // dates rebased into the legacy hybrid calendar on write
+    spark.conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "LEGACY")
+    try check("legacy-rebased date", ids.select(col("id").as("k"),
+      expr("date_add(date'1500-01-01', cast(id as int))").as("d")),
+      Seq("k", "d"), footerServes = false)
+    finally spark.conf.unset("spark.sql.parquet.datetimeRebaseModeInWrite")
+    spark.conf.set("parquet.statistics.truncate.length", "4")
+    try check("truncated stats", ids.select(col("id").as("k"),
+      concat(lit("long-prefix-"), col("id").cast("string")).as("x")),
+      Seq("k", "x"), footerServes = false)
+    finally spark.conf.unset("parquet.statistics.truncate.length")
+  }
 }
 
 object GvtSpec {
