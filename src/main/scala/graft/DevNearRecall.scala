@@ -22,8 +22,7 @@ object DevNearRecall {
     val spark = Sessions.local("32", "ERROR")
     for (dir <- dirs) {
       val sets = Tables(spark, dir, "documents")
-        .select(col("doc_id"),
-          array_distinct(llm.Dedup.hashedShingles(col("text"))).as("shs"))
+        .select(col("doc_id"), llm.Dedup.shingleSet(col("text")).as("shs"))
         .localCheckpoint()
       // exact truth: all-pairs shingle equi-join (small corpus, dev only)
       val post = sets.select(col("doc_id"), explode(col("shs")).as("sh"))

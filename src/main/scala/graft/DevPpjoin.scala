@@ -1,8 +1,9 @@
 package graft
 
-/** Dev probe: decompose the PPJoin near-dup keys (r16 verdict item 4)
-  * into candidate-stage vs exact-verify cost, with the noop sink
-  * (guide §1.4) so column pruning cannot hide verify work.
+/** Dev probe: decompose the PPJoin near-dup keys into shingling,
+  * candidate-stage and exact-verify cost, with the noop sink
+  * (guide §1.4) so column pruning cannot hide verify work, then print
+  * the candidate rows at both keys' τ.
   *
   * Usage: runMain graft.DevPpjoin <dir> [iters]
   */
@@ -25,6 +26,7 @@ object DevPpjoin {
       val (cand, _) = llm.DedupVariants.ngramCandidates(spark, dir)
       noop(cand)
     }
+    // the shingle sets alone: one shingle_set call per document
     time("sets_only") {
       val (_, sets) = llm.DedupVariants.ngramCandidates(spark, dir)
       noop(sets)
@@ -35,8 +37,10 @@ object DevPpjoin {
     time("full_dedup_near_tau05") {
       noop(SparkEntry.queries("llm_dedup_near")(spark, dir))
     }
-    val (cand, _) = llm.DedupVariants.ngramCandidates(spark, dir)
-    println("PPJ cand_rows " + cand.count())
+    for (tau <- Seq(0.6, 0.5)) {
+      val (cand, _) = llm.DedupVariants.ngramCandidates(spark, dir, tau)
+      println(s"PPJ cand_rows tau=$tau " + cand.count())
+    }
     spark.stop()
   }
 }

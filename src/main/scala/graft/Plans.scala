@@ -18,7 +18,7 @@ object Plans {
     "join_broadcast" -> "star dims broadcast; fact never shuffles for them",
     "plan_topk_native" -> "custom two-phase TopKPerGroup operator",
     "join_dpp" -> "dynamic partition pruning on a partitioned layout",
-    "llm_dedup_ngram_jaccard" -> "PPJoin prefix-filter similarity self-join",
+    "llm_dedup_ngram_jaccard" -> "PPJoin prefix+positional-filter self-join over one shingle_set per doc",
     "llm_corpus_pipeline" -> "five pipeline stages fused into one DAG",
     "scan_fixed_width_dsv2" -> "DSv2 connector with pruned custom scan",
     "win_rank_topn" -> "WindowGroupLimit pushdown under the rank filter",

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   *
   * PRECONDITION (caller-owned, like any sorted-merge kernel): both
   * arrays ascending and duplicate-free. The near-dup sets satisfy it by
-  * construction (`array_sort(array_distinct(...))`). A null ELEMENT
+  * construction: they are [[ShingleSet]] output. A null ELEMENT
   * (possible only under a containsNull schema, which the pipeline never
   * produces) nulls the result instead of silently reading garbage; the
   * check is emitted only for containsNull inputs, so the hot path is

@@ -13,11 +13,13 @@ import graft.Tables
   * shuffle rows narrow (applied here — md5, NOT a 64-bit hash: see
   * [[dedupExact]]'s scaladoc for the collision-bound argument).
   *
-  * Near-dup: MinHash+LSH, all per-row HOF expressions (codegen'd, no
-  * UDFs): 3-word shingles → 16 minhash permutations via xxhash64(shingle,
-  * seed) → 4 bands × 4 rows → candidate pairs from band-bucket joins.
-  * At 100 TB the band explode+groupBy is the standard LSH shuffle; the
-  * quadratic step runs only within a bucket.
+  * Near-dup: every stage starts from one shingle set per document, the
+  * codegen'd `shingle_set` kernel ([[shingleSet]]). PPJoin
+  * ([[dedupNear]]) joins prefix postings of those sets; MinHash+LSH
+  * ([[dedupNearLsh]]) hashes them into 64 permutations via
+  * xxhash64(shingle, seed) → 16 bands × 4 rows → candidate pairs from
+  * band-bucket joins. At 100 TB the band explode+groupBy is the
+  * standard LSH shuffle; the quadratic step runs only within a bucket.
   */
 object Dedup {
 
@@ -61,26 +63,24 @@ object Dedup {
     slice(tris, lit(1), greatest(size(w) - lit(2), lit(0)))
   }
 
-  /** 3-word shingles hashed straight to 64 bits: xxhash64 over the word
-    * TRIPLE (multi-arg seed chaining), never materializing the trigram
-    * string. Halves the per-doc shingle cost vs hashing
-    * [[shingles]] output — no concat_ws allocations — and is
-    * word-boundary-aware where string concatenation is not. Same
-    * full-trigrams-only windowing as [[shingles]].
+  /** The document's 3-word shingle SET: the sorted, distinct 64-bit
+    * hashes of its word triples, one `shingle_set` call
+    * ([[graft.functions.ShingleSet]]). Never null — null or short text
+    * gives the empty set — so every MinHash and PPJoin stage shares
+    * one definition of a shingle. The hash covers the word TRIPLE, not
+    * a joined string, so no trigram text is ever materialized; same
+    * full-trigrams-only windowing as [[shingles]]. A 64-bit collision
+    * needs ~2^32 distinct shingles to become likely, and would only
+    * inflate one intersection count by 1.
     */
-  def hashedShingles(text: Column): Column = {
-    val w = words(text)
-    val pairs = zip_with(w, slice(w, lit(2), size(w)),
-      (x, y) => struct(x.as("a"), y.as("b")))
-    val tris = zip_with(pairs, slice(w, lit(3), size(w)),
-      (p, z) => xxhash64(p.getField("a"), p.getField("b"), z))
-    slice(tris, lit(1), greatest(size(w) - lit(2), lit(0)))
-  }
+  def shingleSet(text: Column): Column = call_function("shingle_set", text)
 
   /** 16-permutation MinHash signature: sig[i] = min over shingles of
     * xxhash64(hashed_shingle, i) — permutation hashes run over the
-    * 64-bit [[hashedShingles]], so the 16 per-shingle hashes cost
-    * long-mixes instead of 17-byte string traversals.
+    * 64-bit [[shingleSet]], so the 16 per-shingle hashes cost
+    * long-mixes instead of 17-byte string traversals. A min is blind
+    * to order and repeats, so the set gives the same signature as the
+    * shingle sequence would.
     *
     * Per-row HOF form — the semantic definition, used for golden tests.
     * Higher-order functions are interpreted (no codegen) in Spark, so
@@ -90,7 +90,7 @@ object Dedup {
     */
   def minhashSignature(text: Column, perms: Int = 16): Column =
     transform(sequence(lit(0), lit(perms - 1)),
-      i => array_min(transform(hashedShingles(text), s => xxhash64(s, i))))
+      i => array_min(transform(shingleSet(text), s => xxhash64(s, i))))
 
   /** Distributed MinHash: explode shingles, compute all 16 permutation
     * hashes as parallel codegen'd xxhash64(shingle, i) columns —
@@ -113,7 +113,7 @@ object Dedup {
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val exploded = docs
       .repartition(nPart, col("doc_id"))
-      .select(col("doc_id"), explode(hashedShingles(col("text"))).as("sh"))
+      .select(col("doc_id"), explode(shingleSet(col("text"))).as("sh"))
     val mins = (0 until perms).map(i =>
       min(xxhash64(col("sh"), lit(i))).as(s"h$i"))
     exploded
@@ -258,37 +258,41 @@ object Dedup {
   }
 
   /** Shared exact-verify stage: true trigram jaccard over the full
-    * shingle sets for each candidate pair, thresholded at τ. The
-    * shingle-set side is doc-count-sized (broadcastable here; at 100 TB
-    * swap the two broadcasts for shuffle hash joins on id). distinct()
-    * before the sort: PPJoin candidates may propose a pair once per
-    * shared prefix token (measured dup factor 1.04), LSH once per
-    * colliding band — either way survivors dedup where only ~|result|
-    * rows remain.
+    * shingle sets for each candidate pair, thresholded at τ.
+    *
+    * PRECONDITION: `sets.shs` is sorted ascending and duplicate-free —
+    * what [[shingleSet]] yields — because the intersection count is the
+    * two-pointer `sorted_intersect_count` kernel (no per-pair hash set,
+    * no materialized intersection). On distinct inputs that count is
+    * size(array_intersect), so the jaccard, and the oracle, are exact.
+    *
+    * The shingle-set side is doc-count-sized (broadcastable here; at
+    * 100 TB swap the two broadcasts for shuffle hash joins on id).
+    * Candidates may repeat a pair (PPJoin once per shared prefix token,
+    * LSH once per colliding band), so survivors are distinct()'d where
+    * only ~|result| rows remain.
     */
   private[llm] def verifyJaccard(cand: DataFrame, sets: DataFrame,
       tau: Double): DataFrame = {
-    // sort ONCE per document (doc-count-sized, map-side); every
-    // candidate pair then verifies with the codegen'd two-pointer
-    // kernel — no per-pair hash set, no materialized intersection
-    // array. Counts (and therefore jaccard and the oracle) are
-    // unchanged: the inputs are distinct, so shared-distinct-count ≡
-    // size(array_intersect).
-    val sorted = sets.select(col("doc_id"), array_sort(col("shs")).as("shs"))
-    val sa = sorted.as("sa")
-    val sb = sorted.as("sb")
+    val sa = sets.as("sa")
+    val sb = sets.as("sb")
     cand
       .join(broadcast(sa), col("id_a") === col("sa.doc_id"))
       .join(broadcast(sb), col("id_b") === col("sb.doc_id"))
       .withColumn("inter", expr("sorted_intersect_count(sa.shs, sb.shs)"))
-      .withColumn("jaccard",
-        col("inter").cast("double")
-          / (size(col("sa.shs")) + size(col("sb.shs")) - col("inter")).cast("double"))
+      .withColumn("jaccard", jaccard(col("inter"), size(col("sa.shs")), size(col("sb.shs"))))
       .filter(col("jaccard") >= tau)
       .select("id_a", "id_b", "jaccard")
       .distinct()
       .orderBy("id_a", "id_b")
   }
+
+  /** Trigram jaccard from the overlap and the two set sizes, in the one
+    * arithmetic form every stage uses: a bound tested with it (PPJoin's
+    * positional filter) admits whatever the verify step keeps.
+    */
+  private[graft] def jaccard(inter: Column, szA: Column, szB: Column): Column =
+    inter.cast("double") / (szA + szB - inter).cast("double")
 
   /** The LSH banding candidate stage of [[dedupNear]] — (candidate
     * pairs, full shingle sets) — extracted so the round-5 scaling
@@ -310,8 +314,7 @@ object Dedup {
     // same width-before-shingle-work exchange as the signature path
     val sets = docs
       .repartition(w, col("doc_id"))
-      .select(col("doc_id"),
-        array_distinct(hashedShingles(col("text"))).as("shs"))
+      .select(col("doc_id"), shingleSet(col("text")).as("shs"))
     val sigs = minhashSignatures(spark, docs, perms = 64, width = Some(w))
     val nPart = w
     val banded = sigs.select(
@@ -371,7 +374,7 @@ object Dedup {
     // corpus under the scan-split floor is ONE partition and would
     // serialize the explode + partial aggregate into a single task
     Tables.wide(spark, dir, "documents")
-      .select(col("doc_id"), explode(hashedShingles(col("text"))).as("sh"))
+      .select(col("doc_id"), explode(shingleSet(col("text"))).as("sh"))
       .groupBy("doc_id")
       .agg(expr("minhash_agg(sh)").as("sig"))
       .select(col("doc_id"),

@@ -74,24 +74,15 @@ object DedupVariants {
       .orderBy("id_a", "id_b")
   }
 
-  /** Exact 3-gram Jaccard pairs (jaccard >= 0.6) via AllPairs/PPJoin
-    * prefix filtering (Bayardo et al., WWW'07; Xiao et al., WWW'08):
-    * under any global token order, two sets with J(A,B) >= τ must share
-    * a token within each side's first |X| - ceil(τ·|X|) + 1 tokens, so
-    * only PREFIX postings enter the inverted-index self-join. Tokens are
-    * ordered rarest-first (ascending document frequency), which pushes
-    * the hottest shingles out of every prefix — at sf0.1 this cuts the
-    * candidate join from ~6.6M posting pairs to ~3% of that, and at
-    * 100 TB it is the difference between a bounded-posting-list join and
-    * a quadratic hot-key blowup. Candidates are then verified EXACTLY
-    * with array_intersect on the full shingle sets (integer counts →
-    * the jaccard division is bit-identical across engines), so the
-    * result — and the DuckDB oracle — is unchanged from the naive join.
+  /** Exact 3-gram Jaccard pairs (jaccard >= 0.6) via PPJoin (Bayardo
+    * et al., WWW'07; Xiao et al., WWW'08): [[ngramCandidates]] proposes
+    * a superset of the true pairs from prefix postings, and
+    * [[Dedup.verifyJaccard]] keeps exactly those whose jaccard over the
+    * full shingle sets reaches τ. Counts are integers, so the jaccard
+    * division is bit-identical across engines and the result equals the
+    * naive all-pairs join and the DuckDB oracle on any corpus.
     */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    // exact verification is Dedup.verifyJaccard — ONE implementation of
-    // the sorted-distinct + two-pointer-kernel contract for both dedup
-    // families (a drift between twin copies would silently skew counts)
     val (cand, sets) = ngramCandidates(spark, dir)
     Dedup.verifyJaccard(cand, sets, NgramTau)
   }
@@ -149,90 +140,50 @@ object DedupVariants {
     })
   }
 
-  /** The PPJoin candidate stage of [[ngramJaccard]] — (candidate pairs,
-    * full shingle sets) — extracted so the round-5 scaling experiment
-    * measures the ACTUAL candidate volume the operator generates (one
-    * definition, no dev-tool drift), not a re-derivation of it.
+  /** The PPJoin candidate stage of [[ngramJaccard]] and
+    * [[Dedup.dedupNear]]: (candidate pairs (id_a < id_b), shingle sets
+    * (doc_id, shs) in [[Dedup.shingleSet]]'s sorted-distinct form).
     *
-    * Prefix filtering guarantees EXACT recall at the given τ: any pair
-    * with J >= τ must share a token within each side's first
-    * |X| - ceil(τ·|X|) + 1 tokens under the global hash order, so the
-    * candidate set is a superset of the true pair set BY CONSTRUCTION —
-    * not probabilistically, like LSH banding. τ is a parameter since r7:
-    * llm_dedup_near routes through this stage at τ=0.5 so its
-    * exhaustive-jaccard oracle holds on ANY corpus, not just corpora
-    * whose true pairs sit above the banding's safe band (the r6 fixture
-    * regeneration proved the corpus can change under us).
+    * Invariant: every pair with J >= τ is a candidate, under either
+    * prefix order. Two filters prune, both exact:
+    *  - prefix: under a global token order, J(A,B) >= τ forces a shared
+    *    token within each side's first |X| - ceil(τ·|X|) + 1 tokens, so
+    *    only prefix postings enter the self-join;
+    *  - position: from the first shared token, at 0-based positions p_a
+    *    and p_b, at most m = min(|A| - p_a, |B| - p_b) tokens can be
+    *    shared. A posting pair is kept only if the verify predicate
+    *    ([[Dedup.jaccard]] >= τ) holds with m as the overlap; jaccard is
+    *    monotone in the overlap, so the row of a true pair's first
+    *    shared token always survives. Other rows of a pair may drop —
+    *    candidates repeat pairs and are deduplicated after
+    *    verification. At p = 0 the bound is min(|A|,|B|)/max(|A|,|B|),
+    *    so the filter subsumes PPJoin's length filter.
+    *
+    * The order is the shingle hash itself (pseudo-random, so prefixes
+    * are decorrelated from text content; the set arrives sorted, so a
+    * prefix is a slice) unless
+    * `spark.graft.ppjoin.dfOrdered` (true|false|auto, default auto — see
+    * [[autoDfOrderedGate]]) picks ascending (document frequency, hash),
+    * which pushes a boilerplate shingle out of every prefix at the cost
+    * of a df aggregate and a per-doc window. Both are global total
+    * orders, so recall is exact either way (NgramPrefixOrderSpec checks
+    * both against brute-force truth).
     */
   private[graft] def ngramCandidates(
       spark: SparkSession, dir: String,
       tau: Double = NgramTau): (DataFrame, DataFrame) = {
-    // Shingles are hashed to 64 bits ONCE at the source; every downstream
-    // exchange, join and intersection runs on fixed-width longs instead of
-    // ~17-byte strings (4× smaller shuffle rows, and the verify step's
-    // array_intersect drops from string-hash to long-hash cost). A 64-bit
-    // collision would need ~2^32 distinct shingles to become likely and
-    // would only ever inflate one intersection count by 1 — the standard
-    // MinHash-family tradeoff.
-    // width BEFORE the shingle work: the compressed corpus file is far
-    // smaller than Spark's scan-split floor (594 KB at sf0.1 → ONE scan
-    // partition, single row group), so without this exchange the whole
-    // hash+sort+explode chain runs in one task regardless of cores —
-    // the small-input/big-intermediate trap (see substringSpans).
-    // DATA-DERIVED width since r17 (guide §2): the session's 32-wide
-    // pin cost more dispatch than it parallelized at sf0.1 (family A/B:
-    // 1.75 s → 1.2-1.3 s at width 4-16 on ngram_jaccard, similar on
-    // near/lsh/components/survivor); the formula restores full width on
-    // the 10×/100× replica dirs where the candidate volume is real.
+    // One doc_id exchange of the raw (doc_id, text) rows before any
+    // shingling: the compressed corpus is one scan split (594 KB at
+    // sf0.1), so without it the shingle work runs in one task. The
+    // width is data-derived (Tables.explodeWidth) and
+    // pinned, because AQE's bytes proxy would coalesce this
+    // compute-heavy shuffle to one task (measured 3.6 s at sf0.1). The
+    // verify branch consumes the same exchange (ReusedExchange), so each
+    // document is scanned, shuffled and shingled once.
     val nPart = Tables.explodeWidth(spark, dir, "documents")
     val sets = Tables(spark, dir, "documents")
       .repartition(nPart, col("doc_id"))
-      .select(col("doc_id"),
-        array_distinct(Dedup.hashedShingles(col("text"))).as("shs"))
-    // Prefix selection is PURE MAP-SIDE: the global token order is the
-    // hash value itself (xxhash64 is a pseudo-random permutation, so
-    // prefixes are decorrelated from text content — unlike lexicographic
-    // order, which would put the same common leading words in every
-    // prefix), and each doc's prefix is slice(array_sort(shs), 1, L),
-    // L = |X| - ceil(τ·|X|) + 1. No document-frequency job, no window
-    // shuffle. At extreme corpus skew, upgrade the sort key to ascending
-    // (df, hash) via a broadcast df dimension — same plan plus one
-    // broadcast join — to push hot shingles out of every prefix.
-    //
-    // repartition on the shingle BEFORE splitting into the two self-join
-    // branches: both sides then hang off ONE identical Exchange subplan
-    // (ReusedExchange), so the scan→shingle→prefix chain runs once (the
-    // round-1 exchange-sharing lesson; without it the chain runs per
-    // branch and the "optimized" join is slower than the naive one).
-    // The repartition pins an EXPLICIT partition count: AQE would coalesce
-    // this ~MB-sized shuffle to one partition (its cost proxy is shuffle
-    // bytes), serializing the downstream join + array_intersect verify
-    // into a single task (measured 3.6 s in 1 task at sf0.1). User-
-    // specified partitioning is exempt from AQE coalescing, keeping the
-    // compute-heavy pipeline parallel.
-    // carry |X| with each posting: the PPJoin LENGTH filter
-    // (τ·|A| ≤ |B| ≤ |A|/τ is necessary for J ≥ τ) prunes
-    // size-incompatible candidates before the verify join ever sees them.
-    // Measured neutral at sf0.1 (verify is already cheap there); the win
-    // is asymptotic — at corpus scale posting lists are long and the
-    // filter bounds candidate volume independent of the verify path
-    //
-    // PREFIX ORDERING is config-gated (r7 verdict #4). "false" (hash
-    // order): pure map-side, measured linear through ×100.
-    // "true" switches to ascending (document-frequency, hash) order,
-    // which pushes hot shingles out of every prefix (−28% candidates
-    // measured at sf0.1, BASELINE.md r7 addendum) at the cost of a df
-    // aggregate + join + per-doc window — not worth it on a NORMAL
-    // corpus (+0.3–0.5 s vs ~0.1 s saved at fixture scale), decisive
-    // under extreme vocabulary skew, where one hot shingle's d²/2
-    // candidate pairs swamp the join. "auto" (the default since r9)
-    // measures that skew instead of asking the user to know it: see
-    // [[autoDfOrderedGate]]. Recall stays EXACT under either order: the
-    // prefix-filter guarantee needs only SOME global total order on
-    // shingles, and both (hash) and (df, hash) are global total orders
-    // — property-tested against brute-force truth in
-    // NgramPrefixOrderSpec, which also proves the gate flips on a
-    // skewed synthetic corpus and drops candidate volume.
+      .select(col("doc_id"), Dedup.shingleSet(col("text")).as("shs"))
     val dfOrdered =
       spark.conf.get("spark.graft.ppjoin.dfOrdered", "auto") match {
         case "true" => true
@@ -243,10 +194,12 @@ object DedupVariants {
       }
     val prefixLen: Column => Column = sz =>
       (sz - ceil(sz * lit(tau)) + lit(1)).cast("int")
+    // (doc_id, sz, pos, sh): each prefix token with its 0-based position
+    // in the doc's ordered set
     val prefix = (if (!dfOrdered) {
       sets.select(col("doc_id"), size(col("shs")).as("sz"),
-        explode(slice(array_sort(col("shs")), lit(1),
-          prefixLen(size(col("shs"))))).as("sh"))
+        posexplode(slice(col("shs"), lit(1), prefixLen(size(col("shs"))))))
+        .select(col("doc_id"), col("sz"), col("pos"), col("col").as("sh"))
     } else {
       val postings = sets.select(col("doc_id"),
         size(col("shs")).as("sz"), explode(col("shs")).as("sh"))
@@ -259,23 +212,18 @@ object DedupVariants {
       postings.join(dfDim, Seq("sh"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= prefixLen(col("sz")))
-        .select(col("doc_id"), col("sz"), col("sh"))
+        .select(col("doc_id"), col("sz"), (col("rn") - 1).as("pos"), col("sh"))
     }).repartition(nPart, col("sh"))
-    // No distinct here: hash-order prefixes rarely share >1 shingle per
-    // pair (measured dup factor 1.04 at sf0.1), so verifying duplicates
-    // is cheaper than a full pre-verify shuffle; survivors are deduped at
-    // the end where only ~|result| rows remain. The shuffle_hash hint
-    // stops AQE from demoting the self-join to broadcast (whose build
-    // side would re-run the shingle chain behind its own exchange) —
-    // with both sides on the SAME pinned exchange, the probe side is a
-    // ReusedExchange and the scan→shingle→prefix chain runs once.
-    val cand = prefix.select(col("sh"), col("doc_id").as("id_a"), col("sz").as("sz_a"))
-      .join(prefix.select(col("sh"), col("doc_id").as("id_b"), col("sz").as("sz_b"))
-          .hint("shuffle_hash"),
-        Seq("sh"))
+    // Both join sides hang off the one shingle-keyed exchange above
+    // (ReusedExchange); the shuffle_hash hint stops AQE from demoting
+    // the self-join to a broadcast whose build side would re-run the
+    // prefix chain behind its own exchange.
+    def side(s: String) = prefix.select(col("sh"), col("doc_id").as(s"id_$s"),
+      col("sz").as(s"sz_$s"), col("pos").as(s"pos_$s"))
+    val reachable = least(col("sz_a") - col("pos_a"), col("sz_b") - col("pos_b"))
+    val cand = side("a").join(side("b").hint("shuffle_hash"), Seq("sh"))
       .filter(col("id_a") < col("id_b") &&
-        col("sz_b") * lit(1.0) >= col("sz_a") * lit(tau) &&
-        col("sz_a") * lit(1.0) >= col("sz_b") * lit(tau))
+        Dedup.jaccard(reachable, col("sz_a"), col("sz_b")) >= tau)
       .select("id_a", "id_b")
     (cand, sets)
   }
@@ -544,8 +492,8 @@ object DedupVariants {
   )
 
   // range(1, n-2+1) — full trigrams only; docs under 3 words yield an
-  // empty list, matching Dedup.shingles' greatest(n-2, 0) slice bound
-  // (range(1, x) is empty for x < 1 in DuckDB).
+  // empty list, as shingle_set gives the empty set (range(1, x) is
+  // empty for x < 1 in DuckDB).
   private[llm] val shingleSql =
     "list_transform(range(1, len(string_split(text, ' ')) - 1), " +
       "i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] " +

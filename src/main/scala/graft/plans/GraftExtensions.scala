@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import graft.functions.{CosineSimilarity, MinHashAgg, SelfCosine, SlidingWindows, SortedIntersectCount}
+import graft.functions.{CosineSimilarity, MinHashAgg, SelfCosine, ShingleSet, SlidingWindows, SortedIntersectCount}
 
 /** Catalyst optimizer rule: `cosine_sim(x, x)` → `SelfCosine(x)` for
   * deterministic x — a single-pass kernel that drops the dot product and
@@ -57,7 +57,8 @@ object GraftExtensions {
     ("sliding_windows", classOf[SlidingWindows],
       a => SlidingWindows(a(0), a(1), a(2))),
     ("sorted_intersect_count", classOf[SortedIntersectCount],
-      a => SortedIntersectCount(a(0), a(1))))
+      a => SortedIntersectCount(a(0), a(1))),
+    ("shingle_set", classOf[ShingleSet], a => ShingleSet(a(0))))
 
   /** Optimizer rules, in the order the Pre-CBO batch runs them. */
   val rules: Seq[Rule[LogicalPlan]] = Seq(

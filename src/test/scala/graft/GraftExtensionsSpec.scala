@@ -11,9 +11,9 @@ import graft.sources.RewriteGvtDml
 
 /** A session built ONLY through `withExtensions(new GraftExtensions)` —
   * what a cluster user gets from `spark.sql.extensions`, no
-  * [[graft.Sessions]] call — plans every rewrite-gated key with the same
-  * graft rule or strategy and answers with the same rows as the shared
-  * test session.
+  * [[graft.Sessions]] call — resolves every graft SQL function, plans
+  * every rewrite-gated key with the same graft rule or strategy and
+  * answers with the same rows as the shared test session.
   */
 class GraftExtensionsSpec extends GraftSuite {
 
@@ -51,6 +51,19 @@ class GraftExtensionsSpec extends GraftSuite {
       val topk = SparkEntry.queries("plan_topk_rewrite")(ext, sf0001)
       assert(topk.queryExecution.executedPlan.toString.contains("TopKPerGroup"),
         "TopKStrategy must plan the collapsed window")
+    }
+  }
+
+  test("an extension-only session resolves graft's five SQL functions") {
+    assert(GraftExtensions.functions.map(_._1) == Seq("cosine_sim", "minhash_agg",
+      "sliding_windows", "sorted_intersect_count", "shingle_set"))
+    withExtensionSession { ext =>
+      for ((name, _, _) <- GraftExtensions.functions)
+        assert(ext.catalog.functionExists(name), s"$name is not registered")
+      val r = ext.sql("SELECT shingle_set('one two three one two three'), " +
+        "xxhash64('one', 'two', 'three'), xxhash64('two', 'three', 'one'), " +
+        "xxhash64('three', 'one', 'two')").head()
+      assert(r.getSeq[Long](0) == Seq(r.getLong(1), r.getLong(2), r.getLong(3)).sorted)
     }
   }
 
