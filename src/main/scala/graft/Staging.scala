@@ -47,6 +47,17 @@ object Staging {
     p.toString
   }
 
+  /** Release the storage blocks of a `localCheckpoint`ed frame. Safe
+    * ONLY once no consumer will scan it again: its lineage is
+    * truncated, so a later scan fails, it does not recompute. No-op on
+    * frames that are not checkpoints. */
+  def freeCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
   /** Register an externally-created path (e.g. a warehouse table dir
     * staged under a per-JVM name) for the same exit-time deletion —
     * without this, pid-suffixed bucket tables would accumulate in the

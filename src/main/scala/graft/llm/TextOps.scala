@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staging, Tables}
 
 /** SURVEY.md §2.9 — text analysis over `documents`.
   *
@@ -189,8 +189,12 @@ object TextOps {
     * real scale the truncation checkpoints to reliable storage every
     * few rounds instead of executor memory, same shape). Per round:
     * one pair-count aggregate + TakeOrderedAndProject(1) + a map-side
-    * rewrite — no driver-side corpus state anywhere. */
+    * rewrite — no driver-side corpus state anywhere. The returned frame
+    * reads the last round's corpus checkpoint, which stays pinned until
+    * the next call frees it: at most one corpus per JVM, and a frame
+    * must be acted on before the next call. */
   def bpeTrainK(spark: SparkSession, dir: String): DataFrame = {
+    Option(lastBpeCorpus.getAndSet(null)).foreach(Staging.freeCheckpoint)
     val k = 8
     var docs = Tables.wide(spark, dir, "documents").select("doc_id", "text")
     // the PREVIOUS round's checkpointed corpus: released as soon as the
@@ -229,12 +233,13 @@ object TextOps {
       // round i's corpus (with all winners so far) is materialized —
       // round i−1's has no remaining consumer; free its blocks now
       // instead of holding k copies to the end of the action
-      corpus.foreach(freeCheckpoint)
+      corpus.foreach(Staging.freeCheckpoint)
       corpus = Some(rewritten)
       full = rewritten
       docs = rewritten.select("doc_id", "text")
     }
     val last = corpus.get
+    lastBpeCorpus.set(last)
     // rounds 1..k−1: every row of the last corpus carries the same
     // winner constants — limit(1) reads them back from one split of
     // the one live checkpoint, no re-aggregation, no extra pinning.
@@ -251,17 +256,10 @@ object TextOps {
     rounds.reduce(_.unionAll(_)).orderBy("iter")
   }
 
-  /** Release a localCheckpoint's storage blocks. Safe ONLY once every
-    * downstream consumer has been materialized (checkpoint lineage is
-    * truncated — a later scan of an unpersisted checkpoint fails, it
-    * does not recompute). No-op on non-checkpoint frames.
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  /** The last [[bpeTrainK]] call's final corpus checkpoint, which the
+    * frame it returned still reads; the next call frees it. */
+  private val lastBpeCorpus =
+    new java.util.concurrent.atomic.AtomicReference[DataFrame]()
 
   /** The 8-round chained-CTE restatement of [[bpeTrainK]], generated by
     * the same loop shape so round count and rewrite rule cannot drift. */

@@ -1220,6 +1220,25 @@ object Gvt {
     * alone. */
   private final case class Written(adds: Seq[GvtFile], dataSchema: String)
 
+  /** `df` coalesced to ONE partition when its Catalyst size estimate
+    * (`optimizedPlan.stats.sizeInBytes`; over table files, the
+    * manifest's own bytes through [[GvtFileIndex.sizeInBytes]]) is at
+    * most `spark.sql.files.openCostInBytes`, else None. Every step
+    * planned on top of one partition runs with no exchange: Spark's
+    * `SinglePartition` satisfies the clustered, all-tuples and ordered
+    * distributions that an aggregate, a `distinct` or a global sort
+    * asks for, so each is one job, with no range-partition sample and
+    * no AQE stage boundary. */
+  private def onePartition(df: DataFrame): Option[DataFrame] =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        df.sparkSession.sessionState.conf.filesOpenCostInBytes)
+      Some(df.coalesce(1))
+    else None
+
+  /** `df` on one partition when [[onePartition]] takes it, else as is. */
+  private def narrowed(df: DataFrame): DataFrame =
+    onePartition(df).getOrElse(df)
+
   /** Write `df` as a new commit directory and return its [[GvtFile]]
     * entries: one write job, then metadata. The driver lists the
     * directory and reads each part's footer. The first footer gives the
@@ -1232,13 +1251,16 @@ object Gvt {
     * commit directory and returns no adds; its schema is still pinned,
     * so an empty overwrite keeps its declared shape.
     *
-    * Data files are RANGE-CLUSTERED on `statsCols` by construction
-    * (repartitionByRange + sortWithinPartitions, AQE-coalesced to size):
-    * without this, any copy-on-write rewrite hash-scatters the touched
-    * rows and every new file spans the whole key range — measured at
-    * docs ×100 (DevGvtScale): after one uniformly-keyed merge, zone-map
-    * pruning degraded from 2-of-N files kept to 25-of-35. Clustering on
-    * the write path keeps the manifest's min/max tight through appends,
+    * Data files are CLUSTERED on `statsCols` by construction. A commit
+    * that [[onePartition]] takes is one partition sorted on them: one
+    * file and one job, no sample. A larger one is range-partitioned on
+    * them and sorted within each partition (AQE-coalesced to size): a
+    * sampling job, then the exchange and the write. Without clustering,
+    * any copy-on-write rewrite hash-scatters the touched rows and every
+    * new file spans the whole key range — measured at docs ×100
+    * (DevGvtScale): after one uniformly-keyed merge, zone-map pruning
+    * degraded from 2-of-N files kept to 25-of-35. Clustering on the
+    * write path keeps the manifest's min/max tight through appends,
     * merges, and deletes alike; the extra exchange is bounded by the
     * commit's own data, never the table. */
   private def writeData(spark: SparkSession, dir: String, df: DataFrame,
@@ -1246,10 +1268,11 @@ object Gvt {
       cluster: Boolean = true): Written = {
     val sub = f"data/c$version%d-${UUID.randomUUID().toString.take(8)}"
     val cdir = s"$dir/$sub"
+    val by = statsCols.map(col)
     val shaped =
       if (cluster && statsCols.nonEmpty)
-        df.repartitionByRange(statsCols.map(col): _*)
-          .sortWithinPartitions(statsCols.map(col): _*)
+        onePartition(df).getOrElse(df.repartitionByRange(by: _*))
+          .sortWithinPartitions(by: _*)
       else df
     shaped.write.parquet(cdir)
     val conf = spark.sessionState.newHadoopConf()
@@ -1660,8 +1683,11 @@ object Gvt {
     * for them), then one action: an exact column-pruned probe that
     * scans ONLY the key column of surviving candidates, semi-joins with
     * the source keys and collects the distinct FILE NAMES that hit (a
-    * file-count-bounded metadata collect, never data). No candidate, no
-    * action. */
+    * file-count-bounded metadata collect, never data). Candidates whose
+    * manifest bytes [[onePartition]] takes are probed in one partition,
+    * so the `distinct` needs no exchange: the probe is one job, plus the
+    * broadcast of `srcKeys` when the planner broadcasts it. No
+    * candidate, no action. */
   private def filesContaining(spark: SparkSession, dir: String,
       files: Seq[GvtFile], pin: Option[StructType], srcKeys: DataFrame,
       key: String, bounds: (String, String)): Seq[GvtFile] = {
@@ -1693,8 +1719,8 @@ object Gvt {
         // DV-aware probe: a key whose only occurrences are DV-deleted
         // must not drag its file into the rewrite. Still column-pruned —
         // the scan reads the key column plus constant-cost metadata.
-        val probe = readFilesWithId(spark, dir, candidates,
-          schemaFor(spark, dir, candidates, pin))
+        val probe = narrowed(readFilesWithId(spark, dir, candidates,
+          schemaFor(spark, dir, candidates, pin)))
           .select(col(key), col("_gvt_file"))
         probe.join(srcKeys, Seq(key), "left_semi")
           .select("_gvt_file").distinct().collect()
@@ -1746,7 +1772,11 @@ object Gvt {
     * multiplicity (`max(_gvt_n)`) and its key bounds for step 1; an
     * empty source lands no version, and the lookup that names a
     * duplicate key runs only when there is one. So a merge is that
-    * aggregate, the probe and one [[writeData]]. Aborts (throws) on
+    * aggregate, the probe and one [[writeData]]. A source that
+    * [[onePartition]] takes is counted in one partition: the per-key
+    * counts and the summary over them are one job with no exchange,
+    * and the cached counts keep that single partition for the probe's
+    * semi-join and the rewrite's anti-join. Aborts (throws) on
     * concurrent commit — the read set is stale. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       key: String, statsCols: Seq[String],
@@ -1771,7 +1801,7 @@ object Gvt {
     // aggregate here plus the semi-join inside filesContaining and the
     // rewrite's anti-join — without the persist the source lineage
     // re-aggregates once per action (r13 review).
-    val keyCounts = source1.groupBy(col(key))
+    val keyCounts = narrowed(source1).groupBy(col(key))
       .agg(count(lit(1)).as("_gvt_n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1857,20 +1887,30 @@ object Gvt {
     v
   }
 
+  /** The paths of `files` holding a live row that matches `predicate`
+    * (logical names): a column-pruned probe over the predicate's columns
+    * that collects the distinct file names (a file-count-bounded
+    * metadata collect). Files whose manifest bytes [[onePartition]]
+    * takes are probed in one partition: one job, no exchange. */
+  private def touchedPaths(spark: SparkSession, dir: String,
+      files: Seq[GvtFile], state: GvtSchemaState, pin: Option[StructType],
+      predicate: Column): Set[String] =
+    applyMapping(narrowed(readFilesWithId(spark, dir, files,
+      schemaFor(spark, dir, files, pin))), state)
+      .filter(predicate)
+      .select("_gvt_file").distinct()
+      .collect().map(r => r.getString(0)).toSet
+
   /** DELETE rows matching `predicate`; rewrites only files that contain
-    * at least one matching row (found by a column-pruned probe over the
-    * predicate's columns). Aborts on concurrent commit. */
+    * at least one matching row (found by [[touchedPaths]]' probe).
+    * Aborts on concurrent commit. */
   def delete(spark: SparkSession, dir: String, predicate: Column,
       statsCols: Seq[String], txn: String = null): Int = rmwRetry(spark) {
     val base = latestVersion(dir)
     val (files, state, pin) = resolveManifest(dir, Some(base))
     // the predicate speaks LOGICAL names; the row-identity metadata
     // columns pass through applyMapping untouched
-    val touched: Set[String] = applyMapping(readFilesWithId(spark, dir,
-      files, schemaFor(spark, dir, files, pin)), state)
-      .filter(predicate)
-      .select("_gvt_file").distinct()
-      .collect().map(r => r.getString(0)).toSet
+    val touched = touchedPaths(spark, dir, files, state, pin, predicate)
     if (touched.isEmpty) return base // no-op: nothing matched
     val touchedFiles = files.filter(f => touched.contains(f.path))
     // SQL DELETE semantics: remove rows where the predicate is TRUE;
@@ -1908,11 +1948,7 @@ object Gvt {
     require(assignments.nonEmpty, "updateWhere needs at least one SET")
     val base = latestVersion(dir)
     val (files, state, pin) = resolveManifest(dir, Some(base))
-    val touched: Set[String] = applyMapping(readFilesWithId(spark, dir,
-      files, schemaFor(spark, dir, files, pin)), state)
-      .filter(predicate)
-      .select("_gvt_file").distinct()
-      .collect().map(r => r.getString(0)).toSet
+    val touched = touchedPaths(spark, dir, files, state, pin, predicate)
     if (touched.isEmpty) return base // no-op: nothing matched
     val touchedFiles = files.filter(f => touched.contains(f.path))
     val touchedDf = applyMapping(readFiles(spark, dir, touchedFiles,
@@ -1959,7 +1995,17 @@ object Gvt {
     * every rewrite (merge / CoW delete / [[compact]] /
     * [[absorbDeletes]]) absorbs the vectors of the files it replaces.
     * Existing vectors are applied BEFORE matching, so a vector never
-    * double-counts a row and `dvRows` stays exact. Aborts on concurrent
+    * double-counts a row and `dvRows` stays exact.
+    *
+    * The match is evaluated ONCE, into a local checkpoint: each touched
+    * file's `dvRows` increment is counted from that checkpoint and the
+    * sidecar is written from it, so the counts are the rows the sidecar
+    * holds even under a non-deterministic predicate (the checkpoint's
+    * lineage is truncated: a lost block fails the call, it never
+    * re-evaluates). A delete matching nothing writes no sidecar. Files
+    * whose manifest bytes [[onePartition]] takes are matched in one
+    * partition, so the count and the globally sorted write are one job
+    * each, with no exchange and no range sample. Aborts on concurrent
     * commit (read-modify-write, same as merge/delete). */
   def deleteWhereDV(spark: SparkSession, dir: String, predicate: Column,
       txn: String = null): Int = rmwRetry(spark) {
@@ -1974,24 +2020,26 @@ object Gvt {
     val v = base + 1
     // predicate on logical names; the sidecar stores (file, pos) only,
     // so the mapping never touches what gets written
-    val matches = applyMapping(readFilesWithId(spark, dir,
-      files, schemaFor(spark, dir, files, pin)), state)
+    val matches = applyMapping(narrowed(readFilesWithId(spark, dir,
+      files, schemaFor(spark, dir, files, pin))), state)
       .filter(predicate)
       .select(col("_gvt_file"), col("_gvt_pos"))
+      .localCheckpoint(eager = false)
     val sub = f"data/dv$v%d-${UUID.randomUUID().toString.take(8)}"
-    // GLOBAL sort by (file, pos): range partitioning gives each sidecar
-    // part a tight contiguous _gvt_file span, so the connector's
-    // per-task DV fetch ([[GvtDvFetch]]) skips row groups by min/max
-    // stats instead of scanning the whole sidecar — the layout that
-    // makes file-sliced access O(that file's positions) at any DV size
-    matches.orderBy("_gvt_file", "_gvt_pos").write.parquet(s"$dir/$sub")
-    val perFile = readDv(spark, dir, Seq(sub)).groupBy("_gvt_file")
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (perFile.isEmpty) { // no-op: nothing matched; drop the sidecar
-      deleteRecursively(Paths.get(dir, sub))
-      return base
-    }
+    val perFile = try {
+      val counts = matches.groupBy("_gvt_file")
+        .agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // GLOBAL sort by (file, pos): each sidecar part gets a tight
+      // contiguous _gvt_file span, so the connector's per-task DV fetch
+      // ([[GvtDvFetch]]) skips row groups by min/max stats instead of
+      // scanning the whole sidecar — the layout that makes file-sliced
+      // access O(that file's positions) at any DV size
+      if (counts.nonEmpty)
+        matches.orderBy("_gvt_file", "_gvt_pos").write.parquet(s"$dir/$sub")
+      counts
+    } finally graft.Staging.freeCheckpoint(matches)
+    if (perFile.isEmpty) return base // no-op: nothing matched, no sidecar
     val touched = files.filter(f => perFile.contains(f.path))
     val adds = touched.map(f =>
       f.copy(dv = dvOf(f) :+ sub, dvRows = f.dvRows + perFile(f.path)))
@@ -2087,11 +2135,15 @@ object Gvt {
     val smallDf = state.drops.foldLeft(readFiles(spark, dir, small,
       schemaFor(spark, dir, small, pin)))(_.drop(_))
     // explicit file-count control, range-clustered when stats exist so
-    // compaction REPAIRS zone-map locality rather than destroying it
+    // compaction REPAIRS zone-map locality rather than destroying it;
+    // one range partition is all rows sorted, so one target file is one
+    // sorted partition with no exchange and no sample
+    val by = statsP.map(col)
     val packed =
-      if (statsP.nonEmpty)
-        smallDf.repartitionByRange(targetFiles, statsP.map(col): _*)
-          .sortWithinPartitions(statsP.map(col): _*)
+      if (targetFiles == 1) smallDf.coalesce(1).sortWithinPartitions(by: _*)
+      else if (statsP.nonEmpty)
+        smallDf.repartitionByRange(targetFiles, by: _*)
+          .sortWithinPartitions(by: _*)
       else smallDf.repartition(targetFiles)
     val v = base + 1
     val w = writeData(spark, dir, packed, statsP, v, cluster = false)

@@ -972,7 +972,8 @@ class GvtSpec extends GraftSuite {
     dir
   }
 
-  test("jobs per call: append ≤3, compact ≤3, update ≤5, merge ≤11") {
+  test("jobs per call: append ≤1, update ≤2, merge ≤6, delete_dv ≤2, " +
+      "compact ≤2") {
     val dir = commitMixTable()
     val append = jobsDuring(Gvt.append(spark, dir, slab(6000, 9000), Seq("k")))
     // the source replaces keys [8500, 9000) and inserts [9000, 9500)
@@ -980,19 +981,79 @@ class GvtSpec extends GraftSuite {
       slab(8500, 9500).withColumn("v", col("v") + 1), "k", Seq("k")))
     val update = jobsDuring(Gvt.updateWhere(spark, dir,
       col("k").between(100, 900), Seq("v" -> (col("v") - 1)), Seq("k")))
+    val deleteDv = jobsDuring(Gvt.deleteWhereDV(spark, dir,
+      col("k").between(2000, 2099)))
     val compact = jobsDuring(Gvt.compact(spark, dir, Long.MaxValue, 1, Seq("k")))
-    assert(Gvt.latestVersion(dir) == 5, "every call must land a version")
-    assert(append <= 3, s"append ran $append jobs")
-    assert(merge <= 11, s"merge ran $merge jobs")
-    assert(update <= 5, s"update ran $update jobs")
-    assert(compact <= 3, s"compact ran $compact jobs")
-    val want = (0L until 9500L).map { k =>
+    assert(Gvt.latestVersion(dir) == 6, "every call must land a version")
+    assert(append <= 1, s"append ran $append jobs")
+    assert(merge <= 6, s"merge ran $merge jobs")
+    assert(update <= 2, s"update ran $update jobs")
+    assert(deleteDv <= 2, s"deleteWhereDV ran $deleteDv jobs")
+    assert(compact <= 2, s"compact ran $compact jobs")
+    val want = (0L until 9500L).filterNot(k => k >= 2000L && k < 2100L).map { k =>
       val merged = if (k >= 8500L) 1L else 0L
       val updated = if (k >= 100L && k <= 900L) -1L else 0L
       (k, k * 10 + merged + updated)
     }
     assert(sortedRows(Gvt.read(spark, dir)) == want)
-    assert(Gvt.snapshot(dir).map(_.rows).sum == 9500L)
+    assert(Gvt.snapshot(dir).map(_.rows).sum == 9400L)
+  }
+
+  /** (rows, min, max) of the table's manifest as a whole, stats as longs. */
+  private def manifestSpan(dir: String, c: String): (Long, Long, Long) = {
+    val files = Gvt.snapshot(dir)
+    (files.map(_.rows).sum, files.map(_.min(c).toLong).min,
+      files.map(_.max(c).toLong).max)
+  }
+
+  test("a small commit written on one partition equals the range-" +
+      "partitioned write of the same input") {
+    val input = slab(0, 50000).withColumn("k", (col("k") * 7919) % 50000)
+    val small = freshDir()
+    Gvt.append(spark, small, input, Seq("k"))
+    // an open cost of 0 puts every commit above the bound
+    val ranged = freshDir()
+    spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    try Gvt.append(spark, ranged, input, Seq("k"))
+    finally spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert(Gvt.snapshot(small).size == 1)
+    assert(sortedRows(Gvt.read(spark, small)) ==
+      sortedRows(Gvt.read(spark, ranged)))
+    assert(manifestSpan(small, "k") == manifestSpan(ranged, "k"))
+    assert(manifestSpan(small, "k") == (50000L, 0L, 49999L))
+  }
+
+  test("a commit above the bound keeps its range-clustered files") {
+    val dir = freshDir()
+    // 400,000 rows of two longs: a size estimate of about 9.6 MB, over
+    // the 4 MB open cost
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try Gvt.append(spark, dir,
+      slab(0, 400000).withColumn("k", (col("k") * 7919) % 400000), Seq("k"))
+    finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    val spans = Gvt.snapshot(dir).map(f => (f.min("k").toLong, f.max("k").toLong))
+      .sorted
+    assert(spans.size == spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      s"files: $spans")
+    spans.zip(spans.tail).foreach { case ((_, hi), (lo, _)) =>
+      assert(hi < lo, s"overlapping files: $spans") }
+    assert(Gvt.snapshot(dir).map(_.rows).sum == 400000L)
+  }
+
+  test("deleteWhereDV: dvRows are the rows its sidecar holds, under a " +
+      "non-deterministic predicate") {
+    val dir = commitMixTable()
+    spark.conf.set("spark.graft.gvt.dvAbsorbRatio", "2.0")
+    try Gvt.deleteWhereDV(spark, dir, rand() < 0.3)
+    finally spark.conf.unset("spark.graft.gvt.dvAbsorbRatio")
+    val files = Gvt.snapshot(dir)
+    val sidecars = files.flatMap(_.dv).distinct
+    assert(sidecars.size == 1)
+    val held = spark.read.parquet(s"$dir/${sidecars.head}")
+      .groupBy("_gvt_file").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(files.map(f => f.path -> f.dvRows).toMap == held)
+    assert(Gvt.read(spark, dir).count() == 6000L - held.values.sum)
   }
 
   test("merge: an empty source lands no version") {
@@ -1033,10 +1094,14 @@ class GvtSpec extends GraftSuite {
       Seq("k")) == 3)
     assert(Gvt.commitAt(dir, 3).adds.isEmpty)
     assert(Gvt.snapshot(dir).isEmpty)
-    // a DV delete matching nothing lands nothing and drops its sidecar
+    // a DV delete matching nothing lands nothing and writes no sidecar
     Gvt.append(spark, dir, slab(20, 30), Seq("k"))
     val withAppend = dataDirs
-    assert(Gvt.deleteWhereDV(spark, dir, col("k") > 100L) == 4)
+    // (one job: the match is counted, and nothing is written)
+    var noop = -1
+    assert(jobsDuring { noop = Gvt.deleteWhereDV(spark, dir, col("k") > 100L) }
+      == 1)
+    assert(noop == 4)
     assert(dataDirs == withAppend)
     assert(dataDirs.size == before.size + 1, s"$before → $dataDirs")
   }

@@ -347,16 +347,20 @@ class GvtStreamSpec extends GraftSuite {
     val dir = freshTable("gvtstream_rows")
     import spark.implicits._
     seed(dir, Seq((1L, "a", 1.0)))                            // v0: snapshot
-    // v1: ONE fat commit of 400 rows across many small files (AQE
-    // coalescing off so writeData's range clustering keeps the
+    // v1: ONE fat commit of 400 rows across many small files (an open
+    // cost of 0 puts the commit above writeData's one-partition bound,
+    // and AQE coalescing off keeps its range clustering's
     // shuffle-partition split; per-file counts come from the manifest,
     // which the pacing walk reads)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    spark.conf.set("spark.sql.files.openCostInBytes", "0")
     try Gvt.append(spark, dir,
       (100L until 500L).map(k => (k, "b", 1.0)).toDF("k", "grp", "v"),
       Seq("k"))
-    finally
+    finally {
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      spark.conf.unset("spark.sql.files.openCostInBytes")
+    }
     val perFile = Gvt.snapshot(dir).filter(_.path.contains("/c1-"))
       .map(_.rows)
     assert(perFile.size >= 3 && perFile.forall(_ <= 150),

@@ -76,4 +76,16 @@ class Round17OptSpec extends GraftSuite {
         .filter(_.numCachedPartitions > 0)
         .map(i => s"${i.id}:${i.memSize}B").mkString(", ")} (before=$before)")
   }
+
+  test("bpeTrainK: repeated calls pin no more RDDs than one call") {
+    val sc = spark.sparkContext
+    def pinned() = sc.getPersistentRDDs.keySet
+    llm.TextOps.bpeTrainK(spark, sf001).count()
+    val baseline = pinned()
+    llm.TextOps.bpeTrainK(spark, sf001).count()
+    llm.TextOps.bpeTrainK(spark, sf001).count()
+    // each call frees the previous call's corpus before pinning its own
+    assert(pinned().size <= baseline.size,
+      s"persistent RDDs ${pinned()} after two calls, baseline $baseline")
+  }
 }
