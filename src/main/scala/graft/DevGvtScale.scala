@@ -110,13 +110,22 @@ object DevGvtScale {
     }
 
     // ---- claim 3: manifest pruning vs full scan ----
-    val qlo = (lo + (hi - lo + 1) / 2).toDouble
-    val qhi = qlo + tileSpan / 2.0
+    // the range is the lower half of the middle file's own manifest
+    // [min, max], so it holds rows at every scale: the replicas shift
+    // doc_id by 10^7 per copy, and a range from the doc_id span can fall
+    // into a gap between copies
+    val mid = {
+      val byMin = Gvt.snapshot(table).sortBy(_.min("doc_id").toLong)
+      byMin(byMin.size / 2)
+    }
+    val qlo = mid.min("doc_id").toDouble
+    val qhi = qlo + (mid.max("doc_id").toDouble - qlo) / 2
     val (pruned, kept, total) = Gvt.readPruned(spark, table, "doc_id", qlo, qhi)
-    println(s"[gvt-scale] prune kept $kept/$total files for half-tile range")
-    timed("pruned read (agg over kept files)") {
+    println(f"[gvt-scale] prune kept $kept/$total files for half-file range [$qlo%.0f, $qhi%.0f]")
+    val inRange = timed("pruned read (agg over kept files)") {
       pruned.agg(count(lit(1)), sum(length(col("text")))).head
     }
+    println(s"[gvt-scale] rows in range: ${inRange.getLong(0)}")
     timed("full-scan read (same filter, no manifest prune)") {
       Gvt.read(spark, table)
         .filter(col("doc_id") >= qlo && col("doc_id") <= qhi)
@@ -214,7 +223,7 @@ object DevGvtScale {
     Gvt.append(spark, factT, churn, Seq("o_orderkey"))
     timed(s"incremental refresh after $nChurn-row churn (0.1%)") {
       graft.sources.GvtOps.refreshSummary(spark, factT, viewT,
-        fromVersion = prevHead)
+        fromVersion = Some(prevHead))
     }
     timed("full recompute of the same summary (the cost IVM avoids)") {
       Gvt.read(spark, factT)

@@ -26,6 +26,15 @@ import org.apache.spark.sql.SparkSession
   *  - v2 bucketing on: join_storage_partitioned needs it, and setting it
   *    per-key would mean keys execute under configs they weren't
   *    validated with (advisor round-4 consistent-config note).
+  *  - `spark.hadoop.fs.file.impl` and
+  *    `spark.hadoop.fs.AbstractFileSystem.file.impl`: the `file` scheme
+  *    is [[GraftLocalFileSystem]] / [[GraftLocalFs]], Hadoop's local file
+  *    systems with an in-JVM `setPermission`. The stock ones fork a
+  *    `chmod` process for every directory and file a write, a Staging
+  *    layout, a GVT commit or a streaming checkpoint makes (the Hadoop
+  *    native library is not loaded), 4–5 ms each. Hadoop caches a file
+  *    system per scheme for the JVM, so the first session of a JVM
+  *    decides which class every later `file:` call gets.
   */
 object Sessions {
 
@@ -37,6 +46,8 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.sql.sources.v2.bucketing.enabled", "true")

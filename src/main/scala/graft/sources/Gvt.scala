@@ -13,13 +13,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
 import org.apache.parquet.io.api.Binary
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType, IntegerType, LongType, MapType, ShortType, StringType, StructType, TimestampType}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DateType, DecimalType, IntegerType, LongType, MapType, ShortType, StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Graft Versioned Table (GVT) — a minimal lakehouse table format:
@@ -1676,22 +1678,131 @@ object Gvt {
     None // unreachable
   }
 
-  /** Files of `files` that contain at least one key from `srcKeys`:
-    * manifest-range prune against the keys' `min(key)`/`max(key)` cast
-    * to string (`bounds`, null when every key is null — the caller's
-    * one aggregate over its keys computes them, so no action runs here
-    * for them), then one action: an exact column-pruned probe that
-    * scans ONLY the key column of surviving candidates, semi-joins with
-    * the source keys and collects the distinct FILE NAMES that hit (a
+  /** A merge's or key delete's source keys: their [[KeySummary]], one
+    * duplicated key with its count (looked up on demand), how a plan
+    * matches them, and what to release once the call is done. */
+  private final case class SourceKeys(dataType: DataType, summary: KeySummary,
+      dup: () => Option[Row], matcher: KeyMatch, release: () => Unit)
+
+  /** The distinct keys (a null key counts as one), the largest key
+    * multiplicity, and the non-null keys' `min`/`max` cast to string
+    * (null when there is none). */
+  private[graft] final case class KeySummary(keys: Long, maxN: Long,
+      lo: String, hi: String)
+
+  /** How a plan matches rows against a source's keys. */
+  private sealed trait KeyMatch {
+    /** The rows of `df` whose `key` is a source key. */
+    def semi(df: DataFrame, key: String): DataFrame
+    /** The rows of `df` whose `key` is no source key, null keys kept
+      * (`left_anti`), in `df`'s column order. */
+    def anti(df: DataFrame, key: String): DataFrame
+  }
+
+  /** Join against `keys`, a one-column DataFrame. */
+  private final case class JoinKeys(keys: DataFrame) extends KeyMatch {
+    private def on(key: String) = keys.toDF(key)
+    def semi(df: DataFrame, key: String): DataFrame =
+      df.join(on(key), Seq(key), "left_semi")
+    // the using-join puts the key first; restore df's order
+    def anti(df: DataFrame, key: String): DataFrame =
+      df.join(on(key), Seq(key), "left_anti").select(df.columns.map(col): _*)
+  }
+
+  /** An `InSet` filter over `set`, non-null keys in Catalyst's internal
+    * form of the key type: no join side, so no broadcast job. */
+  private final case class SetKeys(set: Set[Any]) extends KeyMatch {
+    private def in(key: String) = Bridge.column(InSet(Bridge.expression(col(key)), set))
+    def semi(df: DataFrame, key: String): DataFrame = df.filter(in(key))
+    def anti(df: DataFrame, key: String): DataFrame =
+      df.filter(col(key).isNull || !in(key))
+  }
+
+  /** Key types an `InSet` matches exactly as an equi-join does. Floating
+    * point keys stay on the join, which normalizes -0.0 and NaN; so do
+    * collated strings and nested types. */
+  private def setKeyType(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+        DateType | TimestampType | TimestampNTZType => true
+    case _: DecimalType => true
+    case s: StringType => s.collationId == StringType.collationId
+    case _ => false
+  }
+
+  /** [[KeySummary]] of per-key counts `(key, n)` collected as rows, with
+    * key type `dt`: the strings the aggregate `min(key).cast("string")`
+    * gives, from `PhysicalDataType.ordering` and Spark's own cast, as
+    * [[footerStats]] renders them. */
+  private[graft] def keySummary(spark: SparkSession, counts: Seq[Row],
+      dt: DataType): KeySummary = {
+    val keys = internalKeys(counts, dt)
+    val ord = PhysicalDataType.ordering(dt)
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    def render(v: Any): String = Cast(Literal(v, dt), StringType, tz).eval().toString
+    KeySummary(counts.size, counts.map(_.getLong(1)).maxOption.getOrElse(0L),
+      if (keys.isEmpty) null else render(keys.min(ord)),
+      if (keys.isEmpty) null else render(keys.max(ord)))
+  }
+
+  /** The non-null keys of per-key counts `(key, n)`, in Catalyst's
+    * internal form of key type `dt`. */
+  private def internalKeys(counts: Seq[Row], dt: DataType): Seq[Any] = {
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(dt)
+    counts.flatMap(r => Option(r.get(0))).map(toInternal)
+  }
+
+  /** The keys of `source` (logical `key`, physical `keyP` in the table).
+    * A source that [[onePartition]] takes, whose key has a
+    * [[setKeyType]] equal to the table's pinned key type, has its
+    * per-key counts collected in that one job: the driver derives the
+    * summary and matches by `InSet`. Any other source keeps its per-key
+    * counts persisted for the summary aggregate and the joins. */
+  private def sourceKeys(spark: SparkSession, source: DataFrame, key: String,
+      keyP: String, pin: Option[StructType]): SourceKeys = {
+    val dt = source.select(col(key)).schema.head.dataType
+    val small =
+      if (setKeyType(dt) && pin.exists(_.find(_.name == keyP).exists(_.dataType == dt)))
+        onePartition(source)
+      else None
+    small match {
+      case Some(one) =>
+        val counts = one.groupBy(col(key)).agg(count(lit(1))).collect().toSeq
+        SourceKeys(dt, keySummary(spark, counts, dt),
+          () => counts.find(_.getLong(1) > 1),
+          SetKeys(internalKeys(counts, dt).toSet), () => ())
+      case None =>
+        // the counts column is in the reserved _gvt_ namespace, so a key
+        // literally named "n" cannot collide. PERSISTED: the counts feed
+        // the summary aggregate, the probe's semi-join and the rewrite's
+        // anti-join; without it the source lineage runs once per action.
+        val keyCounts = narrowed(source).groupBy(col(key))
+          .agg(count(lit(1)).as("_gvt_n"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val release: () => Unit = () => keyCounts.unpersist(blocking = false)
+        try {
+          val r = keyCounts.agg(count(lit(1)), max(col("_gvt_n")),
+            min(col(key)).cast("string"), max(col(key)).cast("string")).head
+          SourceKeys(dt, KeySummary(r.getLong(0), r.getLong(1), r.getString(2), r.getString(3)),
+            () => keyCounts.filter(col("_gvt_n") > 1).limit(1).collect().headOption,
+            JoinKeys(keyCounts.select(col(key))), release)
+        } catch { case e: Throwable => release(); throw e }
+    }
+  }
+
+  /** Files of `files` that contain at least one of `keys` under the
+    * physical key `key`: manifest-range prune against the keys' summary
+    * bounds, then one action: an exact column-pruned probe that scans
+    * ONLY the key column of surviving candidates, matches it against the
+    * keys and collects the distinct FILE NAMES that hit (a
     * file-count-bounded metadata collect, never data). Candidates whose
     * manifest bytes [[onePartition]] takes are probed in one partition,
     * so the `distinct` needs no exchange: the probe is one job, plus the
-    * broadcast of `srcKeys` when the planner broadcasts it. No
-    * candidate, no action. */
+    * broadcast of the keys when they match by join and the planner
+    * broadcasts them. No candidate or no non-null key, no action. */
   private def filesContaining(spark: SparkSession, dir: String,
-      files: Seq[GvtFile], pin: Option[StructType], srcKeys: DataFrame,
-      key: String, bounds: (String, String)): Seq[GvtFile] = {
-    val (srcLo, srcHi) = bounds
+      files: Seq[GvtFile], pin: Option[StructType], keys: SourceKeys,
+      key: String): Seq[GvtFile] = {
+    val KeySummary(_, _, srcLo, srcHi) = keys.summary
     // the comparison kind follows the KEY'S DATA TYPE (r13 ADVICE):
     // ZKind.Num against a STRING key whose values parse as numbers
     // compares the lexicographic stat strings numerically — a file box
@@ -1701,16 +1812,15 @@ object Gvt {
     // stat), numerics as Double; temporal/other keys skip the manifest
     // prune entirely (the exact probe below is the correctness path —
     // this prune is only ever an optimization).
-    val kind: Option[Int] = {
-      import org.apache.spark.sql.types._
-      srcKeys.schema.find(_.name == key).map(_.dataType) match {
-        case Some(_: NumericType) => Some(ZKind.Num)
-        case Some(StringType) => Some(ZKind.Str)
-        case _ => None
-      }
+    val kind: Option[Int] = keys.dataType match {
+      case _: org.apache.spark.sql.types.NumericType => Some(ZKind.Num)
+      case StringType => Some(ZKind.Str)
+      case _ => None
     }
+    // a null key matches no row, so keys that are all null touch nothing
     val candidates =
-      if (srcLo == null || kind.isEmpty) files
+      if (srcLo == null) Nil
+      else if (kind.isEmpty) files
       else files.filter(f => zSurvives(f,
         Seq(ZBound(key, Some(srcLo), Some(srcHi), kind.get))))
     val touched: Set[String] =
@@ -1722,7 +1832,7 @@ object Gvt {
         val probe = narrowed(readFilesWithId(spark, dir, candidates,
           schemaFor(spark, dir, candidates, pin)))
           .select(col(key), col("_gvt_file"))
-        probe.join(srcKeys, Seq(key), "left_semi")
+        keys.matcher.semi(probe, key)
           .select("_gvt_file").distinct().collect()
           .map(r => r.getString(0)).toSet
       }
@@ -1769,14 +1879,14 @@ object Gvt {
     *      files; untouched files carry over by reference.
     * Before the probe, ONE aggregate over the persisted per-key counts
     * gives the source's emptiness (`count(*)`), its largest key
-    * multiplicity (`max(_gvt_n)`) and its key bounds for step 1; an
+    * multiplicity and its key bounds for step 1 ([[sourceKeys]]); an
     * empty source lands no version, and the lookup that names a
     * duplicate key runs only when there is one. So a merge is that
     * aggregate, the probe and one [[writeData]]. A source that
-    * [[onePartition]] takes is counted in one partition: the per-key
-    * counts and the summary over them are one job with no exchange,
-    * and the cached counts keep that single partition for the probe's
-    * semi-join and the rewrite's anti-join. Aborts (throws) on
+    * [[onePartition]] takes is counted in one partition and its counts
+    * collected in that job: the driver derives the summary, and the
+    * probe and the rewrite match the keys by `InSet` with no join side
+    * to broadcast, so the merge is three jobs. Aborts (throws) on
     * concurrent commit — the read set is stale. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       key: String, statsCols: Seq[String],
@@ -1789,38 +1899,23 @@ object Gvt {
     // them); the stats probe and the write run on physical names
     val source1 = enforceChecks(source, state)
     val keyP = state.physicalOf(key)
-    // UNIQUE-SOURCE-KEY contract: merge's rewrite (anti-join survivors
-    // ∪ ALL source rows) would INSERT duplicate-keyed source rows
-    // silently, so they refuse loudly. Deliberately STRICTER than SQL
-    // MERGE cardinality (which rejects only multiply-MATCHED target
-    // rows and allows duplicate unmatched keys): this op's contract is
-    // replace-matched-with-THE-source-row, which has no meaning for a
-    // duplicated key anywhere in the source. The count column uses the
-    // reserved _gvt_ namespace so a merge key literally named "n" cannot
-    // collide (r13 review). PERSISTED: keyCounts feeds the summary
-    // aggregate here plus the semi-join inside filesContaining and the
-    // rewrite's anti-join — without the persist the source lineage
-    // re-aggregates once per action (r13 review).
-    val keyCounts = narrowed(source1).groupBy(col(key))
-      .agg(count(lit(1)).as("_gvt_n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keys = sourceKeys(spark, source1, key, keyP, pin)
     try {
-      val summary = keyCounts.agg(count(lit(1)), max(col("_gvt_n")),
-        min(col(key)).cast("string"), max(col(key)).cast("string")).head
-      if (summary.getLong(0) == 0) return base // no-op: nothing to upsert
-      // the lookup that names a duplicate runs only when there is one
-      val dup =
-        if (summary.getLong(1) <= 1) Array.empty[org.apache.spark.sql.Row]
-        else keyCounts.filter(col("_gvt_n") > 1).limit(1).collect()
+      if (keys.summary.keys == 0) return base // no-op: nothing to upsert
+      // UNIQUE-SOURCE-KEY contract: merge's rewrite (anti-join survivors
+      // ∪ ALL source rows) would INSERT duplicate-keyed source rows
+      // silently, so they refuse loudly. Deliberately STRICTER than SQL
+      // MERGE cardinality (which rejects only multiply-MATCHED target
+      // rows and allows duplicate unmatched keys): this op's contract is
+      // replace-matched-with-THE-source-row, which has no meaning for a
+      // duplicated key anywhere in the source.
+      val dup = if (keys.summary.maxN <= 1) None else keys.dup()
       require(dup.isEmpty, s"GVT $dir: merge source has duplicate values " +
-        s"of key '$key' (e.g. ${dup.headOption.map(_.get(0)).orNull}, " +
-        s"×${dup.headOption.map(_.get(1)).orNull}) — the upsert key must " +
+        s"of key '$key' (e.g. ${dup.map(_.get(0)).orNull}, " +
+        s"×${dup.map(_.get(1)).orNull}) — the upsert key must " +
         "be unique in the source (stricter than SQL MERGE cardinality); " +
         "deduplicate the source first")
-      val srcKeys = keyCounts.select(col(key))
-      val touchedFiles = filesContaining(spark, dir, files, pin,
-        srcKeys.withColumnRenamed(key, keyP), keyP,
-        (summary.getString(2), summary.getString(3)))
+      val touchedFiles = filesContaining(spark, dir, files, pin, keys, keyP)
       val rewritten =
         if (touchedFiles.isEmpty) source1
         else {
@@ -1831,10 +1926,7 @@ object Gvt {
           // second-review finding)
           val touchedDf = applyMapping(readFiles(spark, dir, touchedFiles,
             schemaFor(spark, dir, touchedFiles, pin)), state)
-          // restore the file schema order (using-join puts the key first)
-          touchedDf.join(srcKeys, Seq(key), "left_anti")
-            .select(touchedDf.columns.map(col): _*)
-            .unionByName(source1)
+          keys.matcher.anti(touchedDf, key).unionByName(source1)
         }
       val v = base + 1
       val w = writeData(spark, dir, toPhysical(rewritten, state),
@@ -1845,46 +1937,39 @@ object Gvt {
         throw new java.util.ConcurrentModificationException(
           s"GVT $dir: version $v committed concurrently; merge read set stale")
       v
-    } finally keyCounts.unpersist(blocking = false)
+    } finally keys.release()
   }
 
   /** DELETE BY JOIN: remove every row whose `key` appears in `keys`
-    * (a DataFrame — no driver-side key materialization), rewriting only
-    * the files that actually contain a matched key via the same
-    * prune-then-probe path as [[merge]]. The delete-set can be computed
-    * by any Spark job (dedup losers, policy violations, GDPR erasure
-    * lists) and stays distributed end to end. */
+    * (a DataFrame — no driver-side key materialization beyond a small
+    * source's collected keys), rewriting only the files that actually
+    * contain a matched key via the same keys, prune and probe as
+    * [[merge]]. The delete-set can be computed by any Spark job (dedup
+    * losers, policy violations, GDPR erasure lists). */
   def deleteKeys(spark: SparkSession, dir: String, keys: DataFrame,
       key: String, statsCols: Seq[String],
       txn: String = null): Int = rmwRetry(spark) {
     val base = latestVersion(dir)
     val (files, state, pin) = resolveManifest(dir, Some(base))
-    // emptiness and key bounds in one aggregate, as merge takes them
-    val summary = keys.agg(count(lit(1)),
-      min(col(key)).cast("string"), max(col(key)).cast("string")).head
-    if (summary.getLong(0) == 0) return base
     val keyP = state.physicalOf(key)
-    val srcKeys = keys.select(col(key)).distinct()
-    val touchedFiles = filesContaining(spark, dir, files, pin,
-      srcKeys.withColumnRenamed(key, keyP), keyP,
-      (summary.getString(1), summary.getString(2)))
-    if (touchedFiles.isEmpty) return base
-    // rewrite read: the table's unified schema (see merge)
-    val touchedDf = applyMapping(readFiles(spark, dir, touchedFiles,
-      schemaFor(spark, dir, touchedFiles, pin)), state)
-    // using-join reorders the key column first; restore the file schema
-    // order so rewritten files stay column-order-stable
-    val kept = touchedDf.join(srcKeys, Seq(key), "left_anti")
-      .select(touchedDf.columns.map(col): _*)
-    val v = base + 1
-    val w = writeData(spark, dir, toPhysical(kept, state),
-      statsCols.map(state.physicalOf), v)
-    if (!tryPublish(dir,
-        GvtCommit(v, "delete", w.adds, touchedFiles.map(_.path),
-          txn = txn, dataSchema = w.dataSchema), spark))
-      throw new java.util.ConcurrentModificationException(
-        s"GVT $dir: version $v committed concurrently; delete read set stale")
-    v
+    val src = sourceKeys(spark, keys, key, keyP, pin)
+    try {
+      if (src.summary.keys == 0) return base
+      val touchedFiles = filesContaining(spark, dir, files, pin, src, keyP)
+      if (touchedFiles.isEmpty) return base
+      // rewrite read: the table's unified schema (see merge)
+      val touchedDf = applyMapping(readFiles(spark, dir, touchedFiles,
+        schemaFor(spark, dir, touchedFiles, pin)), state)
+      val v = base + 1
+      val w = writeData(spark, dir, toPhysical(src.matcher.anti(touchedDf, key), state),
+        statsCols.map(state.physicalOf), v)
+      if (!tryPublish(dir,
+          GvtCommit(v, "delete", w.adds, touchedFiles.map(_.path),
+            txn = txn, dataSchema = w.dataSchema), spark))
+        throw new java.util.ConcurrentModificationException(
+          s"GVT $dir: version $v committed concurrently; delete read set stale")
+      v
+    } finally src.release()
   }
 
   /** The paths of `files` holding a live row that matches `predicate`

@@ -637,25 +637,26 @@ object GvtOps {
     * yesterday's load" is a read, not an investigation. The oracle is
     * the DIRECT aggregate of the fact's final state: hash equality
     * proves feed-fold-into-versioned-summary ≡ recompute. */
-  /** Fold the fact's commits (0..head] into the summary GVT at
-    * `viewDir`, seeding the view with the fact's v0 state. Extracted so
-    * GvtSpec drives it on a synthetic history whose delete WIPES OUT an
-    * entire group — the dead-group removal path the fixture never hits. */
+  /** Fold the fact's commits into the summary GVT at `viewDir`.
+    * `fromVersion` None seeds the view with the fact's v0 state, then
+    * folds (0, head]; `Some(v)` resumes a view that already holds the
+    * fact at version v and folds only (v, head] — the caller tracks its
+    * own watermark (in production it would ride the view's commit txn).
+    * Extracted so GvtSpec drives it on a synthetic history whose delete
+    * WIPES OUT an entire group — the dead-group removal path the
+    * fixture never hits. */
   private[graft] def refreshSummary(spark: SparkSession, factDir: String,
-      viewDir: String, fromVersion: Int = 0): Unit = {
+      viewDir: String, fromVersion: Option[Int] = None): Unit = {
     val cents = round(col("o_totalprice") * 100, 0).cast("long")
     def stateOf(df: DataFrame): DataFrame = df
       .select(col("o_orderstatus"), lit(1L).as("w"), cents.as("c"))
       .groupBy("o_orderstatus")
       .agg(sum("w").as("n_orders"), sum("c").as("sum_cents"))
-    // fromVersion > 0 resumes an existing summary: fold only the fact
-    // commits in (fromVersion, head] — the caller tracks its own
-    // watermark (in production it would ride the view's commit txn)
-    if (fromVersion == 0)
+    if (fromVersion.isEmpty)
       Gvt.append(spark, viewDir, stateOf(Gvt.read(spark, factDir, Some(0))),
         Seq("o_orderstatus"))
     val head = Gvt.latestVersion(factDir)
-    (fromVersion until head).foreach { v =>
+    (fromVersion.getOrElse(0) until head).foreach { v =>
       val sign = when(col("change_type") === "insert", 1L).otherwise(-1L)
       val delta = Gvt.diff(spark, factDir, v, v + 1)
         .select(col("o_orderstatus"), sign.as("w"), (sign * cents).as("c"))

@@ -569,6 +569,27 @@ class GvtSpec extends GraftSuite {
     assert(v1.contains("B"), s"pre-wipe view state lost B: $v1")
   }
 
+  test("incremental summary resumed from version 0 folds only the later " +
+      "commits") {
+    import spark.implicits._
+    val fact = freshDir(); val view = freshDir()
+    def rows(status: String, keys: Range, price: Double): DataFrame =
+      keys.map(k => (k.toLong, status, price)).toDF(
+        "o_orderkey", "o_orderstatus", "o_totalprice")
+    Gvt.append(spark, fact, rows("A", 0 until 5, 10.0), Seq("o_orderkey"))
+    GvtOps.refreshSummary(spark, fact, view)
+    Gvt.append(spark, fact, rows("A", 5 until 7, 2.25)
+      .union(rows("B", 100 until 103, 7.5)), Seq("o_orderkey"))
+    GvtOps.refreshSummary(spark, fact, view, fromVersion = Some(0))
+    def summary(df: DataFrame) = df.select("o_orderstatus", "n_orders", "sum_cents")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val recompute = Gvt.read(spark, fact).groupBy("o_orderstatus")
+      .agg(count(lit(1)).as("n_orders"),
+        sum(round(col("o_totalprice") * 100, 0).cast("long")).as("sum_cents"))
+    assert(summary(Gvt.read(spark, view)) == summary(recompute))
+    assert(summary(Gvt.read(spark, view)) == Seq(("A", 7L, 5450L), ("B", 3L, 2250L)))
+  }
+
   test("timestamp time travel: strict ts order, exact resolution, edges") {
     val dir = freshDir()
     Gvt.append(spark, dir, slab(0, 10), Seq("k"))   // v0
@@ -972,7 +993,7 @@ class GvtSpec extends GraftSuite {
     dir
   }
 
-  test("jobs per call: append ≤1, update ≤2, merge ≤6, delete_dv ≤2, " +
+  test("jobs per call: append ≤1, update ≤2, merge ≤3, delete_dv ≤2, " +
       "compact ≤2") {
     val dir = commitMixTable()
     val append = jobsDuring(Gvt.append(spark, dir, slab(6000, 9000), Seq("k")))
@@ -986,7 +1007,7 @@ class GvtSpec extends GraftSuite {
     val compact = jobsDuring(Gvt.compact(spark, dir, Long.MaxValue, 1, Seq("k")))
     assert(Gvt.latestVersion(dir) == 6, "every call must land a version")
     assert(append <= 1, s"append ran $append jobs")
-    assert(merge <= 6, s"merge ran $merge jobs")
+    assert(merge <= 3, s"merge ran $merge jobs")
     assert(update <= 2, s"update ran $update jobs")
     assert(deleteDv <= 2, s"deleteWhereDV ran $deleteDv jobs")
     assert(compact <= 2, s"compact ran $compact jobs")
@@ -1075,6 +1096,126 @@ class GvtSpec extends GraftSuite {
       "must be unique in the source (stricter than SQL MERGE " +
       "cardinality); deduplicate the source first")
     assert(Gvt.latestVersion(dir) == head)
+  }
+
+  test("a small merge's driver summary equals the aggregate's strings " +
+      "for int, long, string and date keys") {
+    def check(label: String, keys: DataFrame): Unit = {
+      val counts = keys.groupBy(col("key")).agg(count(lit(1)).as("n"))
+      val want = counts.agg(count(lit(1)), max(col("n")),
+        min(col("key")).cast("string"), max(col("key")).cast("string")).head
+      val got = Gvt.keySummary(spark, counts.collect().toSeq,
+        keys.schema("key").dataType)
+      assert(got == Gvt.KeySummary(want.getLong(0), want.getLong(1),
+        want.getString(2), want.getString(3)), label)
+    }
+    val base = spark.range(-40, 60).select(
+      when(col("id") % 9 === 0, lit(null)).otherwise(col("id") * 37).as("x"))
+    check("int", base.select(col("x").cast("int").as("key")))
+    check("long", base.select((col("x") * 1000000007L).as("key")))
+    check("string", base.select(concat(lit("s"), col("x").cast("string")).as("key")))
+    check("date", base.select(date_add(lit("2024-02-29").cast("date"),
+      col("x").cast("int")).as("key")))
+    check("all null", base.filter(col("x").isNull).select(col("x").as("key")))
+    // a duplicated key sets the largest multiplicity
+    check("duplicates", base.union(base).select(col("x").as("key")))
+  }
+
+  /** A table of k in [0, 10), v = 10k, plus two rows whose key is null. */
+  private def nullKeyedTable(): String = {
+    val dir = freshDir()
+    Gvt.append(spark, dir, slab(0, 10).union(
+      spark.range(2).select(lit(null).cast("long").as("k"), (-col("id") - 1).as("v"))),
+      Seq("k"))
+    dir
+  }
+
+  private def nullableRows(df: DataFrame): Seq[(Option[Long], Long)] =
+    df.select("k", "v").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1)))
+      .toSeq.sorted
+
+  /** Runs `body` with every source above the one-partition bound. */
+  private def aboveBound[A](body: => A): A = {
+    spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    try body finally spark.conf.unset("spark.sql.files.openCostInBytes")
+  }
+
+  test("null keys in a merge's source and table end as the join leaves them") {
+    val source = slab(4, 6).withColumn("v", col("v") + 1).union(
+      spark.range(1).select(lit(null).cast("long").as("k"), lit(999L).as("v")))
+    // null-keyed table rows stay, the null-keyed source row is inserted,
+    // keys 4 and 5 are replaced
+    val want = Seq((None, -2L), (None, -1L), (None, 999L)) ++
+      (0L until 10L).map(k => (Some(k), if (k == 4 || k == 5) k * 10 + 1 else k * 10))
+    val small = nullKeyedTable()
+    Gvt.merge(spark, small, source, "k", Seq("k"))
+    val joined = nullKeyedTable()
+    aboveBound(Gvt.merge(spark, joined, source, "k", Seq("k")))
+    assert(nullableRows(Gvt.read(spark, small)) == want)
+    assert(nullableRows(Gvt.read(spark, joined)) == want)
+    // a delete by null-only keys deletes nothing and lands no version
+    val nulls = spark.range(1).select(lit(null).cast("long").as("k"))
+    assert(Gvt.deleteKeys(spark, small, nulls, "k", Seq("k")) == 1)
+    // deleteKeys by keys 0, 4 and null drops 0 and 4 only, on both paths
+    val keys = spark.range(3).select(
+      when(col("id") === 2, lit(null)).otherwise(col("id") * 4).cast("long").as("k"))
+    assert(Gvt.deleteKeys(spark, small, keys, "k", Seq("k")) == 2)
+    assert(aboveBound(Gvt.deleteKeys(spark, joined, keys, "k", Seq("k"))) == 2)
+    val left = want.filterNot(r => r._1.contains(0L) || r._1.contains(4L))
+    assert(nullableRows(Gvt.read(spark, small)) == left)
+    assert(nullableRows(Gvt.read(spark, joined)) == left)
+  }
+
+  /** The physical plans of the queries `body` runs on this thread. */
+  private def plansDuring(body: => Any): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // the listener runs on the listener bus; a marker query drains it
+      spark.range(1).collect()
+      val deadline = System.currentTimeMillis() + 30000
+      while (plans.size < 1 || !plans.asScala.last.contains("Range (0, 1")) {
+        assert(System.currentTimeMillis() < deadline, "listener bus stalled")
+        Thread.sleep(10)
+      }
+      plans.asScala.toSeq.init
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a small merge matches its keys by InSet; a source above the bound, " +
+      "or of another key type than the table's, keeps the join") {
+    def joins(plans: Seq[String]): Boolean =
+      plans.exists(p => p.contains("LeftSemi") || p.contains("LeftAnti"))
+    val source = slab(8500, 9500).withColumn("v", col("v") + 1)
+    val want = (0L until 9500L).map(k => (k, k * 10 + (if (k >= 8500L) 1L else 0L)))
+    val small = commitMixTable()
+    Gvt.append(spark, small, slab(6000, 9000), Seq("k"))
+    val smallPlans = plansDuring(Gvt.merge(spark, small, source, "k", Seq("k")))
+    assert(!joins(smallPlans), smallPlans.mkString("\n"))
+    assert(smallPlans.exists(_.contains("INSET")), smallPlans.mkString("\n"))
+    assert(sortedRows(Gvt.read(spark, small)) == want)
+
+    val large = commitMixTable()
+    Gvt.append(spark, large, slab(6000, 9000), Seq("k"))
+    val largePlans = plansDuring(aboveBound(Gvt.merge(spark, large, source, "k", Seq("k"))))
+    assert(joins(largePlans), largePlans.mkString("\n"))
+    assert(sortedRows(Gvt.read(spark, large)) == want)
+
+    // an int key against the table's long key: the join widens both sides
+    val widened = commitMixTable()
+    Gvt.append(spark, widened, slab(6000, 9000), Seq("k"))
+    val intPlans = plansDuring(Gvt.merge(spark, widened,
+      source.withColumn("k", col("k").cast("int")), "k", Seq("k")))
+    assert(joins(intPlans), intPlans.mkString("\n"))
+    assert(sortedRows(Gvt.read(spark, widened)) == want)
   }
 
   test("rewrites that end empty land no adds and leave no data dir") {
